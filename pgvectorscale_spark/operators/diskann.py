@@ -46,7 +46,7 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pgvectorscale_spark.functions.distance import (
@@ -56,8 +56,12 @@ from pgvectorscale_spark.functions.distance import (
     np_distance_pairwise,
     np_normalize,
 )
-from pgvectorscale_spark.operators.partitioning import proxy_partition_col
+from pgvectorscale_spark.operators.partitioning import (
+    proxy_partition_col,
+    spark_pmod_xxhash64,
+)
 from pgvectorscale_spark.operators.sbq import SbqQuantizer, train_quantizer
+from pgvectorscale_spark.operators.similarity import _nearest
 from pgvectorscale_spark.operators.vamana import VamanaGraph
 from pgvectorscale_spark.types import (
     DEFAULT_MAX_ALPHA,
@@ -119,6 +123,120 @@ def _node_cols() -> list[str]:
     return [c.strip().split(" ")[0] for c in _NODE_SCHEMA.split(",")]
 
 
+_FACTS_SCHEMA = "node_id long, _rid long, dims long, lo long, hi long"
+
+
+def _batch_facts(pdf: pd.DataFrame) -> pd.DataFrame:
+    """What the driver checks and dedupes a prepared insert batch
+    (node_id, _rid, vector, labels) by, without its vectors: each row's
+    vector length (-1 for a NULL vector) and its sorted label set's
+    bounds."""
+    labs = pdf["labels"].to_numpy()
+    return pd.DataFrame(
+        {
+            "node_id": pdf["node_id"].to_numpy(dtype=np.int64),
+            "_rid": pdf["_rid"].to_numpy(dtype=np.int64),
+            "dims": [-1 if v is None else len(v) for v in pdf["vector"]],
+            "lo": [l[0] if l is not None and len(l) else None for l in labs],
+            "hi": [l[-1] if l is not None and len(l) else None for l in labs],
+        }
+    )
+
+
+def _scan_batch(facts: pd.DataFrame, dims: int) -> tuple[list[int], pd.DataFrame]:
+    """Check an insert batch by its ``_batch_facts`` and split it: (ids
+    arriving with a NULL vector, the (node_id, _rid) of each id's first row
+    with a vector, in batch order). Raises before anything is written — a
+    mismatched vector would otherwise die deep in the executor as an opaque
+    np.stack ragged-array error, and labels are smallint in the reference
+    (labels/mod.rs), so out-of-range values must fail loudly, not silently
+    cast to NULL (filtering_tests.rs test_label_size_bounds)."""
+    facts = facts.sort_values("_rid", kind="stable")
+    has = facts["dims"].to_numpy() >= 0
+    null_ids = facts["node_id"][~has].tolist()
+    f = facts[has]
+    if len(f) and (f["dims"].min() != dims or f["dims"].max() != dims):
+        raise ValueError(
+            f"insert vectors have {f['dims'].min()}..{f['dims'].max()} dimensions; "
+            f"index expects {dims}"
+        )
+    lo, hi = f["lo"].dropna(), f["hi"].dropna()
+    if len(hi) and (hi.max() > 32767 or lo.min() < -32768):
+        raise ValueError(
+            f"label out of smallint range [-32768, 32767]: {int(lo.min())}..{int(hi.max())}"
+        )
+    return null_ids, f.drop_duplicates("node_id")[["node_id", "_rid"]]
+
+
+def _route(pdf: pd.DataFrame, keep: np.ndarray, num_shards: int, route) -> pd.DataFrame:
+    """The rows of a prepared insert batch chunk whose ``_rid`` is in
+    ``keep`` (sorted), with their shard. Mirrors the build's assignment:
+    hash shards from the id, or (``route`` = (ascending shard ids,
+    centroids, distance type, upsert pins)) the build's kernel
+    (similarity._nearest: same float64 fold, same ties), an upsert staying
+    in the shard that already stores its id — re-routing a moved vector to
+    its new nearest cell would leave a duplicate node_id behind in the old
+    shard. Runs on the driver or on an executor alike."""
+    pdf = pdf[np.isin(pdf["_rid"].to_numpy(), keep)].reset_index(drop=True)
+    ids = pdf["node_id"].to_numpy(dtype=np.int64)
+    if route is None:
+        shard = spark_pmod_xxhash64(ids, num_shards)
+    elif not len(pdf):
+        shard = ids
+    else:
+        sids, cents, distance_type, pins = route
+        mat = np.stack(pdf["vector"].to_numpy()).astype(np.float64)
+        near = _nearest(mat, sids, cents, distance_type)[0]
+        pinned = pd.Series(ids).map(pins).fillna(-1).to_numpy(dtype=np.int64)
+        shard = np.where(pinned >= 0, pinned, near)
+    return pdf.assign(shard=shard.astype(np.int32))
+
+
+_STATS_SCHEMA = "shard int, ids array<long>, vsum array<double>, labels array<long>"
+
+
+def _shard_stats(rows: pd.DataFrame) -> pd.DataFrame:
+    """One row per shard of a (node_id, shard[, vector][, labels]) frame:
+    the ids it holds there, the float64 sum of their vectors and their
+    distinct labels (None where the frame lacks the column)."""
+    out = []
+    vec = rows["vector"].to_numpy() if "vector" in rows else None
+    labs = rows["labels"].to_numpy() if "labels" in rows else None
+    for sh, at in rows.groupby("shard").indices.items():
+        out.append(
+            (
+                int(sh),
+                rows["node_id"].to_numpy(dtype=np.int64)[at],
+                None if vec is None else np.stack(vec[at]).astype(np.float64).sum(axis=0),
+                None if labs is None else sorted(
+                    {int(l) for ls in labs[at] if ls is not None for l in ls}
+                ),
+            )
+        )
+    return pd.DataFrame(out, columns=["shard", "ids", "vsum", "labels"])
+
+
+def _sum_stats(stats: pd.DataFrame) -> dict[int, list]:
+    """``_shard_stats`` rows (from several tasks) merged per shard into
+    [ids, vector sum, label set]."""
+    out: dict[int, list] = {}
+    for sh, ids, vsum, labels in stats[["shard", "ids", "vsum", "labels"]].values:
+        acc = out.setdefault(int(sh), [[], 0.0, set()])
+        acc[0] += [int(i) for i in ids]
+        acc[1] = acc[1] + (0.0 if vsum is None else np.asarray(vsum, dtype=np.float64))
+        acc[2].update(int(l) for l in (labels if labels is not None else ()))
+    return out
+
+
+def _new_node_rows(routed: pd.DataFrame) -> pd.DataFrame:
+    """Routed batch rows as node rows awaiting their graph insert."""
+    labels = [None if x is None else np.asarray(x, dtype=np.int16) for x in routed["labels"]]
+    return routed.assign(
+        labels=labels, bq_code=None, neighbors=None, is_default_start=None,
+        start_labels=None, deleted=False,
+    )[_node_cols()]
+
+
 def _shard_col(id_col, num_shards: int):
     # hash the canonical long form: xxhash64 is type-sensitive in Spark
     # (xxhash64(1 as int) != xxhash64(1 as bigint)), and node_id is stored
@@ -150,6 +268,21 @@ def _validate_label_bounds(src: DataFrame, label_col: str) -> None:
         raise ValueError(
             f"label out of smallint range [-32768, 32767]: {bounds['lo']}..{bounds['hi']}"
         )
+
+
+def _label_set(label_col: str | None):
+    """A row's label set as a sorted array<long>: NULL labels / NULL
+    elements → empty set (labels/mod.rs:188-204); no label column → NULL."""
+    if label_col is None:
+        return F.lit(None).cast("array<long>")
+    labels = F.coalesce(F.col(label_col).cast("array<long>"), F.array().cast("array<long>"))
+    return F.array_sort(F.array_distinct(F.filter(labels, lambda x: x.isNotNull())))
+
+
+def _label_pairs(nodes: DataFrame) -> set[tuple[int, int]]:
+    """Distinct (shard, label) pairs of a node frame."""
+    rows = nodes.select("shard", F.explode("labels").alias("label")).distinct().collect()
+    return {(int(r["shard"]), int(r["label"])) for r in rows}
 
 
 def _to_frozenset(x) -> frozenset | None:
@@ -797,7 +930,8 @@ def _probe_shard_block(
         return [], [], []
     if stats is not None and hot:
         stats.cache_hits += 1
-    d_index = md["num_dimensions_to_index"]
+    # same fallback as _graph_from_pdf, whose quantize_fn the walk uses
+    d_index = md["num_dimensions_to_index"] or md["num_dimensions"]
     # batch quantization (round 15, guide §4.2): the query block's SBQ codes
     # depend only on the queries and the index-level quantizer, so ONE
     # quantize_matrix call per shard block replaces a per-(query, shard)
@@ -1019,20 +1153,7 @@ class DiskannIndex:
             _shard_col(id_col, num_shards).alias("shard"),
             vec.cast("array<float>").alias("vector"),
         ]
-        if label_col is not None:
-            # NULL labels / NULL elements → empty set (labels/mod.rs:188-204)
-            sel.append(
-                F.array_sort(
-                    F.array_distinct(
-                        F.filter(
-                            F.coalesce(F.col(label_col), F.array().cast("array<smallint>")),
-                            lambda x: x.isNotNull(),
-                        )
-                    )
-                ).cast("array<smallint>").alias("labels")
-            )
-        else:
-            sel.append(F.lit(None).cast("array<smallint>").alias("labels"))
+        sel.append(_label_set(label_col).cast("array<smallint>").alias("labels"))
         base = src.select(*sel)
 
         # build phases surface in the Spark UI like the reference's
@@ -1218,9 +1339,9 @@ class DiskannIndex:
             from pgvectorscale_spark.operators import routing_store
 
             routing_store.write_base(
-                spark.read.parquet(os.path.join(path, dest_rel)).select(
-                    "node_id", "shard"
-                ),
+                spark.read.schema(_NODE_SCHEMA)
+                .parquet(os.path.join(path, dest_rel))
+                .select("node_id", "shard"),
                 path,
                 meta,
                 "shard",
@@ -1281,9 +1402,9 @@ class DiskannIndex:
         cols = _node_cols()
         dirs = snapshot_base_dirs(self.path, self.meta, "shard")
         if len(dirs) == 1 and dirs[0][1] is None:
-            return self.spark.read.parquet(dirs[0][0])
+            return self._read_nodes(dirs[0][0])
         frames = [
-            self.spark.read.parquet(d).select(cols).filter(F.col("shard").isin(ss))
+            self._read_nodes(d).select(cols).filter(F.col("shard").isin(ss))
             for d, ss in dirs
         ]
         if not frames:
@@ -1305,11 +1426,16 @@ class DiskannIndex:
             if _shard_dir_missing(d):
                 continue  # crash-cleaned generation
             u = u.unionByName(
-                self.spark.read.parquet(d).select(*base.drop("_seq").columns).withColumn(
+                self._read_nodes(d).select(*base.drop("_seq").columns).withColumn(
                     "_seq", F.lit(k)
                 )
             )
         return u
+
+    def _read_nodes(self, d: str) -> DataFrame:
+        """A node dir (base, delta generation or fold gen) read with its
+        known schema: no per-dir schema-inference job."""
+        return self.spark.read.schema(_NODE_SCHEMA).parquet(d)
 
     def nodes(self, shards: "Sequence[int] | None" = None) -> DataFrame:
         """Current node table: the base partitions merged with the committed
@@ -1364,6 +1490,47 @@ class DiskannIndex:
             return f
         d = os.path.join(self.path, legacy_dir)
         return d if _dir_exists(d) else None
+
+    def _read_sidecar(self, file_name: str, legacy_dir: str):
+        """A small sidecar as a pyarrow Table read on the driver (no Spark
+        job), or None when it is absent. Reads the atomic file, else the
+        legacy directory. The single file goes through ParquetFile: the
+        dataset reader behind read_table costs the driver ~5 MB of RSS."""
+        import pyarrow.parquet as papq
+
+        src = self._sidecar_source(file_name, legacy_dir)
+        if src is None:
+            return None
+        if src.endswith(file_name):
+            return papq.ParquetFile(src).read(use_threads=False)
+        return papq.read_table(src, use_threads=False)
+
+    def _routing_rows(self) -> list[tuple] | None:
+        """Stored routing rows (shard, centroid, count, vsum) in file order,
+        with count and vsum None when the sidecar predates the sufficient
+        statistics. None for pre-routing indexes."""
+        try:
+            t = self._read_sidecar(self._ROUTING_FILE, "routing")
+        except Exception:  # e.g. schema-less dir from an empty-table build
+            return None
+        if t is None or not t.num_rows:
+            return None
+        d = t.to_pydict()
+        stats = "count" in d and "vsum" in d
+        counts = d["count"] if stats else [None] * t.num_rows
+        vsums = d["vsum"] if stats else [None] * t.num_rows
+        return [
+            (int(sh), list(c), None if n is None else int(n), v)
+            for sh, c, n, v in zip(d["shard"], d["centroid"], counts, vsums)
+        ]
+
+    def _stored_label_pairs(self) -> set[tuple[int, int]] | None:
+        """The (shard, label) coverage sidecar, or None when absent."""
+        t = self._read_sidecar(self._LABEL_ROUTING_FILE, "label_routing")
+        if t is None:
+            return None
+        d = t.to_pydict()
+        return {(int(sh), int(l)) for sh, l in zip(d["shard"], d["label"])}
 
     def _write_routing_rows(self, rows: list[tuple]) -> None:
         """Atomically publish the routing table rows (shard, centroid,
@@ -1423,7 +1590,8 @@ class DiskannIndex:
         touched = sorted({int(s) for s in shards}) if shards is not None else None
         stored = None
         if touched is not None:
-            stored = self._routing_stats()
+            rows = self._routing_rows()
+            stored = {r[0]: r for r in rows} if rows and rows[0][2] is not None else None
             if stored is None:
                 # no stored stats to merge with: an incremental update must
                 # degrade to the full recompute, never write a partial table
@@ -1463,35 +1631,25 @@ class DiskannIndex:
             # the sidecar would be dead weight AND go stale on hash inserts,
             # which skip _write_routing entirely); tombstones only ever
             # over-include a shard (recall-safe).
-            lsrc = self._sidecar_source(self._LABEL_ROUTING_FILE, "label_routing")
+            stored_pairs = self._stored_label_pairs() if touched is not None else None
             # an incremental update with NO stored sidecar (e.g. the first
             # mutation on an index migrated from a pre-sidecar format) must
             # aggregate ALL shards — writing only the touched shards' labels
             # would make _label_shards unroute every other shard's labels
-            lab_src = nodes if touched is not None and lsrc else self.nodes()
-            lab = lab_src.select("shard", F.explode("labels").alias("label")).distinct()
-            pairs = [(int(r["shard"]), int(r["label"])) for r in lab.collect()]
-            if touched is not None and lsrc:
-                pairs += [
-                    (int(r["shard"]), int(r["label"]))
-                    for r in self.spark.read.parquet(lsrc).collect()
-                    if int(r["shard"]) not in touched
-                ]
-            self._write_label_pairs(pairs)
+            if stored_pairs is None:
+                self._write_label_pairs(_label_pairs(self.nodes()))
+            else:
+                self._write_label_pairs(
+                    _label_pairs(nodes) | {p for p in stored_pairs if p[0] not in touched}
+                )
 
     def _routing_table(self) -> tuple[np.ndarray, np.ndarray] | None:
         """(shard_ids, centroid_matrix) or None for pre-routing indexes."""
-        rdir = self._sidecar_source(self._ROUTING_FILE, "routing")
-        if rdir is None:
+        rows = self._routing_rows()
+        if rows is None:
             return None
-        try:
-            rows = self.spark.read.parquet(rdir).collect()
-        except Exception:  # e.g. schema-less dir from an empty-table build
-            return None
-        if not rows:
-            return None
-        sids = np.array([r["shard"] for r in rows], dtype=np.int64)
-        cents = np.stack([np.array(r["centroid"], dtype=np.float64) for r in rows])
+        sids = np.array([r[0] for r in rows], dtype=np.int64)
+        cents = np.array([r[1] for r in rows], dtype=np.float64)
         return sids, cents
 
     def tune_routing(
@@ -1674,25 +1832,6 @@ class DiskannIndex:
                 return p
         return int(self.meta.num_shards)
 
-    def _routing_stats(self) -> dict[int, tuple] | None:
-        """Stored routing rows WITH sufficient statistics, as
-        {shard: (shard, centroid, count, vsum)} — or None when the sidecar
-        is absent or predates the stats columns (degrade to recompute)."""
-        rdir = self._sidecar_source(self._ROUTING_FILE, "routing")
-        if rdir is None:
-            return None
-        try:
-            df = self.spark.read.parquet(rdir)
-            if "vsum" not in df.columns or "count" not in df.columns:
-                return None
-            rows = df.collect()
-        except Exception:
-            return None
-        return {
-            int(r["shard"]): (int(r["shard"]), list(r["centroid"]), int(r["count"]), list(r["vsum"]))
-            for r in rows
-        }
-
     def _ensure_id_routing(self) -> bool:
         """Backfill the id -> shard routing sidecar for a pre-sidecar
         kmeans index: ONE corpus pass over (node_id, shard) — the same
@@ -1732,80 +1871,30 @@ class DiskannIndex:
         self.meta.save(self.path)
         return True
 
-    def _routing_delta(self, new: DataFrame, shards: Sequence[int] | None = None) -> dict | None:
-        """Capture a micro-batch's routing delta BEFORE the mutation lands:
-        per touched shard, the batch's (count, vector-sum) and the prior
-        (count, vector-sum) of upserted ids (whose stored vectors the batch
-        replaces). Everything here is O(batch): the only corpus touch is a
-        broadcast-semijoin fetch of the upserted ids' stored rows,
-        PARTITION-PRUNED to the batch's shards when given (upserts are
-        pinned to the stored shard, so a batch id's prior row can only
-        live in a batch shard). Returns None when the stored sidecar lacks
-        sufficient statistics (caller falls back to re-aggregation)."""
-        if self._routing_stats() is None:
-            return None
-        badd = (
-            new.select("shard", F.posexplode("vector").alias("dim", "v"))
-            .groupBy("shard", "dim")
-            .agg(F.sum(F.col("v").cast("double")).alias("s"), F.count("*").alias("c"))
-            .collect()
-        )
-        old_src = self.nodes(shards=shards) if shards else self.nodes()
-        old = (
-            old_src
-            .join(F.broadcast(new.select("node_id")), "node_id")
-            .select("shard", F.posexplode("vector").alias("dim", "v"))
-            .groupBy("shard", "dim")
-            .agg(F.sum(F.col("v").cast("double")).alias("s"), F.count("*").alias("c"))
-            .collect()
-        )
-        lab_pairs: list[tuple[int, int]] = []
-        if self.meta.has_labels:
-            lab_pairs = [
-                (int(r["shard"]), int(r["label"]))
-                for r in new.select("shard", F.explode("labels").alias("label")).distinct().collect()
-            ]
-
-        def fold(rows):
-            out: dict[int, tuple[int, dict[int, float]]] = {}
-            for r in rows:
-                s = int(r["shard"])
-                cnt, sums = out.setdefault(s, (0, {}))
-                sums[int(r["dim"])] = float(r["s"])
-                out[s] = (max(cnt, int(r["c"])), sums)
-            return out
-
-        return {"add": fold(badd), "sub": fold(old), "labels": lab_pairs}
-
-    def _apply_routing_delta(self, delta: dict) -> None:
+    def _apply_routing_delta(self, stored: dict, add: dict, sub: dict) -> None:
         """O(batch) routing update from sufficient statistics:
         vsum' = vsum + batch_sum - replaced_sum, count' = count + new rows,
-        centroid = float32(vsum' / count'). The float32 cast absorbs the
-        last-ulp float64 summation-order differences, so the stored
-        centroids match a full recompute bit-for-bit in practice (asserted
-        by test_round5_fixes); the stats themselves stay exact sums."""
-        stored = self._routing_stats()
-        if stored is None:  # lost a race with a format change: recompute
-            self._write_routing()
-            return
+        centroid = float32(vsum' / count'). ``add`` / ``sub`` map a shard to
+        the ``_sum_stats`` [ids, float64 vector sum, labels] of the batch
+        rows routed to it / of the stored rows the batch replaces there;
+        the batch's labels widen the label sidecar. The float32 cast
+        absorbs the last-ulp float64 summation-order differences, so the
+        stored centroids match a full recompute bit-for-bit in practice
+        (asserted by test_round5_fixes); the stats themselves stay exact
+        sums."""
         dims = self.meta.num_dimensions
         rows = dict(stored)
-        touched = set(delta["add"]) | set(delta["sub"])
-        for s in sorted(touched):
+        for s in sorted(set(add) | set(sub)):
             _, _, cnt, vsum = rows.get(s, (s, [0.0] * dims, 0, [0.0] * dims))
             vs = np.asarray(vsum, dtype=np.float64)
             if len(vs) != dims:
                 vs = np.zeros(dims, dtype=np.float64)
-            a = delta["add"].get(s)
-            b = delta["sub"].get(s)
-            if a is not None:
-                cnt += a[0]
-                for d, v in a[1].items():
-                    vs[d] += v
-            if b is not None:
-                cnt -= b[0]
-                for d, v in b[1].items():
-                    vs[d] -= v
+            if s in add:
+                cnt += len(add[s][0])
+                vs = vs + add[s][1]
+            if s in sub:
+                cnt -= len(sub[s][0])
+                vs = vs - sub[s][1]
             if cnt <= 0:  # defensive: a shard can't empty via insert
                 continue
             cent = (vs / cnt).astype(np.float32)
@@ -1814,22 +1903,12 @@ class DiskannIndex:
         if self.meta.has_labels:
             # labels sidecar: batch pairs only ever ADD coverage (tombstones
             # over-include, recall-safe — same semantics as the re-agg path)
-            lsrc = self._sidecar_source(self._LABEL_ROUTING_FILE, "label_routing")
-            if lsrc:
-                pairs = {
-                    (int(r["shard"]), int(r["label"]))
-                    for r in self.spark.read.parquet(lsrc).collect()
-                }
-                pairs.update(delta["labels"])
-            else:
-                pairs = {
-                    (int(r["shard"]), int(r["label"]))
-                    for r in self.nodes()
-                    .select("shard", F.explode("labels").alias("label"))
-                    .distinct()
-                    .collect()
-                }
-            self._write_label_pairs(pairs)
+            pairs = self._stored_label_pairs()
+            self._write_label_pairs(
+                _label_pairs(self.nodes())
+                if pairs is None
+                else pairs | {(s, l) for s, a in add.items() for l in a[2]}
+            )
 
     def _label_shards(self, labels) -> set[int] | None:
         """Shards that contain at least one row bearing any of `labels` —
@@ -1845,15 +1924,14 @@ class DiskannIndex:
         if not self.meta.has_labels:
             return None
         want = [int(x) for x in labels]
-        ldir = self._sidecar_source(self._LABEL_ROUTING_FILE, "label_routing")
         memo = getattr(self, "_label_routing_memo", None)
         token = (self.meta.build_id, self.meta.epoch)
         if memo is not None and memo[0] == token:
             mapping = memo[1]
-        elif ldir is not None:
+        elif (pairs := self._stored_label_pairs()) is not None:
             mapping: dict[int, set[int]] = {}
-            for r in self.spark.read.parquet(ldir).collect():
-                mapping.setdefault(int(r["label"]), set()).add(int(r["shard"]))
+            for sh, l in pairs:
+                mapping.setdefault(l, set()).add(sh)
             self._label_routing_memo = (token, mapping)
         else:
             mapping = None
@@ -2449,6 +2527,12 @@ class DiskannIndex:
         with self._writer_lock(wait=lock_wait):
             self._insert_locked(df, vector_col, id_col, label_col)
 
+    # Driver budget of an insert batch's single copy (bytes of float32
+    # vectors): below it the batch is collected once with Arrow; above it
+    # the batch is localCheckpointed and routed on the executors, and the
+    # driver holds only its ids and per-shard statistics.
+    _COLLECT_BUDGET_BYTES = 64 << 20
+
     def _insert_locked(
         self,
         df: DataFrame,
@@ -2483,145 +2567,92 @@ class DiskannIndex:
             idx.meta.save(self.path)
             self.meta = idx.meta
             return
-        meta_d = _meta_dict(self.meta)
-        # UPDATE to NULL removes the row from the index (NULL vectors are
-        # never indexed, build.rs:493-497; the reference's update-with-null
-        # scaffold, vacuum.rs:378-460): tombstone any id arriving with a
-        # NULL vector so its stale previous vector stops surfacing.
-        null_ids = [
-            int(r[0])
-            for r in df.filter(F.col(vector_col).isNull())
-            .select(F.col(id_col).cast("long"))
-            .collect()
-        ]
-        if null_ids:
-            self._delete_locked(null_ids)
-        src = df.filter(F.col(vector_col).isNotNull())
-        # dimension check up front on the driver: a mismatched vector would
-        # otherwise die deep in the executor as an opaque np.stack ragged-
-        # array error (build() validates caps; inserts must match the index)
-        dims = src.agg(
-            F.min(F.size(F.col(vector_col))).alias("lo"),
-            F.max(F.size(F.col(vector_col))).alias("hi"),
-        ).first()
-        if dims["lo"] is None:
-            return  # no non-NULL vectors in the batch: nothing to insert
-        if dims["lo"] != self.meta.num_dimensions or dims["hi"] != self.meta.num_dimensions:
-            raise ValueError(
-                f"insert vectors have {dims['lo']}..{dims['hi']} dimensions; "
-                f"index expects {self.meta.num_dimensions}"
-            )
-        if label_col is not None:
-            _validate_label_bounds(src, label_col)
+        kmeans = self.meta.shard_assignment == "kmeans"
+        dims = int(self.meta.num_dimensions)
         vec = F.col(vector_col)
         if self.meta.distance_type == DistanceType.COSINE.value:
-            vec = l2_normalize(vec)
-        sel = [
+            vec = l2_normalize(vec)  # ingest-time normalization (pg_vector.rs:153-155)
+        # labels stay long here: the driver checks their bounds before
+        # anything narrows them to smallint
+        prepared = df.select(
             F.col(id_col).cast("long").alias("node_id"),
             vec.cast("array<float>").alias("vector"),
-        ]
-        if label_col is not None:
-            sel.append(
-                F.array_sort(
-                    F.array_distinct(
-                        F.filter(
-                            F.coalesce(F.col(label_col), F.array().cast("array<smallint>")),
-                            lambda x: x.isNotNull(),
-                        )
-                    )
-                ).cast("array<smallint>").alias("labels")
-            )
+            _label_set(label_col).alias("labels"),
+        )
+        # ONE copy of the batch: every check, the routing, the statistics
+        # and the write derive from it. Below the budget it is one Arrow
+        # collect; past it the collect stops at budget + 1 rows and a
+        # checkpoint keeps the batch on the executors, where it is routed —
+        # the driver then holds its ids and per-shard statistics, never its
+        # vectors. _rid orders the rows: the first occurrence of an id wins.
+        budget = max(1, self._COLLECT_BUDGET_BYTES // (4 * dims + 64))
+        head = prepared.limit(budget + 1).toPandas()
+        ck = None
+        if len(head) > budget:
+            ck = prepared.withColumn("_rid", F.monotonically_increasing_id()).localCheckpoint()
+            head = None
+            facts = ck.mapInPandas(lambda it: map(_batch_facts, it), _FACTS_SCHEMA).toPandas()
         else:
-            sel.append(F.lit(None).cast("array<smallint>").alias("labels"))
-        newbase = src.select(*sel)
-        # shard routing mirrors the build's assignment: an upsert of an
-        # existing id must land in the shard that already stores it
-        if self.meta.shard_assignment == "kmeans":
-            table = self._routing_table()
-            if table is None:
-                raise ValueError("kmeans-sharded index is missing its routing table")
-            sids, cents = table
-            cdf = self.spark.createDataFrame(
-                [(int(s), [float(x) for x in c]) for s, c in zip(sids, cents)],
-                "shard int, _cv array<double>",
-            )
-            newbase = (
-                newbase.crossJoin(F.broadcast(cdf))
-                .withColumn(
-                    "_cd", distance_expr(F.col("vector"), F.col("_cv"), self.meta.distance_type)
-                )
-                .groupBy("node_id")
-                .agg(
-                    F.min_by("shard", F.struct("_cd", "shard")).alias("shard"),
-                    F.first("vector").alias("vector"),
-                    F.first("labels").alias("labels"),
-                )
-            )
-            # an upsert must stay in the shard that already stores its id —
-            # re-routing a moved vector to its new nearest cell would leave
-            # a duplicate node_id behind in the old shard. The probe reads
-            # the id -> shard ROUTING SIDECAR (routing_store.py), rb-bucket
-            # pruned to the batch ids' partitions — O(sidecar/buckets) IO
-            # per micro-batch, never the corpus node_id column (the
-            # reference's aminsert touches only affected pages,
-            # build.rs:537-558). Pre-sidecar indexes backfill once.
-            from pgvectorscale_spark.operators import routing_store
-
+            head["_rid"] = np.arange(len(head), dtype=np.int64)
+            facts = _batch_facts(head)
+        null_ids, first = _scan_batch(facts, dims)
+        if null_ids:
+            # UPDATE to NULL removes the row from the index (NULL vectors are
+            # never indexed, build.rs:493-497; the reference's update-with-
+            # null scaffold, vacuum.rs:378-460): tombstone any id arriving
+            # with a NULL vector so its stale previous vector stops surfacing.
+            self._delete_locked(null_ids)
+        if not len(first):
+            return  # no non-NULL vectors in the batch: nothing to insert
+        if kmeans:
             self._ensure_id_routing()
-            stored = (
-                routing_store.lookup(
-                    self.spark, self.path, self.meta, newbase.select("node_id")
-                )
-                .groupBy("node_id")
-                .agg(F.min("part").alias("_stored_shard"))
+        # the stored rows of the batch ids, one shard-pruned pass summed per
+        # shard on the executors: their count is the upsert share of
+        # num_rows, their vector sums the routing "sub" statistics, and
+        # (kmeans) their shards the upsert pins
+        sub = _sum_stats(
+            self._stored_rows(
+                first["node_id"].to_numpy(), ["vector"] if kmeans else [],
+                _shard_stats, _STATS_SCHEMA,
+            ).toPandas()
+        )
+        n_present = sum(len(s[0]) for s in sub.values())
+        route = stored_stats = None
+        if kmeans:
+            routing = self._routing_rows()
+            if routing is None:
+                raise ValueError("kmeans-sharded index is missing its routing table")
+            if routing[0][2] is not None:
+                stored_stats = {r[0]: r for r in routing}
+            routing = sorted(routing)  # ascending shard ids: argmin ties
+            pins = {i: sh for sh, s in sub.items() for i in s[0]}
+            route = (
+                np.array([r[0] for r in routing], dtype=np.int64),
+                np.array([r[1] for r in routing], dtype=np.float64),
+                self.meta.distance_type,
+                pins,
             )
-            newbase = (
-                newbase.join(F.broadcast(stored), "node_id", "left")
-                .withColumn("shard", F.coalesce("_stored_shard", "shard"))
-                .drop("_stored_shard")
-            )
+        args = (np.sort(first["_rid"].to_numpy()), int(self.meta.num_shards), route)
+        if ck is None:
+            routed = _route(head, *args)
+            add = _sum_stats(_shard_stats(routed))
+            new = self.spark.createDataFrame(_new_node_rows(routed), _NODE_SCHEMA)
         else:
-            newbase = newbase.withColumn(
-                "shard", F.pmod(F.xxhash64(F.col("node_id")), F.lit(self.meta.num_shards)).cast("int")
+            b_args = self.spark.sparkContext.broadcast(args)
+
+            def routed_of(it):
+                for pdf in it:
+                    pdf = _route(pdf, *b_args.value)
+                    if len(pdf):
+                        yield pdf
+
+            add = _sum_stats(
+                ck.mapInPandas(lambda it: map(_shard_stats, routed_of(it)), _STATS_SCHEMA)
+                .toPandas()
             )
-        new = (
-            newbase
-            .withColumn("bq_code", F.lit(None).cast("array<long>"))
-            .withColumn("neighbors", F.lit(None).cast("array<long>"))
-            .withColumn("is_default_start", F.lit(None).cast("boolean"))
-            .withColumn("start_labels", F.lit(None).cast("array<smallint>"))
-            .withColumn("deleted", F.lit(False))
-            .select(_node_cols())
-        )
-        shards = [r["shard"] for r in new.select("shard").distinct().collect()]
-        # Voronoi routing delta, captured BEFORE the mutation lands (the
-        # prior vectors of upserted ids must be read pre-commit): O(batch)
-        routing_delta = (
-            self._routing_delta(new, shards)
-            if self.meta.shard_assignment == "kmeans"
-            else None
-        )
-        # num_rows delta, also pre-commit: rows only ever ACCUMULATE per
-        # node_id until a fold (which preserves the deduped set), so
-        # new-row count = batch ids absent from the raw base∪delta union —
-        # a column-pruned broadcast semijoin, NOT the O(corpus) merge-view
-        # count the recount used to run per micro-batch. The probe is also
-        # PARTITION-PRUNED to the batch's shard set: a batch row is pinned
-        # to the shard that already stores its id (kmeans: the `stored`
-        # coalesce above; hash: shard is a pure function of the id), so an
-        # already-present id can only live in a touched shard — at
-        # streaming rates a 1-shard micro-batch reads 1 shard's files, not
-        # the corpus (aminsert touches only affected pages, build.rs:537-558)
-        batch_ids = new.select("node_id").distinct()
-        n_batch = batch_ids.count()
-        n_present = (
-            self._nodes_union()
-            .filter(F.col("shard").isin([int(s) for s in shards]))
-            .join(F.broadcast(batch_ids), "node_id")
-            .select("node_id")
-            .distinct()
-            .count()
-        )
+            new = ck.mapInPandas(lambda it: map(_new_node_rows, routed_of(it)), _NODE_SCHEMA)
+        shards = sorted(add)
+        meta_d = _meta_dict(self.meta)
         b_state = self.spark.sparkContext.broadcast(self._quantizer_state())
         store = self._store()
         nodes_dir = store[0]
@@ -2641,7 +2672,7 @@ class DiskannIndex:
             # state comes from this worker's graph cache when hot (grow in
             # place — O(batch) CPU) or an executor-local pyarrow read when
             # cold, so the corpus never moves through a shuffle — at 100 TB
-            # a streaming micro-batch shuffles the batch, not the shards it
+            # a streaming micro-batch moves the batch, not the shards it
             # touches, and a warm shard doesn't even reload.
             qstate = b_state.value
             shard = int(pdf["shard"].iloc[0])
@@ -2663,23 +2694,19 @@ class DiskannIndex:
             # streaming ingest keeps hot shards hot. Content equals what the
             # partition rewrite persists (same rows, same graph).
             _cache_put((nodes_dir, shard, next_token), entry, _entry_nbytes(*entry))
-            return out
+            return out[_node_cols()]
 
         # one task per TOUCHED shard, via a collision-free proxy of the
         # shard id (round 14 — hashing len(shards) keys into as many
         # partitions collides and serializes 2-3 shards through one task,
-        # guide §2.5). Grouping on the injective proxy is grouping on the
-        # shard; insert_shard still reads the real shard from its rows.
-        def insert_shard_by_pid(pdf: pd.DataFrame) -> pd.DataFrame:
-            return insert_shard(pdf.drop(columns=["_pid"]))[_node_cols()]
-
+        # guide §2.5)
         updated = (
-            new.withColumn(
-                "_pid", proxy_partition_col(F.col("shard"), sorted(shards) or [0])
-            )
-            .repartition(max(len(shards), 1), "_pid")
+            new.withColumn("_pid", proxy_partition_col(F.col("shard"), shards))
+            .repartition(len(shards), "_pid")
             .groupBy("_pid")
-            .applyInPandas(insert_shard_by_pid, schema=_NODE_SCHEMA)
+            .applyInPandas(
+                lambda pdf: insert_shard(pdf.drop(columns=["_pid"])), schema=_NODE_SCHEMA
+            )
         )
         # delta sink: the micro-batch persists ONLY its changed rows (batch +
         # back-edge-touched neighbors) as a new delta generation — bytes
@@ -2694,44 +2721,97 @@ class DiskannIndex:
             os.path.join(self.path, next_rel)
         )
         self.meta.delta_gens = list(self.meta.delta_gens) + [next_rel]
-        if self.meta.shard_assignment == "kmeans":
-            # maintain the id -> shard sidecar with the delta's own rows
-            # (a column-pruned read-back of the dir just written: batch
-            # ids + back-edge-touched neighbors, whose entries already
-            # exist and dedupe at lookup) — O(batch) rows, committed by
-            # the same meta.save as the node delta below
+        if kmeans:
+            # the id -> shard sidecar gains the batch's (id, shard) pairs —
+            # O(batch) rows, committed by the same meta.save as the node
+            # delta below (back-edge-touched neighbors are already mapped)
             from pgvectorscale_spark.operators import routing_store
 
-            routing_store.append_delta(
-                self.spark.read.parquet(os.path.join(self.path, next_rel)).select(
-                    "node_id", "shard"
-                ),
+            routing_store.append_pairs(
+                [i for sh in shards for i in add[sh][0]],
+                [sh for sh in shards for _ in add[sh][0]],
                 self.path,
                 self.meta,
-                "shard",
             )
         # exact incremental count: upserts replace rows (+0), fresh ids +1
-        self.meta.num_rows = int(self.meta.num_rows) + n_batch - n_present
+        self.meta.num_rows = int(self.meta.num_rows) + len(first) - n_present
         self.meta.epoch += 1  # informational mutation counter
         # the index may now hold rows the SQL-registered table lacks: cost
         # routing must never bypass to an exact table scan again
         self.meta.has_mutations = True
         # commit: ONLY the touched shards switch cache tokens — the other
         # shards of the index keep serving from warm executor caches
-        for s in shards:
-            self.meta.shard_mutations[str(int(s))] = mutation_nonce
+        for sh in shards:
+            self.meta.shard_mutations[str(sh)] = mutation_nonce
         self.meta.save(self.path)
-        if self.meta.shard_assignment == "kmeans":
+        if kmeans:
             # inserted vectors shift the touched cells' centroids; hash
             # shards have no routing to maintain (probe_shards is refused).
-            # Normal path: apply the pre-captured O(batch) stats delta;
-            # fall back to touched-shard re-aggregation only for sidecars
-            # predating the sufficient-statistics columns.
-            if routing_delta is not None:
-                self._apply_routing_delta(routing_delta)
+            # Normal path: apply the O(batch) stats delta; fall back to
+            # touched-shard re-aggregation only for sidecars predating the
+            # sufficient-statistics columns.
+            if stored_stats is not None:
+                self._apply_routing_delta(stored_stats, add, sub)
             else:
                 self._write_routing(shards)
         self._maybe_fold_deltas()
+
+    def _stored_rows(self, ids: np.ndarray, columns: list[str], fn, schema: str) -> DataFrame:
+        """The stored rows of ``ids`` (latest generation wins, tombstones
+        included) as (node_id, shard, *columns), mapped through ``fn`` per
+        task into rows of ``schema`` — the rows themselves stay on the
+        executors.
+
+        The ids are grouped by where their rows can live — hash shards: the
+        shard itself, a pure function of the id; kmeans: the id-routing
+        sidecar's rb bucket, whose probe names the shard — and each task
+        reads only its shards' files, id-filtered, executor-locally (the
+        reference's aminsert / ambulkdelete touch only the affected pages,
+        build.rs:537-558, vacuum.rs:23-136)."""
+        from pgvectorscale_spark.operators import routing_store
+
+        cols = ["node_id", "shard", *columns]
+        store = self._store()
+        path = self.path
+        if self.meta.shard_assignment == "kmeans":
+            rels = routing_store.generations(self.meta)
+            keys = spark_pmod_xxhash64(ids, int(self.meta.routing_ids_buckets))
+
+            def shards_of(key: int, kids: np.ndarray):
+                p = routing_store.probe_bucket(path, rels, key, kids)
+                return [
+                    (int(sh), p["node_id"].to_numpy()[at])
+                    for sh, at in p.groupby("part").indices.items()
+                ]
+        else:
+            keys = spark_pmod_xxhash64(ids, self.meta.num_shards)
+
+            def shards_of(key: int, kids: np.ndarray):
+                return [(key, kids)]
+
+        groups = pd.Series(ids).groupby(keys).apply(list)
+
+        def read(batches):
+            for b in batches:
+                where: dict[int, list] = {}
+                for key, kids in zip(b["_k"], b["_ids"]):
+                    for sh, sids in shards_of(int(key), np.asarray(kids, dtype=np.int64)):
+                        where.setdefault(sh, []).append(sids)
+                # one read per shard of this task's ids
+                frames = [
+                    _read_shard_pdf(
+                        store, sh, ["node_id", *columns], ids=np.concatenate(v)
+                    ).assign(shard=sh)[cols]
+                    for sh, v in sorted(where.items())
+                ]
+                rows = pd.concat(frames, ignore_index=True) if frames else None
+                if rows is not None and len(rows):
+                    yield fn(rows.sort_values(["node_id", "shard"]).drop_duplicates("node_id"))
+
+        tasks = pd.DataFrame({"_k": groups.index.astype("int64"), "_ids": list(groups)})
+        return self.spark.createDataFrame(tasks, "_k long, _ids array<long>").mapInPandas(
+            read, schema=schema
+        )
 
     def delete(self, ids: Sequence[int], lock_wait: float = 0.0) -> None:
         """Tombstone delete (ambulkdelete analog): flip the deleted flag;
@@ -2741,61 +2821,37 @@ class DiskannIndex:
             self._delete_locked(ids)
 
     def _delete_locked(self, ids: Sequence[int]) -> None:
-        ids_df = self.spark.createDataFrame([(int(i),) for i in ids], "node_id long")
-        # partition-prune the merge-view read to the shards that can hold
-        # the ids (ambulkdelete touches only affected pages,
-        # vacuum.rs:23-136). Hash sharding: the shard is a pure function of
-        # the id — zero corpus IO. Kmeans: where an id lives is data — the
-        # id -> shard ROUTING SIDECAR (routing_store.py) answers it from
-        # the batch ids' rb partitions alone, so a 1-id delete reads the
-        # sidecar plus that one shard's files, never every shard's node_id
-        # pages (pre-sidecar indexes backfill once in _ensure_id_routing).
-        if self.meta.shard_assignment == "kmeans":
-            from pgvectorscale_spark.operators import routing_store
+        from pgvectorscale_spark.operators.index_util import delete_dir, list_subdirs
 
-            if self._ensure_id_routing():
-                probe = routing_store.lookup(self.spark, self.path, self.meta, ids_df)
-                cand_shards = [
-                    int(r["part"]) for r in probe.select("part").distinct().collect()
-                ]
-            else:  # empty bootstrap index: nothing stored yet
-                cand_shards = []
-        else:
-            cand_shards = [
-                int(r["shard"])
-                for r in ids_df.select(
-                    _shard_col("node_id", self.meta.num_shards).alias("shard")
-                )
-                .distinct()
-                .collect()
-            ]
-        if not cand_shards:
+        ids = np.unique(np.fromiter((int(i) for i in ids), dtype=np.int64))
+        if not len(ids):
             return
-        # delta sink: persist ONLY the tombstoned rows as a new generation —
-        # a delete writes O(ids) rows, not the touched shard partitions
-        # (ambulkdelete flips tuple flags in place, vacuum.rs:23-136)
-        updated = (
-            self.nodes(shards=cand_shards)
-            .join(F.broadcast(ids_df), "node_id")
-            .withColumn("deleted", F.lit(True))
-            .select(_node_cols())
-            # tiny (O(ids) rows): cache so the shard collect below and the
-            # delta write don't each re-run the merge-view scan
-            .localCheckpoint()
-        )
-        shards = [r["shard"] for r in updated.select("shard").distinct().collect()]
-        if not shards:
-            return
+        if self.meta.shard_assignment == "kmeans" and not self._ensure_id_routing():
+            return  # empty bootstrap index: nothing stored yet
+        # delta sink: ONE pass finds where each id lives and writes its
+        # O(ids) stored rows, tombstoned, as a new generation from the
+        # executors — a delete writes O(ids) rows, not the touched shard
+        # partitions (ambulkdelete flips tuple flags in place,
+        # vacuum.rs:23-136). The O(ids) shuffle by shard keeps it one file
+        # per touched shard, as merge-on-read opens every file.
         next_rel = self._next_delta_rel()
-        updated.write.mode("overwrite").partitionBy("shard").parquet(
-            os.path.join(self.path, next_rel)
-        )
+        out = os.path.join(self.path, next_rel)
+        self._stored_rows(
+            ids, [c for c in _node_cols() if c not in ("node_id", "shard")],
+            lambda rows: rows.assign(deleted=True)[_node_cols()], _NODE_SCHEMA,
+        ).repartition("shard").write.mode("overwrite").partitionBy("shard").parquet(out)
+        shards = [int(n.split("=", 1)[1]) for n in list_subdirs(out, "shard=", strict=True)]
+        if not shards:
+            # no id is stored: drop the empty generation uncommitted
+            delete_dir(out)
+            self.meta.delta_counter = int(self.meta.delta_counter) - 1
+            return
         self.meta.delta_gens = list(self.meta.delta_gens) + [next_rel]
         self.meta.epoch += 1  # informational mutation counter
         self.meta.has_tombstones = True  # cost routing must keep using the index
         nonce = uuid.uuid4().hex
-        for s in shards:  # invalidate executor caches for touched shards only
-            self.meta.shard_mutations[str(int(s))] = nonce
+        for sh in shards:  # invalidate executor caches for touched shards only
+            self.meta.shard_mutations[str(sh)] = nonce
         self.meta.save(self.path)
         self._maybe_fold_deltas()
 
@@ -2859,6 +2915,7 @@ class DiskannIndex:
                 touched.add(int(name.split("=", 1)[1]))
         # carry entries the sweep retained (lease-pinned / marker-failed)
         new_trash = list(self.meta.trash_dirs) + list(delta_gens)
+        live_touched = 0
         if touched:
             # the merge keeps tombstoned rows (graph traversal state), so a
             # touched shard always has output rows — a fold-override dir is
@@ -2869,9 +2926,12 @@ class DiskannIndex:
             # shards' partitions (a post-window filter would not push
             # below the dedupe window — see nodes())
             merged = self.nodes(shards=sorted(touched))
-            merged.select(_node_cols()).write.partitionBy("shard").parquet(
-                os.path.join(self.path, gen_rel)
-            )
+            # the write also counts the touched shards' live rows
+            obs = Observation(f"fold_{gen_rel}")
+            merged.select(_node_cols()).observe(
+                obs, F.count(F.when(~F.coalesce(F.col("deleted"), F.lit(False)), 1)).alias("live")
+            ).write.partitionBy("shard").parquet(os.path.join(self.path, gen_rel))
+            live_touched = int(obs.get["live"])
             for s in sorted(touched):
                 old = self.meta.shard_base.get(str(s))
                 new_trash.append(
@@ -2902,12 +2962,17 @@ class DiskannIndex:
         # DROP the curve (recall_target then degrades to full fan-out)
         # instead of letting tune_routing raise on the empty corpus.
         if self.meta.shard_assignment == "kmeans" and self.meta.routing_recall_curve:
-            # one corpus count shared by the staleness check and the
-            # drop-vs-retune decision (the tuner re-reads live rows anyway)
-            live = (
-                self.nodes()
+            # one live count shared by the staleness check and the
+            # drop-vs-retune decision (the tuner re-reads live rows anyway):
+            # the fold's write counted the touched shards, so only the
+            # untouched ones are scanned, and only if there are any
+            rest = sorted(set(range(int(self.meta.num_shards))) - touched)
+            live = live_touched + (
+                self.nodes(shards=rest)
                 .filter(~F.coalesce(F.col("deleted"), F.lit(False)))
                 .count()
+                if rest
+                else 0
             )
             if self.routing_curve_stale(live_count=live):
                 if live > 1:

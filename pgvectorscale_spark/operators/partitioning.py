@@ -24,10 +24,17 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["spark_int_hash", "collision_free_proxies", "proxy_partition_col"]
+__all__ = [
+    "spark_int_hash",
+    "spark_xxhash64_long",
+    "spark_pmod_xxhash64",
+    "collision_free_proxies",
+    "proxy_partition_col",
+]
 
 
 def spark_int_hash(x: int, seed: int = 42) -> int:
@@ -79,3 +86,39 @@ def proxy_partition_col(key_col: Column, keys: Sequence[int]) -> Column:
         *[F.lit(x) for kv in proxies.items() for x in (int(kv[0]), int(kv[1]))]
     )
     return F.coalesce(m[key_col.cast("int")], key_col.cast("int"))
+
+
+_XXH_P1 = np.uint64(0x9E3779B185EBCA87)
+_XXH_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_XXH_P3 = np.uint64(0x165667B19E3779F9)
+_XXH_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_XXH_P5 = np.uint64(0x27D4EB2F165667C5)
+
+
+def _rotl64(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def spark_xxhash64_long(ids, seed: int = 42) -> np.ndarray:
+    """Bit-exact, vectorized twin of Spark's ``xxhash64()`` over a single
+    LongType column (XXH64.hashLong with seed 42). Lets the driver compute
+    hash shards and routing-sidecar buckets for ids it already holds
+    without a Spark job (pinned against ``F.xxhash64`` by
+    tests/test_partitioning.py)."""
+    x = np.asarray(ids, dtype=np.int64).astype(np.uint64)
+    with np.errstate(over="ignore"):
+        h = np.full(x.shape, np.uint64(seed & 0xFFFFFFFFFFFFFFFF) + _XXH_P5 + np.uint64(8))
+        h ^= _rotl64(x * _XXH_P2, 31) * _XXH_P1
+        h = _rotl64(h, 27) * _XXH_P1 + _XXH_P4
+        h ^= h >> np.uint64(33)
+        h *= _XXH_P2
+        h ^= h >> np.uint64(29)
+        h *= _XXH_P3
+        h ^= h >> np.uint64(32)
+    return h.astype(np.int64)
+
+
+def spark_pmod_xxhash64(ids, n: int) -> np.ndarray:
+    """``pmod(xxhash64(cast(id as long)), n)`` as int64 — the hash-shard
+    and sidecar-bucket function (numpy's % is a floor mod, i.e. pmod)."""
+    return spark_xxhash64_long(ids) % np.int64(n)

@@ -52,24 +52,36 @@ from __future__ import annotations
 import os
 import uuid
 
+import numpy as np
+import pandas as pd
+from pyarrow import fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pgvectorscale_spark.operators.partitioning import proxy_partition_col
+from pgvectorscale_spark.operators.partitioning import (
+    proxy_partition_col,
+    spark_pmod_xxhash64,
+)
 
 __all__ = [
     "DEFAULT_BUCKETS",
     "ROUTING_FOLD_GENS",
     "ROUTING_PARENT",
     "append_delta",
+    "append_pairs",
+    "generations",
     "is_present",
     "lookup",
     "maybe_compact",
+    "probe_bucket",
     "write_base",
 ]
 
 ROUTING_PARENT = "id_routing_gens"
 RB = "rb"
+# every generation dir has this layout; reading with it skips Spark's
+# per-dir schema-inference job
+_SCHEMA = "node_id long, part int, rb int"
 # rb partition count: 64 keeps local test sidecars multi-partition; at
 # 100 TB set PGVS_ROUTING_BUCKETS so corpus_rows * 16B / buckets stays a
 # comfortable per-probe scan size (e.g. 4096 for ~50B rows -> ~200 MB of
@@ -128,7 +140,7 @@ def write_base(
         .partitionBy(RB)
         .parquet(os.path.join(index_path, rel))
     )
-    old = _dirs(meta)
+    old = generations(meta)
     meta.routing_ids_rel = rel
     meta.routing_ids_deltas = []
     meta.routing_ids_buckets = b
@@ -140,24 +152,73 @@ def write_base(
 
 
 def append_delta(pairs_df: DataFrame, index_path: str, meta, part_col: str = "part") -> None:
-    """Append a micro-batch's (node_id, part) rows as a new sidecar delta
-    generation — O(batch) rows written. The caller's meta.save commits it
-    atomically together with the node-store delta; a crash beforehand
-    leaves an orphan dir the sweep reconciles."""
+    """``append_pairs`` for a micro-batch's (node_id, part) rows held in a
+    Spark frame: the O(batch) pairs are collected and written by the one
+    layout writer."""
+    pdf = _pairs(pairs_df, part_col).toPandas()
+    append_pairs(pdf["node_id"].to_numpy(), pdf["part"].to_numpy(), index_path, meta)
+
+
+def append_pairs(node_ids, parts, index_path: str, meta) -> None:
+    """Append a micro-batch's (node_id, part) pairs as a new sidecar delta
+    generation — O(batch) rows, one parquet file per touched rb partition,
+    written with pyarrow on the driver (no Spark job). The caller's
+    meta.save commits it atomically together with the node-store delta; a
+    crash beforehand leaves an orphan dir the sweep reconciles. An empty
+    batch adds no generation."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from pgvectorscale_spark.operators.index_util import _pa_fs
+
+    ids = np.asarray(node_ids, dtype=np.int64)
+    parts = np.asarray(parts, dtype=np.int32)
+    if not len(ids):
+        return
+    rb = spark_pmod_xxhash64(ids, int(meta.routing_ids_buckets))
     rel = f"{ROUTING_PARENT}/{uuid.uuid4().hex[:12]}"
-    b = int(meta.routing_ids_buckets)
-    (
-        _pairs(pairs_df, part_col)
-        .withColumn(RB, _bucket_col("node_id", b))
-        .repartition(1)  # a micro-batch is small: one writer task
-        .write.mode("overwrite")
-        .partitionBy(RB)
-        .parquet(os.path.join(index_path, rel))
-    )
+    for b in np.unique(rb):
+        d = os.path.join(index_path, rel, f"{RB}={int(b)}")
+        fsys, p = _pa_fs(d)
+        fsys.create_dir(p)
+        sel = rb == b
+        table = pa.table({"node_id": ids[sel], "part": parts[sel]})
+        papq.write_table(table, f"{p}/part-0.parquet", filesystem=fsys)
     meta.routing_ids_deltas = list(meta.routing_ids_deltas) + [rel]
 
 
-def _dirs(meta) -> list[str]:
+def probe_bucket(index_path: str, rels: list[str], rb: int, ids) -> pd.DataFrame:
+    """Executor-side twin of ``lookup`` for the ids of ONE rb bucket:
+    pyarrow reads of that bucket's partition in every generation, id-
+    filtered. Returns distinct (node_id, part). A generation without the
+    bucket is legitimate (a delta touches few buckets); a transient error
+    on an existing dir raises."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    from pgvectorscale_spark.operators.index_util import _pa_fs
+
+    filt = pc.field("node_id").isin(pa.array(np.asarray(ids, dtype=np.int64)))
+    frames = []
+    for rel in rels:
+        d = os.path.join(index_path, rel, f"{RB}={int(rb)}")
+        fsys, p = _pa_fs(d)
+        if fsys.get_file_info(p).type == pafs.FileType.NotFound:
+            continue
+        t = pads.dataset(p, filesystem=fsys, format="parquet").to_table(
+            columns=["node_id", "part"], filter=filt
+        )
+        frames.append(t.to_pandas())
+    if not frames:
+        return pd.DataFrame(
+            {"node_id": pd.Series([], dtype="int64"), "part": pd.Series([], dtype="int32")}
+        )
+    return pd.concat(frames, ignore_index=True).drop_duplicates()
+
+
+def generations(meta) -> list[str]:
+    """The sidecar's generation dirs, base first, relative to the index."""
     rel = getattr(meta, "routing_ids_rel", None)
     if not rel:
         return []
@@ -175,7 +236,7 @@ def lookup(
     generation is read with ``rb IN (...)`` — a PartitionFilter, so
     untouched buckets' files are never opened. The broadcast id semijoin
     then restricts rows within the touched buckets."""
-    rels = _dirs(meta)
+    rels = generations(meta)
     if not rels:
         return None
     b = int(meta.routing_ids_buckets)
@@ -188,7 +249,8 @@ def lookup(
     u = None
     for rel in rels:
         f = (
-            spark.read.parquet(os.path.join(index_path, rel))
+            spark.read.schema(_SCHEMA)
+            .parquet(os.path.join(index_path, rel))
             .filter(F.col(RB).isin(buckets))
             .select("node_id", "part")
         )
@@ -209,12 +271,12 @@ def maybe_compact(spark: SparkSession, index_path: str, meta) -> None:
     crashed compaction's meta referencing deleted dirs. A crash BEFORE the
     save instead leaves the new dir as a sweep-reconciled orphan and the
     old dirs still referenced — consistent either way."""
-    rels = _dirs(meta)
+    rels = generations(meta)
     if not rels or len(meta.routing_ids_deltas) < ROUTING_FOLD_GENS:
         return
     u = None
     for rel in rels:
-        f = spark.read.parquet(os.path.join(index_path, rel)).select(
+        f = spark.read.schema(_SCHEMA).parquet(os.path.join(index_path, rel)).select(
             "node_id", "part", RB
         )
         u = f if u is None else u.unionByName(f)

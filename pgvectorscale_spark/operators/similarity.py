@@ -94,6 +94,27 @@ def _np_fold_distance_matrix(
     raise ValueError(f"unknown distance type: {distance_type}")
 
 
+def _nearest(
+    mat: np.ndarray, cids: np.ndarray, cmat: np.ndarray, distance_type: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """(nearest centroid id, its distance) per row of a float64 matrix —
+    the argmin over ``_np_fold_distance_matrix``. ``cids`` must ascend:
+    the first minimum wins, which is ``min_by(cid, struct(dist, cid))``'s
+    tie-break. Shared by the build's shard assignment and insert routing."""
+    m = mat.shape[0]
+    sel = np.empty(m, dtype=np.int64)
+    dmin = np.empty(m)
+    # chunk rows so the (rows × centroids) temporaries stay cache-sized
+    # regardless of batch size
+    for s in range(0, m, 2048):
+        dm = _np_fold_distance_matrix(mat[s : s + 2048], cmat, distance_type)
+        # NaN sorts greater than every double in Spark orderings
+        j = np.argmin(np.where(np.isnan(dm), np.inf, dm), axis=1)
+        sel[s : s + len(j)] = cids[j]
+        dmin[s : s + len(j)] = dm[np.arange(len(j)), j]
+    return sel, dmin
+
+
 def _rows_to_centroids(rows) -> tuple[np.ndarray, np.ndarray]:
     """Collected (centroid_id, vector) rows → (cids asc, matrix float64).
 
@@ -168,19 +189,7 @@ def _assign_nearest(
             dist_out = np.full(n, np.nan)
             if mask.any():
                 mat = np.stack(vec[mask].to_numpy()).astype(np.float64)
-                m = mat.shape[0]
-                sel = np.empty(m, dtype=np.int64)
-                dmin = np.empty(m)
-                # chunk rows so the (rows × centroids) temporaries stay
-                # cache-sized regardless of Arrow batch size
-                for s in range(0, m, 2048):
-                    dm = _np_fold_distance_matrix(
-                        mat[s : s + 2048], cmat_l, distance_type
-                    )
-                    # NaN sorts greater than every double in Spark orderings
-                    j = np.argmin(np.where(np.isnan(dm), np.inf, dm), axis=1)
-                    sel[s : s + len(j)] = cids_l[j]
-                    dmin[s : s + len(j)] = dm[np.arange(len(j)), j]
+                sel, dmin = _nearest(mat, cids_l, cmat_l, distance_type)
                 cid_out[mask] = sel
                 dist_out[mask] = dmin
             res = pdf.copy()

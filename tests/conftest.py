@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import SparkSession
@@ -68,13 +70,46 @@ _HEAVY = {
 }
 
 
+def _named_node_ids(config) -> set[str]:
+    """Node ids named explicitly on the command line (``file::test``),
+    relative to the rootdir like ``item.nodeid``."""
+    out = set()
+    for arg in config.args:
+        if "::" not in arg:
+            continue
+        path, rest = arg.split("::", 1)
+        rel = os.path.relpath(os.path.abspath(path), str(config.rootpath))
+        out.add(f"{rel.replace(os.sep, '/')}::{rest}")
+    return out
+
+
 def pytest_collection_modifyitems(config, items):
+    named = _named_node_ids(config)
+    # the default `-m "not heavy"` (pytest.ini addopts) must not drop a
+    # heavy test the command line names by node id
+    default_filter = (config.getoption("markexpr") or "").strip() == "not heavy"
+    matched, collected = set(), set()
     for item in items:
         nodeid = item.nodeid.replace("\\", "/")
         rel = nodeid.split("tests/")[-1] if "tests/" in nodeid else nodeid
         base = rel.split("[", 1)[0]
-        if rel in _HEAVY or base in _HEAVY:
+        collected.add(rel.split("::", 1)[0])
+        hit = {rel, base} & _HEAVY
+        matched |= hit
+        explicit = nodeid in named or nodeid.split("[", 1)[0] in named
+        if hit and not (explicit and default_filter):
             item.add_marker(pytest.mark.heavy)
+    # a file selected only in part (node ids on the command line) cannot
+    # tell a stale entry from an unselected test
+    partial = {n.split("::", 1)[0].split("tests/")[-1] for n in named}
+    stale = sorted(
+        e for e in _HEAVY - matched
+        if e.split("::", 1)[0] in collected and e.split("::", 1)[0] not in partial
+    )
+    if stale:
+        raise pytest.UsageError(
+            f"_HEAVY entries match no collected test (renamed or removed?): {stale}"
+        )
 
 
 @pytest.fixture(scope="session")

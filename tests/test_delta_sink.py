@@ -15,9 +15,11 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from pgvectorscale_spark.operators.diskann import DiskannIndex
 
@@ -481,3 +483,294 @@ def test_rebuild_at_mutated_path_clears_stale_deltas(spark, tmpdir):
     assert any(t.startswith("nodes_delta/") for t in idx2.meta.trash_dirs)
     assert idx2.nodes().count() == 200
     assert idx2.nodes().filter("node_id = 999").count() == 0
+
+
+# ---- mutations in a handful of Spark jobs ------------------------------------
+#
+# An insert or delete materializes its batch once and derives the checks, the
+# routing, the routing statistics and the write from that copy; node dirs and
+# sidecars are read with their known schemas. Job counts are the cost at
+# small batch sizes, so they are pinned here.
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_LABELED = "vec_id long, embedding array<float>, labels array<smallint>"
+
+
+def _kmeans_labeled(spark, path, n=400, d=8, seed=0, distance_type="cosine", **kw):
+    rng = np.random.default_rng(seed)
+    cent = rng.normal(size=(4, d)) * 4
+    mat = (cent[rng.integers(0, 4, n)] + rng.normal(size=(n, d))).astype(np.float32)
+    df = spark.createDataFrame([(i, mat[i].tolist(), [i % 5]) for i in range(n)], _LABELED)
+    idx = DiskannIndex.build(
+        df, path, distance_type=distance_type, num_shards=4,
+        shard_assignment="kmeans", label_col="labels", **kw,
+    )
+    return idx, cent, rng
+
+
+@pytest.fixture(scope="module")
+def labeled_kmeans(spark, tmpdir):
+    """One cosine kmeans index with labels and a tuned routing curve, built
+    once; each test mutates its own copy."""
+    idx, cent, _ = _kmeans_labeled(spark, f"{tmpdir}/labeled_base", n=240)
+    return idx.path, cent
+
+
+def _copy(spark, src, dst):
+    shutil.copytree(src, dst)
+    return DiskannIndex.load(spark, dst)
+
+
+def _batch_rows(cent, rng, ids, d=8):
+    return [
+        (int(i), (cent[j % 4] + rng.normal(size=d)).astype(np.float32).tolist(), [j % 7])
+        for j, i in enumerate(ids)
+    ]
+
+
+def test_mutations_run_in_a_handful_of_jobs(spark, tmpdir, monkeypatch, labeled_kmeans):
+    """Insert <= 20 jobs, delete <= 8, a delete that folds the chain <= 12
+    (kmeans shards, labels and a tuned routing curve: every sidecar is
+    maintained)."""
+    monkeypatch.setattr(DiskannIndex, "DELTA_FOLD_SEQS", 3)
+    base, cent = labeled_kmeans
+    idx, rng = _copy(spark, base, f"{tmpdir}/jobs"), np.random.default_rng(1)
+    ids = list(range(1000, 1056)) + list(range(8))  # 56 fresh ids, 8 upserts
+    batch = spark.createDataFrame(_batch_rows(cent, rng, ids), _LABELED)
+    assert _jobs(spark, lambda: idx.insert(batch, label_col="labels")) <= 20
+    assert _jobs(spark, lambda: idx.delete(list(range(100, 132)))) <= 8
+    assert idx.meta.delta_seq == 2
+    assert _jobs(spark, lambda: idx.delete(list(range(1000, 1032)))) <= 12
+    assert idx.meta.delta_seq == 0  # folded
+    assert idx.meta.num_rows == idx.nodes().count() == 296
+    live = idx.nodes().filter("NOT deleted")
+    assert live.count() == 296 - 64
+    assert live.filter("node_id BETWEEN 100 AND 131 OR node_id BETWEEN 1000 AND 1031").count() == 0
+
+
+def _sql_routing(spark, batch, sids, cents, distance_type, prior):
+    """The SQL routing the insert path used before it routed on the driver:
+    crossJoin + min_by(shard, struct(dist, shard)), upserts pinned to the
+    stored shard. Returns {node_id: shard}."""
+    from pgvectorscale_spark.functions.distance import distance_expr, l2_normalize
+
+    vec = F.col("embedding")
+    if distance_type == "cosine":
+        vec = l2_normalize(vec)
+    cdf = spark.createDataFrame(
+        [(int(s), [float(x) for x in c]) for s, c in zip(sids, cents)],
+        "shard int, _cv array<double>",
+    )
+    routed = (
+        batch.select(F.col("vec_id").alias("node_id"), vec.cast("array<float>").alias("vector"))
+        .crossJoin(F.broadcast(cdf))
+        .withColumn("_cd", distance_expr(F.col("vector"), F.col("_cv"), distance_type))
+        .groupBy("node_id")
+        .agg(F.min_by("shard", F.struct("_cd", "shard")).alias("shard"))
+        .collect()
+    )
+    out = {int(r["node_id"]): int(r["shard"]) for r in routed}
+    out.update(prior)
+    return out
+
+
+@pytest.mark.parametrize("distance_type", ["cosine", "l2", "inner_product"])
+def test_insert_routing_matches_sql_fold(spark, tmpdir, distance_type):
+    """Driver-side routing (the build's kernel + argmin) picks the same
+    shard as the SQL crossJoin + min_by it replaced, including forced
+    ties (two shards share a centroid; a zero vector) and upsert pins."""
+    idx, cent, rng = _kmeans_labeled(
+        spark, f"{tmpdir}/route_{distance_type}", n=160, distance_type=distance_type,
+        tune_routing=False,
+    )
+    rows = sorted(idx._routing_rows())
+    assert len(rows) >= 3
+    rows[-1] = (rows[-1][0], rows[1][1], rows[-1][2], rows[-1][3])  # tie: 2nd == last
+    idx._write_routing_rows(rows)
+    sids = [r[0] for r in rows]
+    cents = [r[1] for r in rows]
+    fresh = _batch_rows(cent, rng, range(500, 540))
+    fresh += [(540, [0.0] * 8, [1]), (541, list(cents[1]), [2]), (542, list(cents[-1]), [3])]
+    fresh += [(543, (np.asarray(cents[0]) * 0.5 + np.asarray(cents[2]) * 0.5).tolist(), [4])]
+    upserts = _batch_rows(cent[::-1], rng, range(6))
+    batch = spark.createDataFrame(fresh + upserts, _LABELED)
+    prior = {
+        int(r["node_id"]): int(r["shard"])
+        for r in idx.nodes().filter(F.col("node_id") < 6).collect()
+    }
+    want = _sql_routing(spark, batch, sids, cents, distance_type, prior)
+    idx.insert(batch, label_col="labels")
+    got = {
+        int(r["node_id"]): int(r["shard"])
+        for r in idx.nodes().filter(F.col("node_id").isin(list(want))).collect()
+    }
+    assert got == want
+
+
+def test_insert_sidecars_match_sql_maintenance(spark, tmpdir, labeled_kmeans):
+    """After one insert (fresh ids + upserts), the routing sidecar's count,
+    vsum and centroids, the label sidecar and the id sidecar equal what the
+    former Spark-side maintenance computes: stored stats + SQL sums of the
+    batch rows - SQL sums of the replaced rows."""
+    from pgvectorscale_spark.operators import routing_store
+
+    base, cent = labeled_kmeans
+    idx, rng = _copy(spark, base, f"{tmpdir}/sidecars"), np.random.default_rng(2)
+    stored = {r[0]: r for r in idx._routing_rows()}
+    pairs = idx._stored_label_pairs()
+    rows = _batch_rows(cent, rng, list(range(700, 760)) + list(range(10, 20)))
+    batch = spark.createDataFrame(rows, _LABELED)
+    batch_ids = batch.select(F.col("vec_id").alias("node_id"))
+    prior_df = idx.nodes().join(F.broadcast(batch_ids), "node_id")
+    prior = {int(r["node_id"]): int(r["shard"]) for r in prior_df.collect()}
+    sids, cents = idx._routing_table()
+    order = np.argsort(sids)
+    shard_of = _sql_routing(spark, batch, sids[order], cents[order], "cosine", prior)
+    routed = spark.createDataFrame(list(shard_of.items()), "node_id long, shard int")
+    from pgvectorscale_spark.functions.distance import l2_normalize
+
+    new = batch.select(
+        F.col("vec_id").alias("node_id"),
+        l2_normalize(F.col("embedding")).cast("array<float>").alias("vector"),
+        "labels",
+    ).join(routed, "node_id")
+
+    def sums(frame):
+        out = {}
+        for r in (
+            frame.select("shard", F.posexplode("vector").alias("dim", "v"))
+            .groupBy("shard", "dim")
+            .agg(F.sum(F.col("v").cast("double")).alias("s"), F.count("*").alias("c"))
+            .collect()
+        ):
+            cnt, vs = out.setdefault(int(r["shard"]), [0, np.zeros(8)])
+            vs[int(r["dim"])] = float(r["s"])
+            out[int(r["shard"])][0] = max(cnt, int(r["c"]))
+        return out
+
+    add, sub = sums(new), sums(prior_df)
+    idx.insert(batch, label_col="labels")
+    got = {r[0]: r for r in idx._routing_rows()}
+    assert sorted(got) == sorted(stored)
+    for s, (_, _, cnt, vsum) in stored.items():
+        vs = np.asarray(vsum, dtype=np.float64)
+        if s in add:
+            cnt += add[s][0]
+            vs = vs + add[s][1]
+        if s in sub:
+            cnt -= sub[s][0]
+            vs = vs - sub[s][1]
+        assert got[s][2] == cnt
+        np.testing.assert_array_equal(np.asarray(got[s][3]), vs)
+        np.testing.assert_array_equal(
+            np.asarray(got[s][1], dtype=np.float32), (vs / cnt).astype(np.float32)
+        )
+    batch_pairs = {
+        (int(r["shard"]), int(r["label"]))
+        for r in new.select("shard", F.explode("labels").alias("label")).distinct().collect()
+    }
+    assert idx._stored_label_pairs() == pairs | batch_pairs
+    every = idx.nodes().select("node_id", "shard")
+    want = {(int(r["node_id"]), int(r["shard"])) for r in every.collect()}
+    probe = routing_store.lookup(spark, idx.path, idx.meta, every.select("node_id"))
+    assert {(int(r["node_id"]), int(r["part"])) for r in probe.collect()} == want
+
+
+def test_large_batch_checkpoint_path_matches_collect_path(
+    spark, tmpdir, monkeypatch, labeled_kmeans
+):
+    """Above the driver row budget the batch is localCheckpointed and
+    routed on the executors; the index it leaves is the one the collect
+    path leaves —
+    including a repeated id (first occurrence wins) and a NULL vector."""
+    from pgvectorscale_spark.operators import routing_store
+
+    base, cent = labeled_kmeans
+    idx, rng = _copy(spark, base, f"{tmpdir}/big_a"), np.random.default_rng(3)
+    shutil.copytree(base, f"{tmpdir}/big_b")
+    rows = _batch_rows(cent, rng, list(range(900, 930)) + [3, 900])
+    rows.append((4, None, [1]))
+    batch = spark.createDataFrame(rows, _LABELED)
+    idx.insert(batch, label_col="labels")
+    monkeypatch.setattr(DiskannIndex, "_COLLECT_BUDGET_BYTES", 4 * 8 * 7)
+    big = DiskannIndex.load(spark, f"{tmpdir}/big_b")
+    # the checkpoint path is a fixed number of jobs (here 7, plus 2 for the
+    # NULL vector's delete), whatever the batch size
+    assert _jobs(spark, lambda: big.insert(batch, label_col="labels")) <= 9
+
+    def content(i):
+        cols = ["node_id", "shard", "vector", "labels", "neighbors", "deleted"]
+        return sorted(
+            (r["node_id"], r["shard"], tuple(r["vector"]), tuple(r["labels"] or ()),
+             tuple(r["neighbors"]), r["deleted"])
+            for r in i.nodes().select(cols).collect()
+        )
+
+    assert content(big) == content(idx)
+    assert big.meta.num_rows == idx.meta.num_rows == 270
+    assert big._routing_rows() == idx._routing_rows()
+    assert big._stored_label_pairs() == idx._stored_label_pairs()
+    ids = spark.createDataFrame([(i,) for i in range(900, 930)], "node_id long")
+    assert sorted(routing_store.lookup(spark, big.path, big.meta, ids).collect()) == sorted(
+        routing_store.lookup(spark, idx.path, idx.meta, ids).collect()
+    )
+
+
+def _collect_spy(spark, monkeypatch) -> list[tuple[list[str], int]]:
+    """Record (columns, rows) of every DataFrame the driver collects."""
+    cls = type(spark.range(1))
+    seen: list[tuple[list[str], int]] = []
+    for name in ("toPandas", "collect"):
+        orig = getattr(cls, name)
+
+        def spy(self, *a, _orig=orig, **kw):
+            out = _orig(self, *a, **kw)
+            seen.append((list(self.columns), len(out)))
+            return out
+
+        monkeypatch.setattr(cls, name, spy)
+
+    def no_iter(self, *a, **kw):
+        raise AssertionError("a mutation streamed rows through the driver")
+
+    monkeypatch.setattr(cls, "toLocalIterator", no_iter)
+    return seen
+
+
+def test_mutations_keep_vectors_off_the_driver(spark, tmpdir, monkeypatch, labeled_kmeans):
+    """Past the driver row budget an insert routes its batch on the
+    executors, and a delete writes its tombstones from the executors: the
+    only vector-bearing frame the driver collects is the budget-bounded
+    head of the batch, and the checkpoint path runs a fixed number of
+    jobs."""
+    base, cent = labeled_kmeans
+    idx, rng = _copy(spark, base, f"{tmpdir}/offdriver"), np.random.default_rng(4)
+    monkeypatch.setattr(DiskannIndex, "_COLLECT_BUDGET_BYTES", 4 * 8 * 7)
+    budget = 4 * 8 * 7 // (4 * 8 + 64)
+    batch = spark.createDataFrame(
+        _batch_rows(cent, rng, list(range(800, 860)) + list(range(20, 30))), _LABELED
+    )
+    seen = _collect_spy(spark, monkeypatch)
+    assert _jobs(spark, lambda: idx.insert(batch, label_col="labels")) <= 8
+    assert seen and all(n <= budget + 1 for cols, n in seen if "vector" in cols)
+    seen.clear()
+    assert _jobs(spark, lambda: idx.delete(list(range(0, 400, 3)))) <= 2
+    assert not [cols for cols, _ in seen if "vector" in cols]
+    monkeypatch.undo()
+    assert idx.meta.num_rows == idx.nodes().count() == 300
+    live = idx.nodes().filter("NOT deleted")
+    assert live.count() == 300 - len(range(0, 240, 3))
+    assert live.filter("node_id % 3 = 0 AND node_id < 240").count() == 0

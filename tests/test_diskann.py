@@ -49,6 +49,21 @@ def test_build_and_fullscan_completeness(built):
     assert nodes.filter(F.size("neighbors") > idx.meta.num_neighbors).count() == 0
 
 
+def test_probe_block_dims_fallback(built):
+    """num_dimensions_to_index = 0 means "every dimension" in the probe's
+    batch quantization too, as in _graph_from_pdf's walk quantizer."""
+    from pgvectorscale_spark.operators.diskann import _meta_dict, _probe_shard_block
+
+    idx, mat = built
+    md = _meta_dict(idx.meta)
+    assert md["num_dimensions_to_index"] == 0
+    q = np_normalize(mat[:4].astype(np.float64))
+    run = lambda m, tok: _probe_shard_block(  # noqa: E731
+        idx._store(), 0, ("pin", tok), m, idx._quantizer_state(), np.arange(4), q, None, 10, 40
+    )
+    assert run(md, 0) == run({**md, "num_dimensions_to_index": 64}, 1)
+
+
 def test_search_recall(built):
     idx, mat = built
     rng = np.random.default_rng(9)

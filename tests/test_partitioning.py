@@ -10,6 +10,7 @@ per partition, all partitions occupied.
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,6 +18,8 @@ from pgvectorscale_spark.operators.partitioning import (
     collision_free_proxies,
     proxy_partition_col,
     spark_int_hash,
+    spark_pmod_xxhash64,
+    spark_xxhash64_long,
 )
 
 
@@ -28,6 +31,27 @@ def test_python_hash_twin_matches_spark(spark):
     got = {r["v"]: r["h"] for r in df.collect()}
     for v in vals:
         assert got[v] == spark_int_hash(v), v
+
+
+def test_python_xxhash64_twin_matches_spark(spark):
+    """The driver-side hash-shard / sidecar-bucket function equals Spark's
+    pmod(xxhash64(cast(id as long)), n) on every id, negatives included."""
+    rng = np.random.default_rng(7)
+    vals = list(range(-64, 600)) + [2**63 - 1, -(2**63), 2**31, -(2**31) - 1]
+    vals += [int(v) for v in rng.integers(-(2**62), 2**62, 500)]
+    df = spark.createDataFrame([(v,) for v in vals], "v long").select(
+        "v",
+        F.xxhash64("v").alias("h"),
+        F.pmod(F.xxhash64("v"), F.lit(7)).alias("m7"),
+        F.pmod(F.xxhash64("v"), F.lit(64)).alias("m64"),
+    )
+    got = {r["v"]: (r["h"], r["m7"], r["m64"]) for r in df.collect()}
+    arr = np.array(vals, dtype=np.int64)
+    h, m7, m64 = (
+        spark_xxhash64_long(arr), spark_pmod_xxhash64(arr, 7), spark_pmod_xxhash64(arr, 64)
+    )
+    for i, v in enumerate(vals):
+        assert got[v] == (int(h[i]), int(m7[i]), int(m64[i])), v
 
 
 @pytest.mark.parametrize("n", [1, 2, 5, 8, 64, 512])
