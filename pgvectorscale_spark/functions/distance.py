@@ -88,10 +88,20 @@ def l2_normalize(a: Column) -> Column:
     Vectors whose norm is already ~1 are left alone in the reference as an
     optimization; dividing by a norm of 1.0 is a no-op so we divide
     unconditionally (same value, simpler plan).
+
+    The norm is folded once per row, in the aggregate's finish lambda:
+    referencing a norm column inside ``transform``'s lambda would make
+    Spark re-evaluate the fold for every element (O(d²) per row). The
+    double operations are those of ``sqrt(dot_product(a, a))``, so the
+    output is unchanged, NULL elements and NULL arrays included.
     """
-    norm = l2_norm(a)
-    return F.when(norm == 0.0, a.cast("array<double>")).otherwise(
-        F.transform(a, lambda x: _as_double(x) / norm)
+    return F.aggregate(
+        a,
+        F.lit(0.0),
+        lambda acc, x: acc + _as_double(x) * _as_double(x),
+        lambda acc: F.when(F.sqrt(acc) == 0.0, a.cast("array<double>")).otherwise(
+            F.transform(a, lambda x: _as_double(x) / F.sqrt(acc))
+        ),
     )
 
 
@@ -139,10 +149,12 @@ def dot_product_sql(a: str, b: str) -> str:
 
 
 def _l2_normalize_sql(a: str) -> str:
-    norm = f"sqrt({dot_product_sql(a, a)})"
+    # one norm fold per row (see l2_normalize)
     return (
-        f"CASE WHEN {norm} = 0.0 THEN cast({a} as array<double>) "
-        f"ELSE transform({a}, x -> cast(x as double) / {norm}) END"
+        f"aggregate({a}, cast(0.0 as double), "
+        f"(acc, x) -> acc + cast(x as double) * cast(x as double), "
+        f"acc -> CASE WHEN sqrt(acc) = 0.0 THEN cast({a} as array<double>) "
+        f"ELSE transform({a}, x -> cast(x as double) / sqrt(acc)) END)"
     )
 
 
@@ -265,9 +277,11 @@ def np_hamming(codes: np.ndarray, qcode: np.ndarray) -> np.ndarray:
     """Hamming distance between packed codes.
 
     codes: (n, w) uint64 matrix; qcode: (w,) uint64. Returns (n,) int64.
+    Any shapes that broadcast work: the bits are summed over the last
+    axis, e.g. (B, K, w) codes against (B, 1, w) queries give (B, K).
     """
-    x = np.bitwise_xor(codes, qcode[None, :])
+    x = np.bitwise_xor(codes, qcode)
     if _BITWISE_COUNT is not None:  # numpy >= 2.0
-        return _BITWISE_COUNT(x).sum(axis=1).astype(np.int64)
+        return _BITWISE_COUNT(x).sum(axis=-1).astype(np.int64)
     b = x.view(np.uint8)
-    return _POPCOUNT_LUT[b].sum(axis=1).astype(np.int64)
+    return _POPCOUNT_LUT[b].sum(axis=-1).astype(np.int64)

@@ -3,14 +3,18 @@
 Reference lifecycle (pgvectorscale/src/access_method/build.rs:296-460,
 scan.rs:309-436) re-expressed for Spark's execution model:
 
-**Build** = three chained batch jobs, mirroring the reference's phases
-(build.rs:1154-1166 "training quantizer" → "building graph" → "finalizing"):
+**Build** = a handful of Spark jobs over one normalized, persisted copy of
+the corpus, mirroring the reference's phases (build.rs:1154-1166 "training
+quantizer" → "building graph" → "finalizing"):
 
-1. *Train* (SBQ only): per-dimension mean/variance via declarative
-   aggregation (operators/sbq.py) — one pass, map-side partial agg.
-2. *Graph construction*: the corpus is hash-sharded; each shard builds an
-   independent Vamana graph **inside one executor task** via
-   ``groupBy(shard).applyInPandas`` (operators/vamana.py). This replaces the
+1. *Facts + train*: one pass returns the row count, dimensions, label
+   bounds, k-means seeds, the routing-curve sample and (SBQ) the
+   per-dimension mean/variance moments (quantize.rs:104-152), merged on
+   the driver. kmeans sharding adds one partial-sum pass per Lloyd round
+   and one per-shard statistics pass (counts, vector sums, labels) after
+   the assignment.
+2. *Graph construction*: each shard builds an independent Vamana graph
+   **inside one executor task** (operators/vamana.py). This replaces the
    reference's DSM-shared-memory parallel build (build.rs:343-428): Spark's
    natural parallelism unit is the shard, not page-locked shared state.
    Sharding is how the design scales: at 100 TB, shards of ~100k-1M vectors
@@ -37,6 +41,7 @@ surface in results (vacuum.rs:23-136); compact() rebuilds from live rows.
 
 from __future__ import annotations
 
+import functools
 import os
 import uuid
 import warnings
@@ -59,8 +64,9 @@ from pgvectorscale_spark.functions.distance import (
 from pgvectorscale_spark.operators.partitioning import (
     proxy_partition_col,
     spark_pmod_xxhash64,
+    spark_xxhash64_long,
 )
-from pgvectorscale_spark.operators.sbq import SbqQuantizer, train_quantizer
+from pgvectorscale_spark.operators.sbq import SbqQuantizer
 from pgvectorscale_spark.operators.similarity import _nearest
 from pgvectorscale_spark.operators.vamana import VamanaGraph
 from pgvectorscale_spark.types import (
@@ -228,21 +234,196 @@ def _sum_stats(stats: pd.DataFrame) -> dict[int, list]:
     return out
 
 
+_CORPUS_SCHEMA = (
+    "n long, dims long, dmin long, dmax long, lo long, hi long, "
+    "m_n long, m_sum array<double>, m_m2 array<double>, "
+    "sample_ids array<long>, sample_vecs array<array<float>>"
+)
+
+
+_NO_FACTS = (0, None, None, None, None, None, 0, None, None, [], [])
+
+
+def _chunk_facts(pdf: pd.DataFrame, moments: bool, sample: int) -> tuple:
+    """Facts about a non-empty batch of a build's normalized corpus
+    (node_id, vector, labels array<long>), as a ``_CORPUS_SCHEMA`` row:
+    the row count; the first row's vector length and the length range;
+    the label bounds; with ``moments`` and one vector length, the
+    per-dimension count, sum and central second moment (SBQ training);
+    and the ``sample`` rows first in (xxhash64(node_id), node_id) order
+    (the routing-curve queries)."""
+    ids = pdf["node_id"].to_numpy(dtype=np.int64)
+    vec = pdf["vector"].to_numpy()
+    lens = np.fromiter((len(v) for v in vec), np.int64, len(vec))
+    lo = hi = None
+    labs = [x for x in pdf["labels"] if x is not None and len(x)]
+    if labs:
+        # each label set is sorted: its ends are its bounds
+        lo, hi = min(int(x[0]) for x in labs), max(int(x[-1]) for x in labs)
+    m = (0, None, None)
+    if moments and lens.min() == lens.max():
+        mat = np.stack(vec).astype(np.float64)
+        b_sum = mat.sum(axis=0)
+        m = (len(mat), b_sum, ((mat - b_sum / len(mat)) ** 2).sum(axis=0))
+    keep = np.lexsort((ids, spark_xxhash64_long(ids)))[:sample]
+    return (
+        len(pdf), int(lens[0]), int(lens.min()), int(lens.max()), lo, hi, *m,
+        ids[keep].tolist(), [vec[i].tolist() for i in keep],
+    )
+
+
+def _corpus_facts(batches, moments: bool, sample: int):
+    """One ``_chunk_facts`` row for a whole partition."""
+    facts = functools.reduce(
+        lambda a, b: _merge_facts(a, b, sample),
+        (_chunk_facts(pdf, moments, sample) for pdf in batches if len(pdf)),
+        _NO_FACTS,
+    )
+    yield pd.DataFrame([facts], columns=[c.split()[0] for c in _CORPUS_SCHEMA.split(", ")])
+
+
+def _scan_corpus(base: DataFrame, moments: bool, sample: int) -> dict:
+    """``_corpus_facts`` over every partition (one Spark job), merged on
+    the driver in task order: n, dims (the first row's), dmin/dmax, lo/hi
+    (None without labels), sample as (ids, float64 matrix) or None,
+    moments as (count, float64 sum, float64 central second moment) or
+    None. Each task returns O(dims) values: its moments and at most
+    ``sample`` rows."""
+    rows = base.mapInPandas(
+        lambda it: _corpus_facts(it, moments, sample), schema=_CORPUS_SCHEMA
+    ).collect()
+    n, dims, dmin, dmax, lo, hi, m_n, m_sum, m_m2, s_ids, s_vecs = functools.reduce(
+        lambda a, b: _merge_facts(a, b, sample), map(tuple, rows), _NO_FACTS
+    )
+    out = {
+        "n": n,
+        "dims": int(dims) if n else 0,
+        "dmin": int(dmin) if n else 0,
+        "dmax": int(dmax) if n else 0,
+        "lo": lo,
+        "hi": hi,
+        "sample": None,
+        "moments": None,
+    }
+    if sample:
+        out["sample"] = np.array(s_ids, dtype=np.int64), np.array(s_vecs, dtype=np.float64)
+    if moments and n and dmin == dmax:
+        out["moments"] = (m_n, np.asarray(m_sum), np.asarray(m_m2))
+    return out
+
+
+def _merge_facts(a: tuple, b: tuple, sample: int) -> tuple:
+    """Two ``_chunk_facts`` rows as one, ``a``'s rows first: moments merge
+    only while every vector has one length, as Chan's formula needs."""
+    if not a[0]:
+        return b
+    if not b[0]:
+        return a
+    (a_n, dims, a_dmin, a_dmax, a_lo, a_hi, *a_m, a_ids, a_vecs) = a
+    (b_n, _, b_dmin, b_dmax, b_lo, b_hi, *b_m, b_ids, b_vecs) = b
+    dmin, dmax = min(a_dmin, b_dmin), max(a_dmax, b_dmax)
+    m = (0, None, None)
+    if dmin == dmax:
+        m = _merge_moments(
+            *[(m_n, None if x is None else np.asarray(x), None if y is None else np.asarray(y))
+              for m_n, x, y in (a_m, b_m)]
+        )
+    ids = np.asarray(list(a_ids) + list(b_ids), dtype=np.int64)
+    vecs = list(a_vecs) + list(b_vecs)
+    keep = np.lexsort((ids, spark_xxhash64_long(ids)))[:sample]
+    return (
+        a_n + b_n,
+        dims,
+        dmin,
+        dmax,
+        min((x for x in (a_lo, b_lo) if x is not None), default=None),
+        max((x for x in (a_hi, b_hi) if x is not None), default=None),
+        *m,
+        ids[keep].tolist(),
+        [vecs[i] for i in keep],
+    )
+
+
+def _merge_moments(a: tuple, b: tuple) -> tuple:
+    """(count, sum, central second moment) of two row sets combined —
+    Chan et al.'s parallel update, the merge Spark's var_pop uses."""
+    (a_n, a_sum, a_m2), (b_n, b_sum, b_m2) = a, b
+    if not a_n:
+        return b
+    if not b_n:
+        return a
+    delta = b_sum / b_n - a_sum / a_n
+    return (
+        a_n + b_n,
+        a_sum + b_sum,
+        a_m2 + b_m2 + delta * delta * (a_n * b_n / (a_n + b_n)),
+    )
+
+
+def _shard_totals(nodes: DataFrame, num_shards: int, dims: int, budget: int) -> dict[int, tuple]:
+    """Per shard of a (node_id, shard, vector, labels) frame, in one Spark
+    job: (row count, float64 vector sum, sorted distinct labels). The
+    routing sidecar's sufficient statistics, the skew cap's counts and the
+    label sidecar's pairs. Each task returns at most ``num_shards`` rows,
+    and the pass runs in few enough tasks that their vector sums stay
+    within ``budget`` bytes (``similarity._within_budget``)."""
+    from pgvectorscale_spark.operators.similarity import _within_budget
+
+    def totals(batches):
+        acc: dict[int, tuple] = {}
+        for pdf in batches:
+            for sh, ids, vsum, labels in _shard_stats(pdf).itertuples(index=False):
+                acc[sh] = _merge_totals(acc[sh], (len(ids), vsum, labels)) if sh in acc else (
+                    len(ids), vsum, labels
+                )
+        yield pd.DataFrame(
+            [(sh, *t) for sh, t in acc.items()], columns=["shard", "n", "vsum", "labels"]
+        )
+
+    nodes = _within_budget(
+        nodes.select("node_id", "shard", "vector", "labels"), num_shards * (dims + 1) * 8, budget
+    )
+    out: dict[int, tuple] = {}
+    for r in nodes.mapInPandas(
+        totals, schema="shard int, n long, vsum array<double>, labels array<long>"
+    ).collect():
+        t = (int(r["n"]), np.asarray(r["vsum"], dtype=np.float64), r["labels"] or [])
+        out[int(r["shard"])] = _merge_totals(out[int(r["shard"])], t) if r["shard"] in out else t
+    return {s: (cnt, vsum, [int(l) for l in labels]) for s, (cnt, vsum, labels) in out.items()}
+
+
+def _merge_totals(a: tuple, b: tuple) -> tuple:
+    """Two (count, vector sum, sorted labels) totals of one shard added up."""
+    return (
+        a[0] + b[0],
+        np.add(a[1], b[1]),
+        sorted({int(l) for l in a[2] or ()} | {int(l) for l in b[2] or ()}),
+    )
+
+
+def _routing_rows_of(totals: dict[int, tuple]) -> list[tuple]:
+    """``_shard_totals`` as routing sidecar rows (shard, centroid, count,
+    vsum): centroid = float32(vsum / count)."""
+    return [
+        (s, (vsum / cnt).astype(np.float32).tolist(), cnt, vsum.tolist())
+        for s, (cnt, vsum, _) in sorted(totals.items())
+    ]
+
+
+def _label_pairs_of(totals: dict[int, tuple]) -> set[tuple[int, int]]:
+    """``_shard_totals`` as distinct (shard, label) pairs."""
+    return {(s, l) for s, (_, _, labels) in totals.items() for l in labels}
+
+
 def _new_node_rows(routed: pd.DataFrame) -> pd.DataFrame:
-    """Routed batch rows as node rows awaiting their graph insert."""
-    labels = [None if x is None else np.asarray(x, dtype=np.int16) for x in routed["labels"]]
+    """Routed batch rows as node rows awaiting their graph insert. Labels
+    become lists of Python ints: without Arrow, ``createDataFrame`` checks
+    each element against smallint and refuses numpy scalars."""
+    labels = [None if x is None else [int(v) for v in x] for x in routed["labels"]]
     return routed.assign(
         labels=labels, bq_code=None, neighbors=None, is_default_start=None,
         start_labels=None, deleted=False,
     )[_node_cols()]
-
-
-def _shard_col(id_col, num_shards: int):
-    # hash the canonical long form: xxhash64 is type-sensitive in Spark
-    # (xxhash64(1 as int) != xxhash64(1 as bigint)), and node_id is stored
-    # as long — an int-typed id column on a later insert()/delete() would
-    # otherwise route the same id to a different shard than it was built in.
-    return F.pmod(F.xxhash64(F.col(id_col).cast("long")), F.lit(num_shards)).cast("int")
 
 
 def _conf_knob(spark: SparkSession, name: str, fallback: int) -> int:
@@ -277,12 +458,6 @@ def _label_set(label_col: str | None):
         return F.lit(None).cast("array<long>")
     labels = F.coalesce(F.col(label_col).cast("array<long>"), F.array().cast("array<long>"))
     return F.array_sort(F.array_distinct(F.filter(labels, lambda x: x.isNotNull())))
-
-
-def _label_pairs(nodes: DataFrame) -> set[tuple[int, int]]:
-    """Distinct (shard, label) pairs of a node frame."""
-    rows = nodes.select("shard", F.explode("labels").alias("label")).distinct().collect()
-    return {(int(r["shard"]), int(r["label"])) for r in rows}
 
 
 def _to_frozenset(x) -> frozenset | None:
@@ -1073,17 +1248,76 @@ class DiskannIndex:
                 raise ValueError("plain storage does not support inner product distance")
             if label_col is not None:
                 raise ValueError("plain storage does not support labels")
+        if shard_assignment not in ("hash", "kmeans"):
+            raise ValueError(f"unknown shard_assignment: {shard_assignment}")
+        kmeans = shard_assignment == "kmeans"
+        sbq = storage_type == StorageType.SBQ.value
 
-        src = df.filter(F.col(vector_col).isNotNull())  # NULLs never indexed (build.rs:493-497)
-        if label_col is not None:
-            _validate_label_bounds(src, label_col)
-        row = src.agg(
-            F.count("*").alias("n"), F.first(F.size(F.col(vector_col))).alias("d")
-        ).first()
-        n, dims = int(row["n"]), int(row["d"]) if row["d"] is not None else 0
+        # the corpus is normalized (pg_vector.rs:153-155) and materialized
+        # ONCE; every statistic the build needs comes from a few passes over
+        # this copy. NULL vectors are never indexed (build.rs:493-497).
+        # Labels stay array<long> until their smallint bounds are checked.
+        vec = F.col(vector_col)
+        if distance_type == DistanceType.COSINE.value:
+            vec = l2_normalize(vec)
+        held = [
+            df.filter(F.col(vector_col).isNotNull())
+            .select(
+                F.col(id_col).cast("long").alias("node_id"),
+                vec.cast("array<float>").alias("vector"),
+                _label_set(label_col).alias("labels"),
+            )
+            .persist()
+        ]
+        try:
+            return cls._build_from(
+                held, path, kmeans, sbq, num_shards, target_shard_size,
+                dict(
+                    distance_type=distance_type, storage_type=storage_type,
+                    num_neighbors=num_neighbors, search_list_size=search_list_size,
+                    max_alpha=max_alpha, bits_per_dimension=bits_per_dimension,
+                    has_labels=label_col is not None, shard_assignment=shard_assignment,
+                    build_id=uuid.uuid4().hex, mutation_id=uuid.uuid4().hex,
+                ),
+                num_dimensions, build_mode, tune_routing,
+            )
+        finally:
+            for frame in held:
+                frame.unpersist()
+
+    @classmethod
+    def _build_from(
+        cls, held: list, path: str, kmeans: bool, sbq: bool,
+        num_shards: int | None, target_shard_size: int, meta_kw: dict,
+        num_dimensions: int, build_mode: str, tune_routing: bool,
+    ) -> "DiskannIndex":
+        """The build over the persisted, normalized corpus ``held[0]``
+        (node_id, vector, labels array<long>): one facts pass, the k-means
+        seeds and rounds, one per-shard statistics pass, the graph write
+        and the id sidecar — about eleven Spark jobs in all, tuning
+        included. Frames it persists go on ``held`` for the caller to
+        release."""
+        base = held[0]
+        spark = base.sparkSession
+        sc = spark.sparkContext
+        # build phases surface in the Spark UI like the reference's
+        # ambuildphasename progress (build.rs:1154-1166)
+        sc.setJobDescription("diskann build: scanning the corpus")
+        facts = _scan_corpus(base, moments=sbq, sample=16 if kmeans and tune_routing else 0)
+        n, dims = facts["n"], facts["dims"]
+        if facts["hi"] is not None and (facts["hi"] > 32767 or facts["lo"] < -32768):
+            raise ValueError(
+                f"label out of smallint range [-32768, 32767]: {facts['lo']}..{facts['hi']}"
+            )
+        storage_type = meta_kw["storage_type"]
         cap = MAX_DIMENSIONS_PLAIN if storage_type == StorageType.PLAIN.value else MAX_DIMENSIONS
         if dims > cap:
             raise ValueError(f"{dims} dimensions exceeds cap {cap} for {storage_type}")
+        if n and facts["dmin"] != facts["dmax"]:
+            raise ValueError(
+                f"build vectors have {facts['dmin']}..{facts['dmax']} dimensions; "
+                "every vector of an index has the same"
+            )
         num_shards = num_shards or max(1, -(-n // target_shard_size))
 
         if n == 0:
@@ -1092,22 +1326,8 @@ class DiskannIndex:
             # INSERT). Persist a schema-bearing empty node table; the first
             # insert() bootstraps the real build (dimensions and quantizer
             # come from that first batch).
-            if shard_assignment not in ("hash", "kmeans"):
-                raise ValueError(f"unknown shard_assignment: {shard_assignment}")
             meta = IndexMeta(
-                distance_type=distance_type,
-                storage_type=storage_type,
-                num_neighbors=num_neighbors,
-                search_list_size=search_list_size,
-                max_alpha=max_alpha,
-                bits_per_dimension=bits_per_dimension,
-                num_dimensions_to_index=num_dimensions,
-                has_labels=label_col is not None,
-                num_shards=1,
-                num_rows=0,
-                shard_assignment=shard_assignment,
-                build_id=uuid.uuid4().hex,
-                mutation_id=uuid.uuid4().hex,
+                **meta_kw, num_dimensions_to_index=num_dimensions, num_shards=1, num_rows=0
             )
             dest_rel, trash, epoch, counter = _prepare_rebuild(path)
             (
@@ -1124,77 +1344,61 @@ class DiskannIndex:
             meta.delta_counter = counter
             meta.epoch = epoch
             meta.save(path)
+            sc.setJobDescription(None)
             return cls(spark, path, meta)
 
         meta = IndexMeta(
-            distance_type=distance_type,
-            storage_type=storage_type,
+            **meta_kw,
             num_dimensions=dims,
             num_dimensions_to_index=num_dimensions if 0 < num_dimensions < dims else 0,
-            num_neighbors=num_neighbors,
-            search_list_size=search_list_size,
-            max_alpha=max_alpha,
-            bits_per_dimension=bits_per_dimension,
-            has_labels=label_col is not None,
             num_shards=num_shards,
             num_rows=n,
-            build_id=uuid.uuid4().hex,
-            mutation_id=uuid.uuid4().hex,
         )
-
-        if shard_assignment not in ("hash", "kmeans"):
-            raise ValueError(f"unknown shard_assignment: {shard_assignment}")
-        meta.shard_assignment = shard_assignment
-        vec = F.col(vector_col)
-        if distance_type == DistanceType.COSINE.value:
-            vec = l2_normalize(vec)  # ingest-time normalization (pg_vector.rs:153-155)
-        sel = [
-            F.col(id_col).cast("long").alias("node_id"),
-            _shard_col(id_col, num_shards).alias("shard"),
-            vec.cast("array<float>").alias("vector"),
-        ]
-        sel.append(_label_set(label_col).cast("array<smallint>").alias("labels"))
-        base = src.select(*sel)
-
-        # build phases surface in the Spark UI like the reference's
-        # ambuildphasename progress (build.rs:1154-1166)
-        sc = spark.sparkContext
-        if shard_assignment == "kmeans":
-            # Voronoi sharding: train num_shards centroids (declarative
-            # Lloyd over the corpus), then reassign each row to its nearest
-            # centroid's shard. Round 14: the reassignment is the map-only
-            # numpy kernel (similarity._assign_nearest) instead of a
-            # broadcast-crossJoin + min_by — min_by on a struct key is not
-            # hash-aggregable, so the old shape SortAggregated an
-            # n × num_shards intermediate carrying the vectors (at the 64×
-            # bench point: a sort of 65M wide rows). The kernel replays the
-            # SQL fold's float64 sequence exactly, so shard membership is
-            # unchanged; shard NUMBERS now follow centroid_id order (they
-            # are internal labels — every output is keyed by node_id).
+        stats = None
+        if kmeans:
+            # Voronoi sharding: train num_shards centroids (partial-sum
+            # Lloyd over the corpus, seeded by the lowest ids), then assign
+            # each row to its nearest centroid's shard with the map-only
+            # kernel (similarity._assign_nearest: the SQL fold's float64
+            # sequence and tie-break, no shuffle).
+            # Shard NUMBERS follow centroid_id order (internal labels —
+            # every output is keyed by node_id).
             from pgvectorscale_spark.operators.similarity import (
                 _assign_nearest,
-                _rows_to_centroids,
-                kmeans_centroids,
+                _kmeans_fit,
             )
 
-            sc.setJobDescription("diskann build: training shard centroids")
-            cents = kmeans_centroids(
-                base.select("node_id", "vector"), num_centroids=num_shards,
-                iterations=2, vector_col="vector", id_col="node_id",
-            ).collect()
-            _, cmat = _rows_to_centroids(cents)
-            shard_ids = np.arange(len(cents), dtype=np.int64)
-            other = [c for c in base.columns if c not in ("node_id", "shard")]
-            base = (
-                _assign_nearest(
-                    base.drop("shard"), shard_ids, cmat, distance_type, "vector"
+            # the driver holds the centroid matrix and one vector sum per
+            # centroid: refuse, before collecting either, a count whose
+            # sums pass the collect budget
+            need = num_shards * (dims + 1) * 8
+            if need > cls._COLLECT_BUDGET_BYTES:
+                raise ValueError(
+                    f"k-means centroid sums need {need} bytes on the driver "
+                    f"({num_shards} centroids x {dims} dims), over the "
+                    f"{cls._COLLECT_BUDGET_BYTES}-byte collect budget: use fewer shards"
                 )
-                .withColumn("shard", F.col("centroid_id").cast("int"))
-                .select("node_id", "shard", *other)
+            sc.setJobDescription("diskann build: training shard centroids")
+            _, cmat = _kmeans_fit(
+                base.select("node_id", "vector"), num_shards, 2, "vector", "node_id",
+                budget=cls._COLLECT_BUDGET_BYTES,
             )
-            # the assignment feeds three jobs (skew counts, quantizer
-            # training, the build itself) — compute the mapped assignment once
-            base = base.persist()
+            sc.setJobDescription("diskann build: assigning shards")
+            assigned = (
+                _assign_nearest(
+                    base, np.arange(len(cmat), dtype=np.int64), cmat,
+                    meta.distance_type, "vector",
+                )
+                .select(
+                    "node_id", F.col("centroid_id").cast("int").alias("shard"),
+                    "vector", "labels",
+                )
+                .persist()
+            )
+            held.append(assigned)
+            stats = _shard_totals(assigned, num_shards, dims, cls._COLLECT_BUDGET_BYTES)
+            base.unpersist()  # the assignment now holds every column
+            base = assigned
             # Skew cap: Voronoi cells follow the data distribution, and one
             # oversized cell breaks the per-shard O(n²) build bound (and
             # executor memory) at scale. Cells beyond 2x the target split
@@ -1204,8 +1408,7 @@ class DiskannIndex:
             # shard size. (SPANN solves this with balanced k-means; the
             # hash split is the shuffle-free Spark analog.)
             cap = max(target_shard_size * 2, 1)
-            counts = {r["shard"]: r["cnt"] for r in base.groupBy("shard").agg(F.count("*").alias("cnt")).collect()}
-            splits = {s: -(-c // cap) for s, c in counts.items() if c > cap}
+            splits = {s: -(-st[0] // cap) for s, st in stats.items() if st[0] > cap}
             if splits:
                 offsets, nxt = {}, num_shards
                 for s, m in sorted(splits.items()):
@@ -1229,12 +1432,20 @@ class DiskannIndex:
                 )
                 num_shards = nxt
                 meta.num_shards = num_shards
+                stats = _shard_totals(base, num_shards, dims, cls._COLLECT_BUDGET_BYTES)
+        else:
+            # hash the canonical long form: xxhash64 is type-sensitive, and
+            # insert()/delete() route the stored long node_id the same way
+            base = base.withColumn(
+                "shard", F.pmod(F.xxhash64("node_id"), F.lit(num_shards)).cast("int")
+            )
         quantizer_state = None
-        if storage_type == StorageType.SBQ.value:
-            sc.setJobDescription("diskann build: training quantizer")
+        if sbq:
+            # pass-1 training (build.rs:574-614): per-dimension population
+            # mean and variance over the indexed prefix, from the facts pass
             d_index = meta.effective_dims
-            train_src = base.select(F.slice("vector", 1, d_index).alias("v"))
-            q = train_quantizer(train_src, "v", bits_per_dimension=meta.effective_bits)
+            q_n, q_sum, q_m2 = facts["moments"]
+            q = SbqQuantizer(q_sum[:d_index] / q_n, q_m2[:d_index] / q_n, meta.effective_bits)
             meta.quantizer_means = q.means.tolist()
             meta.quantizer_variances = q.variances.tolist()
             meta.bits_per_dimension = q.bits
@@ -1304,9 +1515,10 @@ class DiskannIndex:
                 yield build_shard(grp.reset_index(drop=True))[node_cols]
 
         nodes = (
-            base.withColumn(
-                "_pid", proxy_partition_col(F.col("shard"), range(num_shards))
+            base.select(
+                "node_id", "shard", "vector", F.col("labels").cast("array<smallint>")
             )
+            .withColumn("_pid", proxy_partition_col(F.col("shard"), range(num_shards)))
             .repartition(num_shards, "_pid")
             .mapInPandas(build_partition, schema=_NODE_SCHEMA)
         )
@@ -1324,28 +1536,19 @@ class DiskannIndex:
             # no readable prior meta: conventional fresh layout; wipe any
             # leftover chain dirs a wiped/corrupt index may have abandoned
             _clear_delta_dirs(path)
-        if shard_assignment == "kmeans":
-            base.unpersist()
-        sc.setJobDescription(None)
         meta.base_rel = dest_rel
         meta.trash_dirs = trash
-        if shard_assignment == "kmeans":
+        if kmeans:
             # id -> shard routing sidecar (routing_store.py): where an id
             # lives is DATA under kmeans sharding, so mutation membership
             # probes would otherwise scan the corpus node_id column per
-            # micro-batch. Written from the just-persisted base (a
-            # column-pruned read-back: node_id + the shard partition
-            # value) and committed by the same meta.save as the build.
+            # micro-batch. Written from the persisted assignment and
+            # committed by the same meta.save as the build.
             from pgvectorscale_spark.operators import routing_store
 
-            routing_store.write_base(
-                spark.read.schema(_NODE_SCHEMA)
-                .parquet(os.path.join(path, dest_rel))
-                .select("node_id", "shard"),
-                path,
-                meta,
-                "shard",
-            )
+            sc.setJobDescription("diskann build: writing the id sidecar")
+            routing_store.write_base(base.select("node_id", "shard"), path, meta, "shard")
+        sc.setJobDescription(None)
         meta.trash_epoch = epoch
         meta.delta_counter = counter
         # keep the mutation epoch monotonic across rebuilds at the same path
@@ -1353,20 +1556,24 @@ class DiskannIndex:
         meta.epoch = epoch
         meta.save(path)
         idx = cls(spark, path, meta)
-        if shard_assignment == "kmeans":
+        if kmeans:
             # routing (centroids + label sidecar) is CONSUMED only by
             # Voronoi probing and kmeans insert routing; hash shards refuse
             # probe_shards and route inserts by xxhash — writing the table
-            # for them would add a corpus-wide posexplode aggregation to
-            # every build for data nothing ever reads (and that inserts,
-            # which skip _write_routing on hash, would then let go stale)
-            idx._write_routing()
+            # for them would be data nothing ever reads (and that inserts,
+            # which skip the routing update on hash, would then let go
+            # stale). Both come from the statistics pass: centroid =
+            # float32(vsum / count), exactly the stored sufficient stats.
+            idx._write_routing_rows(_routing_rows_of(stats))
+            if meta.has_labels:
+                idx._write_label_pairs(_label_pairs_of(stats))
             if tune_routing:
                 # routing-recall curve for recall_target probe selection
-                # (one exact linear pass over the fresh index; see
+                # (one exact linear pass over the persisted corpus; see
                 # tune_routing's docstring for the staleness contract)
                 sc.setJobDescription("diskann build: tuning routing recall")
-                idx.tune_routing()
+                qids, qmat = facts["sample"]
+                idx._tune_routing(idx._routing_table(), base, n, qids, qmat, 10, True)
                 sc.setJobDescription(None)
         return idx
 
@@ -1571,15 +1778,16 @@ class DiskannIndex:
         )
         self._label_routing_memo = None  # invalidate the driver memo
 
+    def _totals_bound(self) -> tuple[int, int, int]:
+        """``_shard_totals``'s (num_shards, dims, budget) for this index."""
+        return self.meta.num_shards, self.meta.num_dimensions or 0, self._COLLECT_BUDGET_BYTES
+
     def _write_routing(self, shards: Sequence[int] | None = None) -> None:
         """Persist one centroid per shard (the routing table), along with
         the (count, vsum) sufficient statistics that make later updates
-        O(batch): centroid = float32(vsum / count).
-
-        One declarative pass over the node table — posexplode + partial-agg
-        per (shard, dim), so the shuffle carries num_shards x dims partial
-        sums, never rows. At 1000 shards x 768 dims the table is ~3 MB:
-        small enough to collect on the driver per query batch.
+        O(batch): centroid = float32(vsum / count), and, for a labelled
+        kmeans index, the (shard, label) sidecar. One ``_shard_totals``
+        pass over the node table, the statistics the build writes.
 
         With ``shards``, only those partitions are re-aggregated (partition
         pruning on the shard column) and merged driver-side with the stored
@@ -1588,60 +1796,36 @@ class DiskannIndex:
         ``_apply_routing_delta`` path instead."""
         nodes = self.nodes()
         touched = sorted({int(s) for s in shards}) if shards is not None else None
-        stored = None
+        # label -> shards sidecar: serving's label-aware routing widening
+        # reads THIS (labels x shards rows) instead of running a distinct
+        # over the corpus per query batch (kmeans only — hash shards never
+        # route, so the sidecar would be dead weight AND go stale on hash
+        # inserts, which skip _write_routing entirely); tombstones only
+        # ever over-include a shard (recall-safe)
+        labelled = self.meta.has_labels and self.meta.shard_assignment == "kmeans"
+        stored = stored_pairs = None
         if touched is not None:
             rows = self._routing_rows()
             stored = {r[0]: r for r in rows} if rows and rows[0][2] is not None else None
-            if stored is None:
-                # no stored stats to merge with: an incremental update must
-                # degrade to the full recompute, never write a partial table
+            stored_pairs = self._stored_label_pairs() if labelled else set()
+            if stored is None or stored_pairs is None:
+                # no stored stats or label sidecar to merge with (e.g. an
+                # index migrated from a pre-sidecar format): an incremental
+                # update must degrade to the full recompute, never write a
+                # partial table
                 touched = None
         if touched is not None:
             nodes = nodes.filter(F.col("shard").isin(touched))
-        cent = (
-            nodes
-            .select("shard", F.posexplode("vector").alias("dim", "v"))
-            .groupBy("shard", "dim")
-            .agg(F.sum(F.col("v").cast("double")).alias("s"), F.count("*").alias("c"))
-            .groupBy("shard")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("dim", "s"))).alias("_s"),
-                F.max("c").alias("count"),
-            )
-            .select(
-                "shard",
-                F.expr("transform(_s, x -> cast(x.s / count as float))").alias("centroid"),
-                "count",
-                F.expr("transform(_s, x -> x.s)").alias("vsum"),
-            )
-        )
-        fresh = [
-            (int(r["shard"]), list(r["centroid"]), int(r["count"]), list(r["vsum"]))
-            for r in cent.collect()
-        ]
+        totals = _shard_totals(nodes, *self._totals_bound())
+        fresh = _routing_rows_of(totals)
+        pairs = _label_pairs_of(totals)
         if touched is not None:
-            # the table is tiny (num_shards rows): merge on the driver
+            # the tables are tiny (num_shards rows): merge on the driver
             fresh = [row for s, row in stored.items() if s not in touched] + fresh
+            pairs |= {p for p in stored_pairs if p[0] not in touched}
         self._write_routing_rows(fresh)
-        if self.meta.has_labels and self.meta.shard_assignment == "kmeans":
-            # label -> shards sidecar: serving's label-aware routing widening
-            # reads THIS (labels x shards rows) instead of running a distinct
-            # over the corpus per query batch. Maintained with the same
-            # touched-shard merge (kmeans only — hash shards never route, so
-            # the sidecar would be dead weight AND go stale on hash inserts,
-            # which skip _write_routing entirely); tombstones only ever
-            # over-include a shard (recall-safe).
-            stored_pairs = self._stored_label_pairs() if touched is not None else None
-            # an incremental update with NO stored sidecar (e.g. the first
-            # mutation on an index migrated from a pre-sidecar format) must
-            # aggregate ALL shards — writing only the touched shards' labels
-            # would make _label_shards unroute every other shard's labels
-            if stored_pairs is None:
-                self._write_label_pairs(_label_pairs(self.nodes()))
-            else:
-                self._write_label_pairs(
-                    _label_pairs(nodes) | {p for p in stored_pairs if p[0] not in touched}
-                )
+        if labelled:
+            self._write_label_pairs(pairs)
 
     def _routing_table(self) -> tuple[np.ndarray, np.ndarray] | None:
         """(shard_ids, centroid_matrix) or None for pre-routing indexes."""
@@ -1694,9 +1878,6 @@ class DiskannIndex:
                 f"index at {self.path} has no routing table: the recall "
                 "curve only exists for kmeans-sharded indexes"
             )
-        from pgvectorscale_spark.operators.knn import search_exact_batch
-
-        sids, cents = table
         live = self.nodes().filter(~F.coalesce(F.col("deleted"), F.lit(False)))
         live_count = live.count()
         # Deterministic sample in xxhash64(node_id) order, NOT smallest-id
@@ -1707,54 +1888,53 @@ class DiskannIndex:
         # saturates the curve at p=1 regardless of how real queries route
         # (the round-10 64x degenerate curve). Hash order is uncorrelated
         # with the seed rule and with any id-assignment pattern in the
-        # data, and stays reproducible (ties broken by id).
+        # data, and stays reproducible (ties broken by id). The build takes
+        # the same sample from its corpus facts pass.
         sample = (
             live.select("node_id", "vector")
             .orderBy(F.xxhash64("node_id").asc(), F.col("node_id").asc())
             .limit(int(sample_queries))
             .collect()
         )
-        if not sample:
+        qids = np.array([int(r["node_id"]) for r in sample], dtype=np.int64)
+        qmat = np.array([r["vector"] for r in sample], dtype=np.float64)
+        return self._tune_routing(table, live, live_count, qids, qmat, k, held_out)
+
+    def _tune_routing(
+        self, table, live: DataFrame, live_count: int, qids: np.ndarray,
+        qmat: np.ndarray, k: int, held_out: bool,
+    ) -> dict[str, float]:
+        """``tune_routing`` for a given routing table, live (node_id, shard,
+        vector) frame, its row count and the sample queries: one exact pass
+        that carries each neighbor's shard."""
+        from pgvectorscale_spark.operators.knn import _exact_topk
+
+        if not len(qids):
             raise ValueError("cannot tune routing on an empty index")
         if held_out and live_count <= 1:
             raise ValueError(
                 "cannot tune routing held-out on a 1-row index: a held-out "
                 "query has no neighbors left to route to"
             )
-        qids = [int(r["node_id"]) for r in sample]
-        qmat = np.array([r["vector"] for r in sample], dtype=np.float64)
-        qdf = self.spark.createDataFrame(
-            [(qid, [float(x) for x in row]) for qid, row in zip(qids, qmat)],
-            "query_id long, query_vec array<float>",
-        )
+        sids, cents = table
         # held-out: ask for k+1 and drop each query's own row (if present)
         # so every query keeps its k nearest OTHER vectors — the exact pass
         # still runs once over the full corpus (filtering the corpus per
         # query would need sample_queries passes)
-        topk = search_exact_batch(
-            live.select("node_id", "vector"),
-            qdf,
-            k=k + 1 if held_out else k,
-            distance_type=self.meta.distance_type,
-            vector_col="vector",
-            id_col="node_id",
-            impl="numpy",
+        topk = _exact_topk(
+            live, qids, qmat, k + 1 if held_out else k, self.meta.distance_type,
+            "vector", "node_id", carry=("shard",),
         ).collect()
         by_q: dict[int, list[int]] = {}
+        shard_of: dict[int, int] = {}
         for r in sorted(topk, key=lambda r: (int(r["query_id"]), int(r["rank"]))):
             qid, nid = int(r["query_id"]), int(r["node_id"])
             if held_out and nid == qid:
                 continue
             if len(by_q.setdefault(qid, [])) < k:
                 by_q[qid].append(nid)
-        ids = sorted({nid for nids in by_q.values() for nid in nids})
-        shard_of = {
-            int(r["node_id"]): int(r["shard"])
-            for r in self.nodes()
-            .select("node_id", "shard")
-            .filter(F.col("node_id").isin(ids))
-            .collect()
-        }
+                shard_of[nid] = int(r["shard"])
+        qids = [int(q) for q in qids]
         if self.meta.distance_type == DistanceType.COSINE.value:
             qmat = np_normalize(qmat)
             cents = np_normalize(cents)
@@ -1905,7 +2085,7 @@ class DiskannIndex:
             # over-include, recall-safe — same semantics as the re-agg path)
             pairs = self._stored_label_pairs()
             self._write_label_pairs(
-                _label_pairs(self.nodes())
+                _label_pairs_of(_shard_totals(self.nodes(), *self._totals_bound()))
                 if pairs is None
                 else pairs | {(s, l) for s, a in add.items() for l in a[2]}
             )
@@ -2922,13 +3102,33 @@ class DiskannIndex:
             # never legitimately empty (readers rely on this to raise on a
             # missing override instead of serving an empty shard)
             gen_rel = f"nodes_gens/{uuid.uuid4().hex[:12]}"
-            # shard-pruned merge view: the fold reads ONLY the touched
-            # shards' partitions (a post-window filter would not push
-            # below the dedupe window — see nodes())
-            merged = self.nodes(shards=sorted(touched))
+            # one task per touched shard merges it executor-locally, the
+            # way serving reads it (_read_shard_pdf: base or fold override
+            # + the chain, latest generation wins per node_id) — no
+            # corpus shuffle, no JVM window over base ∪ delta, and one
+            # file per shard
+            store, shards = self._store(), sorted(touched)
+            cols = [c for c in _node_cols() if c != "shard"]
+
+            def merge(batches):
+                for pdf in batches:
+                    for s in pdf["shard"]:
+                        rows = _read_shard_pdf(store, int(s), cols)
+                        if len(rows):
+                            yield rows.assign(shard=np.int32(s))[_node_cols()]
+
+            merged = (
+                self.spark.range(0, len(shards), 1, len(shards))
+                .select(
+                    F.element_at(
+                        F.array(*[F.lit(s) for s in shards]), F.col("id").cast("int") + 1
+                    ).alias("shard")
+                )
+                .mapInPandas(merge, schema=_NODE_SCHEMA)
+            )
             # the write also counts the touched shards' live rows
             obs = Observation(f"fold_{gen_rel}")
-            merged.select(_node_cols()).observe(
+            merged.observe(
                 obs, F.count(F.when(~F.coalesce(F.col("deleted"), F.lit(False)), 1)).alias("live")
             ).write.partitionBy("shard").parquet(os.path.join(self.path, gen_rel))
             live_touched = int(obs.get["live"])

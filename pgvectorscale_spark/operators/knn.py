@@ -154,13 +154,34 @@ def _batch_numpy(
     qrows = queries_df.select(query_id_col, query_vec_col).collect()
     qids = np.array([r[0] for r in qrows])
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
+    return _exact_topk(
+        df, qids, qmat, k, distance_type, vector_col, id_col, query_id_col, num_dims
+    )
+
+
+def _exact_topk(
+    df: DataFrame,
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    k: int,
+    distance_type: str,
+    vector_col: str,
+    id_col: str,
+    query_id_col: str = "query_id",
+    num_dims: int | None = None,
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """``search_exact_batch``'s numpy path for driver-held query vectors:
+    (query_id, id, distance, *carry, rank), ``carry`` columns riding along
+    from the corpus row. Each Arrow batch keeps its exact top-k per query
+    (a superset of the global top-k), and a window ranks their union."""
     if num_dims:
         qmat = qmat[:, :num_dims]
     spark = df.sparkSession
     b_q = spark.sparkContext.broadcast((qids, qmat))
 
     src = df.filter(F.col(vector_col).isNotNull()).select(
-        F.col(id_col).alias("_id"), F.col(vector_col).alias("_vec")
+        F.col(id_col).alias("_id"), F.col(vector_col).alias("_vec"), *carry
     )
 
     def score(batches: Iterable[pd.DataFrame]):
@@ -172,7 +193,7 @@ def _batch_numpy(
             mat = np.stack(pdf["_vec"].to_numpy()).astype(np.float64)
             if num_dims:
                 mat = mat[:, :num_dims]
-            out_qid, out_id, out_dist = [], [], []
+            out_qid, out_at, out_dist = [], [], []
             for qi in range(len(qids_l)):
                 d = np_distance(mat, qmat_l[qi], distance_type)
                 # local top-k before shuffle: argpartition then exact sort
@@ -182,14 +203,18 @@ def _batch_numpy(
                     part = np.arange(len(d))
                 order = part[np.lexsort((ids[part], d[part]))]
                 out_qid.extend([qids_l[qi]] * len(order))
-                out_id.extend(ids[order])
+                out_at.extend(order)
                 out_dist.extend(d[order])
-            yield pd.DataFrame(
-                {query_id_col: out_qid, id_col: out_id, "distance": out_dist}
+            out = pd.DataFrame(
+                {query_id_col: out_qid, id_col: ids[out_at], "distance": out_dist}
             )
+            for c in carry:
+                out[c] = pdf[c].to_numpy()[out_at]
+            yield out
 
-    schema = f"{query_id_col} long, {id_col} long, distance double"
-    local = src.mapInPandas(score, schema=schema)
+    fields = [f"{query_id_col} long", f"{id_col} long", "distance double"]
+    fields += [f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields[2:]]
+    local = src.mapInPandas(score, schema=", ".join(fields))
     w = Window.partitionBy(query_id_col).orderBy(F.col("distance").asc(), F.col(id_col).asc())
     return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 

@@ -122,23 +122,14 @@ def write_base(
     """Write a fresh FULL sidecar from ``pairs_df`` (node_id, part) and
     point the meta at it (caller commits via meta.save — until then the
     new dir is an unreferenced orphan, crash-safe). One file per rb
-    partition via the explicit repartition: the sidecar is read
-    bucket-pruned, so fragment count per bucket matters more than write
-    parallelism."""
+    partition (``_write_buckets``): the sidecar is read bucket-pruned, so
+    fragment count per bucket matters more than write parallelism."""
     b = int(buckets or DEFAULT_BUCKETS)
     rel = f"{ROUTING_PARENT}/{uuid.uuid4().hex[:12]}"
-    (
-        _pairs(pairs_df, part_col)
-        .withColumn(RB, _bucket_col("node_id", b))
-        # collision-free proxy of rb (round 14): repartition(b, RB) hashes
-        # b keys into b partitions, which collides (guide §2.5) and runs
-        # the corpus-sized sidecar write in max-load waves
-        .withColumn("_pid", proxy_partition_col(F.col(RB), range(b)))
-        .repartition(b, "_pid")
-        .drop("_pid")
-        .write.mode("overwrite")
-        .partitionBy(RB)
-        .parquet(os.path.join(index_path, rel))
+    _write_buckets(
+        _pairs(pairs_df, part_col).withColumn(RB, _bucket_col("node_id", b)),
+        b,
+        os.path.join(index_path, rel),
     )
     old = generations(meta)
     meta.routing_ids_rel = rel
@@ -149,6 +140,32 @@ def write_base(
     # orphan reconciliation; queue them as trash for promptness
     if old:
         meta.trash_dirs = list(dict.fromkeys(list(meta.trash_dirs) + old))
+
+
+def _write_buckets(rows: DataFrame, buckets: int, dest: str) -> None:
+    """Write (node_id, part, rb) rows partitioned by rb, one file per
+    bucket: each of min(buckets, parallelism) tasks holds whole buckets
+    (rb ≡ task mod tasks), so the writer's per-task sort by rb leaves one
+    file each. One task per bucket would pay a task's fixed cost per file
+    — 64 tiny tasks where a few suffice. The repartition key is a
+    collision-free proxy of the task number (round 14, guide §2.5):
+    hashing ``tasks`` keys into ``tasks`` partitions would collide and run
+    the write in max-load waves."""
+    tasks = max(1, min(buckets, rows.sparkSession.sparkContext.defaultParallelism))
+    (
+        rows.withColumn(
+            "_pid", proxy_partition_col(F.pmod(F.col(RB), F.lit(tasks)), range(tasks))
+        )
+        .repartition(tasks, "_pid")
+        .drop("_pid")
+        # each bucket's rows grouped by part, ids ascending: the part
+        # column encodes as a few runs, and the file content no longer
+        # depends on shuffle arrival order
+        .sortWithinPartitions(RB, "part", "node_id")
+        .write.mode("overwrite")
+        .partitionBy(RB)
+        .parquet(dest)
+    )
 
 
 def append_delta(pairs_df: DataFrame, index_path: str, meta, part_col: str = "part") -> None:
@@ -280,17 +297,9 @@ def maybe_compact(spark: SparkSession, index_path: str, meta) -> None:
             "node_id", "part", RB
         )
         u = f if u is None else u.unionByName(f)
-    b = int(meta.routing_ids_buckets)
     new_rel = f"{ROUTING_PARENT}/{uuid.uuid4().hex[:12]}"
-    (
-        u.distinct()
-        # same collision-free proxy as write_base (round 14, guide §2.5)
-        .withColumn("_pid", proxy_partition_col(F.col(RB), range(b)))
-        .repartition(b, "_pid")
-        .drop("_pid")
-        .write.mode("overwrite")
-        .partitionBy(RB)
-        .parquet(os.path.join(index_path, new_rel))
+    _write_buckets(
+        u.distinct(), int(meta.routing_ids_buckets), os.path.join(index_path, new_rel)
     )
     meta.routing_ids_rel = new_rel
     meta.routing_ids_deltas = []

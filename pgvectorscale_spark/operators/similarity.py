@@ -17,6 +17,7 @@ from collections import OrderedDict
 from typing import Sequence
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -127,7 +128,10 @@ def _rows_to_centroids(rows) -> tuple[np.ndarray, np.ndarray]:
     INHERITED, not new — the previous crossJoin shape broadcast the same
     centroid relation (and Spark caps any broadcast at 8 GB) — so the
     assignment kernel does not change which centroid counts are feasible,
-    only the constant (no per-row struct overhead in the matrix form)."""
+    only the constant (no per-row struct overhead in the matrix form).
+    The DiskANN build enforces it: it refuses a centroid count whose
+    matrix (and per-centroid sums) would pass its collect budget before
+    anything is collected."""
     rows = sorted(rows, key=lambda r: int(r[0]))
     cids = np.array([int(r[0]) for r in rows], dtype=np.int64)
     if not len(rows):
@@ -318,6 +322,140 @@ def _probe_frames_cached(
     return entry
 
 
+_SUMS_SCHEMA = "cid long, n long, vsum array<double>, dim_n array<long>, max_len long"
+
+
+def _centroid_sums(batches, cmat: np.ndarray, vector_col: str):
+    """One Lloyd round's partial sums over a partition: each row goes to
+    its nearest centroid (``_assign_nearest``'s rules: squared L2, ties to
+    the lowest index, NULL and length-mismatched vectors to index 0), and
+    each centroid gets its row count and float64 vector sum. Per-dimension
+    element counts (``dim_n``) ship only for a centroid that received a
+    short row or a NULL element — the rows the former posexplode → avg
+    chain counted per dimension; elsewhere they all equal ``n``."""
+    k, d = cmat.shape
+    idx = np.arange(k, dtype=np.int64)
+    n = np.zeros(k, dtype=np.int64)
+    sums = np.zeros((k, d))
+    dim_n = np.zeros((k, d), dtype=np.int64)
+    odd = np.zeros(k, dtype=bool)
+    max_len = -1
+    for pdf in batches:
+        vec = pdf[vector_col].to_numpy()
+        lens = np.fromiter((-1 if v is None else len(v) for v in vec), np.int64, len(vec))
+        if not len(lens):
+            continue
+        max_len = max(max_len, int(lens.max()))
+        full = np.flatnonzero(lens == d)
+        mat = np.stack(vec[full]).astype(np.float64) if len(full) else np.zeros((0, d))
+        sel = _nearest(mat, idx, cmat, "l2")[0] if len(full) else idx[:0]
+        bad = np.isnan(mat).any(axis=1)
+        good = ~bad
+        if good.any():
+            g, m = sel[good], mat[good]
+            o = np.argsort(g, kind="stable")
+            g, m = g[o], m[o]
+            starts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
+            c = g[starts]
+            sums[c] += np.add.reduceat(m, starts, axis=0)
+            cnt = np.diff(np.r_[starts, len(g)])
+            n[c] += cnt
+            dim_n[c] += cnt[:, None]
+        # rows outside the fast path: NULL elements (their row is nearest
+        # to nothing, so index 0 like a mismatched row), short and long rows
+        slow = [mat[i] for i in np.flatnonzero(bad)]
+        slow_at = [int(sel[i]) for i in np.flatnonzero(bad)]
+        for i in np.flatnonzero((lens >= 0) & (lens != d)):
+            slow.append(np.asarray(vec[i], dtype=np.float64)[:d])
+            slow_at.append(0)
+        for v, c in zip(slow, slow_at):
+            ok = ~np.isnan(v)
+            n[c] += 1
+            sums[c, : len(v)] += np.where(ok, v, 0.0)
+            dim_n[c, : len(v)] += ok
+            odd[c] = True
+    rows = [
+        (int(c), int(n[c]), sums[c], dim_n[c] if odd[c] else None, max_len)
+        for c in np.flatnonzero(n)
+    ]
+    yield pd.DataFrame(rows, columns=["cid", "n", "vsum", "dim_n", "max_len"])
+
+
+_COLLECT_BUDGET_BYTES = 64 << 20
+
+
+def _within_budget(df: DataFrame, task_bytes: int, budget: int) -> DataFrame:
+    """``df`` coalesced (no shuffle) to at most ``budget // task_bytes``
+    tasks, and at least one: a pass returning ``task_bytes`` of partial
+    results per task then collects at most ``budget`` bytes (or one
+    task's worth, when that alone is larger). Below the cap the
+    partitioning is unchanged."""
+    return df.coalesce(max(1, budget // max(1, task_bytes)))
+
+
+def _kmeans_fit(
+    src: DataFrame,
+    num_centroids: int,
+    iterations: int,
+    vector_col: str,
+    id_col: str,
+    budget: int = _COLLECT_BUDGET_BYTES,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Lloyd iterations over ``src`` (persisted by the caller), returning
+    (centroid ids ascending, float64 centroid matrix) on the driver.
+
+    Seeds are the ``num_centroids`` lowest-id vectors (Spark's
+    takeOrdered, which holds k rows on the driver), so the training is
+    deterministic. Each round is ONE map-only pass (``_centroid_sums``)
+    whose per-task (count, vector sum) per centroid the driver adds up in
+    task order: no shuffle, one Spark job. The pass runs in at most
+    ``budget // (k x (dims + 1) x 8)`` tasks, so the partial sums the
+    driver collects stay within ``budget`` bytes whatever the input's
+    partitioning. A centroid that no row reaches drops out, as an empty
+    groupBy group did."""
+    cids, cmat = _rows_to_centroids(
+        src.orderBy(F.col(id_col).asc())
+        .limit(num_centroids)
+        .select(F.col(id_col), F.col(vector_col).cast("array<double>"))
+        .collect()
+    )
+    if len(cids):
+        src = _within_budget(src, cmat.size * 8 + len(cids) * 8, budget)
+    for _ in range(iterations):
+        if not len(cids):
+            break
+        b = src.sparkSession.sparkContext.broadcast(cmat)
+        parts = (
+            src.select(vector_col)
+            .mapInPandas(
+                lambda it: _centroid_sums(it, b.value, vector_col), schema=_SUMS_SCHEMA
+            )
+            .collect()
+        )
+        b.unpersist()
+        k, d = cmat.shape
+        n = np.zeros(k, dtype=np.int64)
+        sums = np.zeros((k, d))
+        dim_n = np.zeros((k, d), dtype=np.int64)
+        for r in parts:
+            if r["max_len"] > d:
+                raise ValueError(
+                    f"k-means input has a {r['max_len']}-dimension vector; "
+                    f"the seeds have {d}"
+                )
+            c = int(r["cid"])
+            n[c] += r["n"]
+            sums[c] += np.asarray(r["vsum"])
+            dim_n[c] += r["n"] if r["dim_n"] is None else np.asarray(r["dim_n"])
+        # avg per (centroid, dim) over the elements present; a centroid
+        # holding only short rows comes out short, and the matrix ragged
+        keep = np.flatnonzero(dim_n.max(axis=1) > 0) if d else np.flatnonzero(n)
+        rows = [sums[c][dim_n[c] > 0] / dim_n[c][dim_n[c] > 0] for c in keep]
+        cids = cids[keep]
+        cmat = np.array(rows, dtype=np.float64) if rows else np.zeros((0, d))
+    return cids, cmat
+
+
 def kmeans_centroids(
     df: DataFrame,
     num_centroids: int = 16,
@@ -325,52 +463,22 @@ def kmeans_centroids(
     vector_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Declarative Lloyd iterations: the quality upgrade over lowest-id seeds.
+    """Lloyd iterations: the quality upgrade over lowest-id seeds.
 
-    Each round = one map-only assignment (``_assign_nearest`` against the
-    collected centroid matrix — round 14; the old broadcast-crossJoin +
-    min_by SortAggregated an n × centroids intermediate per round) + one
-    map-side-combined aggregate (posexplode -> avg per (cluster, dim));
-    centroids stay tiny and driver-resident, the corpus is scanned
-    ``iterations`` times and never shuffled whole (the shuffle carries
-    num_centroids x dims partial sums per task). Seeds are the lowest-id
-    vectors, so the whole training is deterministic. Iterations run
-    EAGERLY (one job per round) instead of unrolling into one lazy plan,
-    so repeated actions on the result no longer re-train.
+    Seeds are the lowest-id vectors, so the whole training is
+    deterministic. Each round is one map-only pass returning per-task
+    partial sums per centroid (``_kmeans_fit``); centroids stay tiny and
+    driver-resident, and the corpus is scanned ``iterations`` times and
+    never shuffled. Iterations run EAGERLY (one job per round) instead of
+    unrolling into one lazy plan, so repeated actions on the result no
+    longer re-train.
 
     Returns (centroid_id, centroid array<double>) — centroid_id ascending.
     """
-    spark = df.sparkSession
     src = df.select(F.col(id_col), F.col(vector_col)).persist()
     try:
-        crows = (
-            src.orderBy(F.col(id_col).asc())
-            .limit(num_centroids)
-            .select(
-                F.col(id_col).alias("centroid_id"),
-                F.col(vector_col).cast("array<double>").alias("_cv"),
-            )
-            .collect()
-        )
-        cids, cmat = _rows_to_centroids(crows)
-        for _ in range(iterations):
-            if not len(cids):
-                break
-            assigned = _assign_nearest(src, cids, cmat, "l2", vector_col)
-            crows = (
-                assigned.select("centroid_id", F.posexplode(vector_col).alias("dim", "v"))
-                .groupBy("centroid_id", "dim")
-                .agg(F.avg("v").alias("m"))
-                .groupBy("centroid_id")
-                .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("_s"))
-                .select(
-                    "centroid_id",
-                    F.expr("transform(_s, x -> x.m)").alias("_cv"),
-                )
-                .collect()
-            )
-            cids, cmat = _rows_to_centroids(crows)
-        return spark.createDataFrame(
+        cids, cmat = _kmeans_fit(src, num_centroids, iterations, vector_col, id_col)
+        return df.sparkSession.createDataFrame(
             [(int(c), [float(x) for x in v]) for c, v in zip(cids, cmat)],
             "centroid_id long, centroid array<double>",
         )

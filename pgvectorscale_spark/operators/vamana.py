@@ -49,6 +49,18 @@ from pgvectorscale_spark.types import (
 __all__ = ["VamanaGraph"]
 
 
+def _occlusion(D: np.ndarray, cand_dist: np.ndarray) -> np.ndarray:
+    """Occlusion factor d(candidate j, point) / d(candidate j, selected i)
+    for every (i, j) of a pairwise matrix ``D`` (graph/mod.rs:392-488); a
+    zero d(j, i) occludes j outright unless j sits on the point itself."""
+    pos = D > 0  # the inner where guards the division: no 0-divide
+    return np.where(
+        pos,
+        cand_dist / np.where(pos, D, 1.0),
+        np.where(cand_dist > 0, np.inf, 1.0),
+    )
+
+
 def _labels_overlap(a: frozenset | None, b: frozenset | None) -> bool:
     if not a or not b:
         return False
@@ -156,28 +168,62 @@ class VamanaGraph:
         return np_distance(self.mat[idxs], q, self.distance_type, assume_normalized=True)
 
     def _pairwise_dists(self, idxs: np.ndarray) -> np.ndarray:
-        """(m, m) graph-internal distance matrix among candidates — one BLAS
-        gram (or one broadcast XOR) instead of m matvecs inside the prune."""
+        """(..., m, m) graph-internal distance matrix among the candidates of
+        each row of ``idxs`` ((m,) or (B, m)) — one BLAS gram per row
+        instead of m matvecs inside the prune. matmul runs one gemm per
+        slice, the same kernel for a single row and for a stack, so the
+        serial and batched prunes see bit-identical geometry."""
         if self.codes is not None:
-            c = self.codes[idxs]
-            x = np.bitwise_xor(c[:, None, :], c[None, :, :])
-            if hasattr(np, "bitwise_count"):
-                return np.bitwise_count(x).sum(axis=2).astype(np.float64)
-            b = x.view(np.uint8).reshape(len(idxs), len(idxs), -1)
-            from pgvectorscale_spark.functions.distance import _POPCOUNT_LUT
-
-            return _POPCOUNT_LUT[b].sum(axis=2).astype(np.float64)
+            # Hamming as |a| + |b| - 2 a·b over the unpacked bits: one float32
+            # gemm per row, exact (integer counts far below 2**24) and several
+            # times faster than a (m, m, words) XOR popcount
+            bits = np.unpackbits(self.codes[idxs].view(np.uint8), axis=-1)
+            bits = bits.astype(np.float32)
+            pc = bits.sum(axis=-1)
+            dots = bits @ np.swapaxes(bits, -1, -2)
+            return (pc[..., :, None] + pc[..., None, :] - 2.0 * dots).astype(np.float64)
         # float32 throughout: build-side candidate geometry only (serving
         # rescore stays float64); f32 GEMMs are ~2x the f64 throughput and
         # the downstream prune/argpartition are dtype-agnostic
         sub = self.mat[idxs]
-        g = sub @ sub.T
+        g = sub @ np.swapaxes(sub, -1, -2)
         if self.distance_type == "l2":
             n = self._sqnorms[idxs]
-            return np.maximum(n[:, None] + n[None, :] - 2.0 * g, 0.0)
+            return np.maximum(n[..., :, None] + n[..., None, :] - 2.0 * g, 0.0)
         if self.distance_type == "cosine":
             return np.maximum(1.0 - g, 0.0)
         return -g
+
+    def _dists_to_points(self, pts: np.ndarray, ci: np.ndarray) -> np.ndarray:
+        """(B, K) graph-internal distances from stored node pts[b] to its
+        stored candidates ci[b] — per-slice gemv (or XOR), bit-identical to
+        ``_dists_to_point`` row by row."""
+        if self.codes is not None:
+            return np_hamming(self.codes[ci], self.codes[pts][:, None, :]).astype(np.float64)
+        dots = (self.mat[ci] @ self.mat[pts][:, :, None])[:, :, 0]
+        if self.distance_type == "l2":
+            return np.maximum(
+                self._sqnorms[ci] + self._sqnorms[pts][:, None] - 2.0 * dots, 0.0
+            ).astype(np.float64)
+        if self.distance_type == "cosine":
+            return np.maximum(1.0 - dots, 0.0).astype(np.float64)
+        return (-dots).astype(np.float64)
+
+    def _label_keep(self, cand_idx: np.ndarray, point_labels: frozenset) -> np.ndarray | None:
+        """(m, m) mask: keep[i, j] when selected candidate i may occlude
+        candidate j, i.e. (L_j ∩ P) ⊆ L_i for the point's labels P
+        (labels/mod.rs:85-115 contains_intersection). Built from the (m, |P|)
+        membership matrix M as (1 - M) @ M.T == 0: the count of P-labels j
+        carries that i lacks. None when P is empty (every pair may)."""
+        plist = sorted(point_labels)
+        if not plist:
+            return None
+        labels = self.labels
+        M = np.array(
+            [[p in (labels[int(c)] or ()) for p in plist] for c in cand_idx],
+            dtype=np.float32,
+        ).reshape(len(cand_idx), len(plist))
+        return (1.0 - M) @ M.T == 0
 
     # -- greedy search (G1/G2/G3) -------------------------------------------
 
@@ -288,115 +334,78 @@ class VamanaGraph:
         m = len(cand_idx)
         if m == 0:
             return []
-        # one pairwise matrix up front; each selection then reads a row
-        # instead of issuing its own distance call (the prune runs once per
-        # back-edge overflow — this is the build's second hot loop)
-        D = self._pairwise_dists(cand_idx)
+        # the occlusion factor of candidate j under selected i depends only
+        # on (i, j), so the whole factor matrix vectorizes up front — each
+        # selection is then ONE np.maximum over the tail instead of ~8 numpy
+        # calls (the build's Python floor, ~25 µs -> ~2 µs per selection)
+        Fm = _occlusion(self._pairwise_dists(cand_idx), cand_dist)
+        if point_labels is not None and self.labels is not None:
+            keep_ij = self._label_keep(cand_idx, point_labels)
+            if keep_ij is not None:
+                # a pair outside the label rule imposes no occlusion: factor
+                # 0 never raises a max that starts at 0
+                Fm = np.where(keep_ij, Fm, 0.0)
         max_factors = np.zeros(m)
         results: list[int] = []
         alpha = 1.0
-        labeled = point_labels is not None and self.labels is not None
-        if not labeled:
-            # fast path: the occlusion factor of candidate j under selected i
-            # depends only on (i, j), so the whole factor matrix vectorizes
-            # up front — each selection is then ONE np.maximum over the tail
-            # instead of ~8 numpy calls (the build's Python floor, ~25 µs ->
-            # ~2 µs per selection)
-            pos = D > 0  # the inner where guards the division: no 0-divide
-            Fm = np.where(
-                pos,
-                cand_dist[None, :] / np.where(pos, D, 1.0),
-                np.where(cand_dist[None, :] > 0, np.inf, 1.0),
-            )
-            while alpha <= self.max_alpha and len(results) < self.R:
-                for i in range(m):
-                    if max_factors[i] > alpha:
-                        continue
-                    max_factors[i] = np.inf
-                    results.append(int(cand_idx[i]))
-                    if len(results) >= self.R:
-                        return results
-                    if i + 1 < m:
-                        np.maximum(
-                            max_factors[i + 1 :], Fm[i, i + 1 :], out=max_factors[i + 1 :]
-                        )
-                alpha *= 1.2
-            return results
         while alpha <= self.max_alpha and len(results) < self.R:
             for i in range(m):
-                if len(results) >= self.R:
-                    return results
                 if max_factors[i] > alpha:
                     continue
                 max_factors[i] = np.inf
-                sel = int(cand_idx[i])
-                results.append(sel)
-                if i + 1 >= m:
-                    continue
-                live = np.arange(i + 1, m)[max_factors[i + 1 :] <= self.max_alpha]
-                if len(live) == 0:
-                    continue
-                if labeled:
-                    sel_labels = self.labels[sel] or frozenset()
-                    keep_mask = np.array(
-                        [
-                            ((self.labels[int(cand_idx[j])] or frozenset()) & point_labels)
-                            <= sel_labels
-                            for j in live
-                        ]
+                results.append(int(cand_idx[i]))
+                if len(results) >= self.R:
+                    return results
+                if i + 1 < m:
+                    np.maximum(
+                        max_factors[i + 1 :], Fm[i, i + 1 :], out=max_factors[i + 1 :]
                     )
-                    live = live[keep_mask]
-                    if len(live) == 0:
-                        continue
-                d_ce = D[i, live]
-                d_cp = cand_dist[live]
-                safe = np.where(d_ce > 0, d_ce, 1.0)
-                factor = np.where(d_ce > 0, d_cp / safe, np.where(d_cp > 0, np.inf, 1.0))
-                max_factors[live] = np.maximum(max_factors[live], factor)
             alpha *= 1.2
         return results
 
-    def _batch_prune_unlabeled(
-        self, cand_idx: np.ndarray, cand_dist: np.ndarray
+    def _batch_prune(
+        self,
+        cand_idx: np.ndarray,
+        cand_dist: np.ndarray,
+        point_labels: Sequence[frozenset | None] | None = None,
     ) -> list[list[int]]:
-        """robust_prune for a whole BLOCK of points at once (unlabeled fast
-        path): one batched (B, K, K) pairwise GEMM + one vectorized
-        selection sweep, instead of B independent Python prune loops — the
-        bulk build's remaining CPU floor (~45% at 20k was per-selection
-        bookkeeping). Row b's output is IDENTICAL to
-        ``robust_prune(point_b, cand_idx[b], cand_dist[b])`` given rows of
-        unique non-self candidates (which exact top-K over the processed
-        prefix guarantees by construction).
-        """
+        """robust_prune for a whole BLOCK of points at once: one batched
+        (B, K, K) pairwise geometry + one vectorized selection sweep,
+        instead of B independent Python prune loops — the bulk build's
+        remaining CPU floor (~45% at 20k was per-selection bookkeeping).
+        ``point_labels[b]`` masks row b's factors with the label rule.
+        Row b's output is IDENTICAL to ``robust_prune(point_b,
+        cand_idx[b], cand_dist[b], point_labels[b])`` given rows of unique
+        non-self candidates (which exact top-K over the processed prefix,
+        and every stored neighbor list, guarantee by construction)."""
         B, K = cand_idx.shape
+        # the (B, K, K) factor tensor is the only sizeable intermediate:
+        # chunk rows so it stays ~32 MB whatever the block and list length
+        step = max(1, (1 << 22) // max(K * K, 1))
+        if B > step:
+            return [
+                lst
+                for s in range(0, B, step)
+                for lst in self._batch_prune(
+                    cand_idx[s : s + step],
+                    cand_dist[s : s + step],
+                    None if point_labels is None else point_labels[s : s + step],
+                )
+            ]
         ids = self.ids
         order = np.stack(
             [np.lexsort((ids[cand_idx[b]], cand_dist[b])) for b in range(B)]
         )
         ci = np.take_along_axis(cand_idx, order, axis=1)
         cd = np.take_along_axis(cand_dist, order, axis=1)
-        # batched pairwise geometry among each row's candidates. matmul (one
-        # BLAS gemm per slice — the same kernel the serial prune's gram
-        # uses) rather than einsum: einsum's different accumulation order
-        # can flip f32 occlusion factors sitting exactly on an alpha
-        # boundary, breaking bit-parity with robust_prune.
-        sub = self.mat[ci]  # (B, K, d)
-        G = sub @ sub.transpose(0, 2, 1)
-        if self.distance_type == "l2":
-            nn = self._sqnorms[ci]
-            D = np.maximum(nn[:, :, None] + nn[:, None, :] - 2.0 * G, 0.0)
-        elif self.distance_type == "cosine":
-            D = np.maximum(1.0 - G, 0.0)
-        else:
-            D = -G
-        pos = D > 0
         # occlusion factor selecting candidate i imposes on candidate j:
-        # Fm[b, i, j] (same formula as the serial fast path)
-        Fm = np.where(
-            pos,
-            cd[:, None, :] / np.where(pos, D, 1.0),
-            np.where(cd[:, None, :] > 0, np.inf, 1.0),
-        )
+        # Fm[b, i, j] (same formula and geometry as robust_prune)
+        Fm = _occlusion(self._pairwise_dists(ci), cd[:, None, :])
+        if point_labels is not None and self.labels is not None:
+            for b, pl in enumerate(point_labels):
+                keep_ij = self._label_keep(ci[b], pl) if pl is not None else None
+                if keep_ij is not None:
+                    Fm[b] = np.where(keep_ij, Fm[b], 0.0)
         maxf = np.zeros((B, K))
         counts = np.zeros(B, dtype=np.int64)
         sel_round = np.full((B, K), -1, dtype=np.int32)
@@ -428,6 +437,11 @@ class VamanaGraph:
 
     def _point_labels(self, i: int) -> frozenset | None:
         return self.labels[i] if self.labels is not None else None
+
+    def _labels_of(self, points) -> list[frozenset | None] | None:
+        if self.labels is None:
+            return None
+        return [self.labels[int(i)] for i in points]
 
     def _mark_dirty(self, i: int) -> None:
         if self.dirty is not None:
@@ -572,35 +586,37 @@ class VamanaGraph:
             tops = np.stack(
                 [np.argpartition(D[bi], kk - 1)[:kk] for bi in range(len(block))]
             )
-            if self.labels is None:
-                # unlabeled fast path: ONE batched prune for the whole chunk
-                # (identical per-row output to robust_prune), then batched
-                # back-edge overflow prunes (exact replay of the serial
-                # append order — see _apply_backedges_batched)
-                ci = prefix[tops]
-                cd = np.take_along_axis(D, tops, axis=1)
-                lists = self._batch_prune_unlabeled(ci, cd)
-                if getattr(self, "_serial_backedges", False):
-                    # reference path kept for the bit-parity tests
-                    threshold = self._prune_threshold
-                    for bi, i in enumerate(block):
-                        neighbors = lists[bi]
-                        self.adj[i] = neighbors
-                        for b in neighbors:
-                            # no membership check needed here: i attaches
-                            # for the first time and candidates come only
-                            # from the processed prefix, so adj[b] cannot
-                            # contain i yet
-                            self.adj[b].append(i)
-                            if len(self.adj[b]) > threshold:
-                                bidx = np.array(self.adj[b])
-                                bd = self._dists_to_point(b, bidx)
-                                self.adj[b] = self.robust_prune(b, bidx, bd)
-                else:
-                    self._apply_backedges_batched(block, lists)
-            else:
+            # ONE batched prune for the whole chunk (identical per-row
+            # output to robust_prune — no prune reads adjacency, so the
+            # chunk's prunes are independent), then batched back-edge
+            # overflow prunes (exact replay of the serial append order —
+            # see _apply_backedges_batched)
+            ci = prefix[tops]
+            cd = np.take_along_axis(D, tops, axis=1)
+            lists = self._batch_prune(ci, cd, self._labels_of(block))
+            if getattr(self, "_serial_backedges", False):
+                # reference path kept for the bit-parity tests
+                threshold = self._prune_threshold
                 for bi, i in enumerate(block):
-                    self._attach(i, prefix[tops[bi]], D[bi][tops[bi]])
+                    neighbors = lists[bi]
+                    self.adj[i] = neighbors
+                    for b in neighbors:
+                        # no membership check needed here: i attaches
+                        # for the first time and candidates come only
+                        # from the processed prefix, so adj[b] cannot
+                        # contain i yet
+                        self.adj[b].append(i)
+                        if len(self.adj[b]) > threshold:
+                            bidx = np.array(self.adj[b])
+                            bd = self._dists_to_point(b, bidx)
+                            self.adj[b] = self.robust_prune(
+                                b, bidx, bd, point_labels=self._point_labels(b)
+                            )
+            else:
+                self._apply_backedges_batched(block, lists)
+            for i in block:  # the start rule _attach applies, in its order
+                for l in self._point_labels(i) or ():
+                    self.start_by_label.setdefault(l, i)
             processed.extend(block)
         self.codes = stashed_codes
         del self._prune_threshold
@@ -656,20 +672,9 @@ class VamanaGraph:
                     chunk = items[c0 : c0 + 1024]
                     pts = np.array([b for b, _ in chunk])
                     ci = np.array([c for _, c in chunk])  # (B, K)
-                    sub = self.mat[ci]
-                    # per-slice gemv — the same kernel _dists_fast uses per
-                    # node, so candidate distances are bit-identical to the
-                    # serial pass (same construction as finalize())
-                    dots = (sub @ self.mat[pts][:, :, None])[:, :, 0]
-                    if self.distance_type == "l2":
-                        cd = np.maximum(
-                            self._sqnorms[ci] + self._sqnorms[pts][:, None] - 2.0 * dots, 0.0
-                        ).astype(np.float64)
-                    elif self.distance_type == "cosine":
-                        cd = np.maximum(1.0 - dots, 0.0).astype(np.float64)
-                    else:
-                        cd = (-dots).astype(np.float64)
-                    for (b, _), lst in zip(chunk, self._batch_prune_unlabeled(ci, cd)):
+                    cd = self._dists_to_points(pts, ci)
+                    pruned = self._batch_prune(ci, cd, self._labels_of(pts))
+                    for (b, _), lst in zip(chunk, pruned):
                         self.adj[b] = lst
             active = carry
 
@@ -693,47 +698,25 @@ class VamanaGraph:
         incremental insert batch touches only the overflowed (i.e. actually
         modified) nodes — the len() scan itself is O(n) but trivial.
 
-        Unlabeled full-precision graphs batch the prunes (grouped by list
-        length so each group is one rectangular ``_batch_prune_unlabeled``
-        call): every per-node prune here is independent — it reads only the
-        node's own frozen list — so batching is exact, and it removes the
-        dominant Python floor of the bulk build (~1/3 of 20k-shard CPU was
-        one robust_prune call per overflowed node)."""
-        over = [i for i in range(self.n) if len(self.adj[i]) > self.R]
-        if not over:
-            return
-        if self.labels is not None or self.codes is not None:
-            # labeled occlusion / Hamming geometry: per-node path
-            for i in over:
-                idx = np.array(self.adj[i])
-                d = self._dists_to_point(i, idx)
-                self.adj[i] = self.robust_prune(i, idx, d, point_labels=self._point_labels(i))
-            return
+        The prunes are batched (grouped by list length so each group is one
+        rectangular ``_batch_prune`` call, labelled or not, on float or SBQ
+        code geometry): every per-node prune here is independent — it reads
+        only the node's own frozen list — so batching is exact, and it
+        removes the dominant Python floor of the bulk build (~1/3 of
+        20k-shard CPU was one robust_prune call per overflowed node)."""
         groups: dict[int, list[int]] = {}
-        for i in over:
-            groups.setdefault(len(self.adj[i]), []).append(i)
-        # chunk each length-group: the (B, K, K) factor tensor is the only
-        # sizeable intermediate (B=1024, K=65 -> ~35 MB f64), so per-task
-        # memory stays bounded even when one group holds most of a shard
+        for i in range(self.n):
+            if len(self.adj[i]) > self.R:
+                groups.setdefault(len(self.adj[i]), []).append(i)
+        # chunk each length-group so per-task memory stays bounded even when
+        # one group holds most of a shard
         for _, nodes in sorted(groups.items()):
             for c0 in range(0, len(nodes), 1024):
                 chunk = nodes[c0 : c0 + 1024]
                 pts = np.array(chunk)
                 ci = np.array([self.adj[i] for i in chunk])  # (B, K)
-                sub = self.mat[ci]
-                # per-slice gemv — the same kernel _dists_fast uses per
-                # node, so candidate distances are bit-identical to the
-                # serial pass
-                dots = (sub @ self.mat[pts][:, :, None])[:, :, 0]
-                if self.distance_type == "l2":
-                    cd = np.maximum(
-                        self._sqnorms[ci] + self._sqnorms[pts][:, None] - 2.0 * dots, 0.0
-                    ).astype(np.float64)
-                elif self.distance_type == "cosine":
-                    cd = np.maximum(1.0 - dots, 0.0).astype(np.float64)
-                else:
-                    cd = (-dots).astype(np.float64)
-                for i, lst in zip(chunk, self._batch_prune_unlabeled(ci, cd)):
+                cd = self._dists_to_points(pts, ci)
+                for i, lst in zip(chunk, self._batch_prune(ci, cd, self._labels_of(chunk))):
                     self.adj[i] = lst
 
     # -- incremental growth (warm-path micro-batch insert) ---------------------

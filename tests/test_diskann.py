@@ -539,3 +539,158 @@ def test_high_dimensions_and_caps(spark, tmpdir):
         DiskannIndex.build(
             wide, f"{tmpdir}/idx_plaincap", storage_type="plain", distance_type="l2", num_shards=1
         )
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _labelled_clusters(spark, n=600, d=8, seed=7):
+    """Four clusters, five labels, in 4 partitions."""
+    rng = np.random.default_rng(seed)
+    cent = rng.normal(size=(4, d)) * 4
+    mat = (cent[rng.integers(0, 4, n)] + rng.normal(size=(n, d))).astype(np.float32)
+    rows = [(i, mat[i].tolist(), [i % 5]) for i in range(n)]
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 4),
+        "vec_id long, embedding array<float>, labels array<smallint>",
+    )
+
+
+def test_build_runs_in_a_handful_of_jobs(spark, tmpdir):
+    """A kmeans, labelled, SBQ build with a tuned routing curve runs one
+    corpus facts pass, the k-means seeds and rounds, one statistics pass,
+    the graph write, the id sidecar write and one exact tuning pass: at
+    most 12 Spark jobs (35 before the partial-sum k-means and the
+    one-pass statistics)."""
+    df = _labelled_clusters(spark)
+    out = {}
+    jobs = _jobs(
+        spark,
+        lambda: out.setdefault(
+            "idx",
+            DiskannIndex.build(
+                df, f"{tmpdir}/idx_jobs", distance_type="cosine", num_shards=4,
+                shard_assignment="kmeans", label_col="labels",
+            ),
+        ),
+    )
+    idx = out["idx"]
+    assert idx.meta.routing_recall_curve and idx._stored_label_pairs()
+    assert idx.full_scan().count() == 600
+    assert jobs <= 12, jobs
+
+
+def test_corpus_facts_do_not_depend_on_partitioning(spark):
+    """The facts pass folds its per-task rows through one merge, in task
+    order: one partition or sixteen give the same count, dimensions,
+    label bounds and tuning sample, and the same moments up to summation
+    order."""
+    from pgvectorscale_spark.operators.diskann import _scan_corpus
+
+    df = _labelled_clusters(spark, n=300).select(
+        F.col("vec_id").alias("node_id"),
+        F.col("embedding").alias("vector"),
+        F.col("labels").cast("array<long>").alias("labels"),
+    )
+    one = _scan_corpus(df.coalesce(1), moments=True, sample=16)
+    many = _scan_corpus(df.repartition(16), moments=True, sample=16)
+    assert (one["n"], one["dims"], one["dmin"], one["dmax"]) == (300, 8, 8, 8)
+    assert (one["lo"], one["hi"]) == (0, 4)
+    for key in ("n", "dims", "dmin", "dmax", "lo", "hi"):
+        assert many[key] == one[key]
+    assert len(one["sample"][0]) == 16
+    assert one["sample"][0].tolist() == many["sample"][0].tolist()
+    assert np.array_equal(one["sample"][1], many["sample"][1])
+    assert one["moments"][0] == many["moments"][0] == 300
+    for a, b in zip(one["moments"][1:], many["moments"][1:]):
+        np.testing.assert_allclose(a, b, rtol=1e-12)
+
+
+def test_build_refuses_centroid_collect_over_budget(spark, tmpdir, monkeypatch):
+    """The k-means rounds and the statistics pass run in few enough tasks
+    that the per-task partial sums the driver collects fit the collect
+    budget, however many partitions the corpus spans. Only a centroid
+    matrix (with its count column) over the budget refuses the build:
+    after the facts pass, before the k-means seeds."""
+    df = _labelled_clusters(spark, n=200)
+    wide = df.repartition(16)
+    assert wide.rdd.getNumPartitions() == 16
+    # 4 centroids x (8 dims + 1) x 8 bytes = 288 bytes fit; 16 tasks'
+    # partial sums (16 x 288 = 4608 bytes) would not, so the passes run
+    # in one task
+    monkeypatch.setattr(DiskannIndex, "_COLLECT_BUDGET_BYTES", 300)
+    idx = DiskannIndex.build(
+        wide, f"{tmpdir}/idx_wide", distance_type="l2", num_shards=4,
+        shard_assignment="kmeans",
+    )
+    assert idx.full_scan().count() == 200
+    assert sum(r[2] for r in idx._routing_rows()) == 200
+    monkeypatch.setattr(DiskannIndex, "_COLLECT_BUDGET_BYTES", 200)
+
+    def build():
+        with pytest.raises(ValueError, match="centroid sums"):
+            DiskannIndex.build(
+                df, f"{tmpdir}/idx_budget", distance_type="l2", num_shards=4,
+                shard_assignment="kmeans",
+            )
+
+    assert _jobs(spark, build) == 1
+
+
+def test_lifecycle_writes_nothing_to_stdout(tmpdir):
+    """Standard output belongs to the caller (a benchmark prints its result
+    there): a build → search → insert → delete cycle in a fresh process
+    writes nothing to it."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    script = textwrap.dedent(
+        f"""
+        import numpy as np
+        from pyspark.sql import SparkSession
+        from pgvectorscale_spark.operators.diskann import DiskannIndex
+
+        spark = (
+            SparkSession.builder.master("local[2]")
+            .config("spark.ui.enabled", "false")
+            .config("spark.sql.shuffle.partitions", "2")
+            .getOrCreate()
+        )
+        rng = np.random.default_rng(0)
+        mat = rng.normal(size=(240, 8)).astype(np.float32)
+        rows = [(i, mat[i].tolist(), [i % 3]) for i in range(200)]
+        schema = "vec_id long, embedding array<float>, labels array<smallint>"
+        idx = DiskannIndex.build(
+            spark.createDataFrame(rows, schema), {f"{tmpdir}/idx_stdout"!r},
+            num_shards=2, shard_assignment="kmeans", label_col="labels",
+        )
+        idx.search(mat[0].tolist(), k=3).collect()
+        more = [(i, mat[i].tolist(), [i % 3]) for i in range(200, 240)]
+        idx.insert(spark.createDataFrame(more, schema), label_col="labels")
+        idx.delete(list(range(10)))
+        assert idx.search(mat[210].tolist(), k=1).collect()[0]["node_id"] == 210
+        spark.stop()
+        """
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([root, os.environ.get("PYTHONPATH", "")]))
+    res = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, env=env,
+        cwd=root, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert res.stdout == ""

@@ -57,6 +57,37 @@ def test_normalize_zero_vector_passthrough(spark):
     assert out == [0.0, 0.0, 0.0]
 
 
+@pytest.mark.parametrize("dims", [3, 256])
+def test_normalize_matches_quadratic_form(spark, dims):
+    """``l2_normalize`` and its SQL twin fold the norm once per row; both
+    equal the former form, which re-evaluated the norm per element."""
+    from pgvectorscale_spark.functions.distance import _as_double, _l2_normalize_sql, l2_norm
+
+    rng = np.random.default_rng(dims)
+    rows = [(i, rng.normal(size=dims).astype(np.float32).tolist()) for i in range(4)]
+    with_null = rng.normal(size=dims).astype(np.float32).tolist()
+    with_null[dims // 2] = None
+    rows += [(4, [0.0] * dims), (5, with_null), (6, None)]
+    df = spark.createDataFrame(rows, "id long, v array<float>")
+    v = F.col("v")
+    norm = l2_norm(v)
+    quadratic = F.when(norm == 0.0, v.cast("array<double>")).otherwise(
+        F.transform(v, lambda x: _as_double(x) / norm)
+    )
+    got = df.select(
+        "id",
+        quadratic.alias("want"),
+        l2_normalize(v).alias("col"),
+        F.expr(_l2_normalize_sql("v")).alias("sql"),
+    ).orderBy("id").collect()
+    assert len(got) == 7
+    for r in got:
+        assert r["col"] == r["want"] and r["sql"] == r["want"], r["id"]
+    assert got[4]["want"] == [0.0] * dims
+    assert got[5]["want"] == [None] * dims
+    assert got[6]["want"] is None
+
+
 def test_numpy_twins_match_sql(spark):
     rng = np.random.default_rng(42)
     mat = rng.random((50, 16), dtype=np.float32)

@@ -233,6 +233,54 @@ def test_kmeans_eager_matches_legacy_chain(spark):
         np.testing.assert_allclose(got[cid], want[cid], rtol=0, atol=1e-9)
 
 
+def test_kmeans_partial_sums_match_legacy_chain_on_odd_rows(spark):
+    """NULL vectors, a NULL element and a short row contribute to the
+    partial-sum k-means as they did to the posexplode → avg chain: a NULL
+    vector nowhere, the others to the lowest centroid, element by element
+    (a NULL element and a short row's missing tail are not counted)."""
+    from pgvectorscale_spark.functions.distance import distance_expr
+    from pgvectorscale_spark.operators.similarity import kmeans_centroids
+
+    rng = np.random.default_rng(29)
+    mat = rng.random((60, 6)).astype(np.float32)
+    rows = [(i, mat[i].tolist()) for i in range(60)]
+    with_null = rng.random(6).astype(np.float32).tolist()
+    with_null[2] = None
+    rows += [(100, None), (101, with_null), (102, [0.9, 0.8, 0.7]), (103, [])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    centroids = (
+        df.orderBy("vec_id").limit(4)
+        .select(F.col("vec_id").alias("centroid_id"), F.col("embedding").cast("array<double>").alias("_cv"))
+    )
+    for _ in range(2):
+        assigned = (
+            df.crossJoin(F.broadcast(centroids))
+            .withColumn("_d", distance_expr(F.col("embedding"), F.col("_cv"), "l2"))
+            .groupBy("vec_id")
+            .agg(
+                F.min_by("centroid_id", F.struct("_d", "centroid_id")).alias("centroid_id"),
+                F.first("embedding").alias("embedding"),
+            )
+        )
+        centroids = (
+            assigned.select("centroid_id", F.posexplode("embedding").alias("dim", "v"))
+            .groupBy("centroid_id", "dim")
+            .agg(F.avg("v").alias("m"))
+            .groupBy("centroid_id")
+            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("_s"))
+            .select("centroid_id", F.expr("transform(_s, x -> x.m)").alias("_cv"))
+        )
+    want = {r["centroid_id"]: np.array(r["_cv"]) for r in centroids.collect()}
+    got = {
+        r["centroid_id"]: np.array(r["centroid"])
+        for r in kmeans_centroids(df, num_centroids=4, iterations=2).collect()
+    }
+    assert set(got) == set(want)
+    for cid in want:
+        np.testing.assert_allclose(got[cid], want[cid], rtol=0, atol=1e-9)
+
+
 @pytest.fixture(scope="module")
 def dup_docs(spark):
     """Synthetic docs with planted near-duplicates so LSH buckets collide."""

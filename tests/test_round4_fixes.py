@@ -525,7 +525,7 @@ def test_batch_prune_matches_robust_prune_rowwise():
             cd = np.stack(
                 [g._dists_to_point(int(rng.integers(n)), ci[b]) for b in range(B)]
             )
-            batch = g._batch_prune_unlabeled(ci.copy(), cd.copy())
+            batch = g._batch_prune(ci.copy(), cd.copy())
             for b in range(B):
                 serial = g.robust_prune(-1, ci[b].copy(), cd[b].copy())
                 assert batch[b] == serial, (dist, b)
@@ -546,7 +546,7 @@ def test_bulk_build_batched_equals_per_row():
             ids=np.arange(len(mat), dtype=np.int64),
         )
         if per_row:
-            g._batch_prune_unlabeled = lambda ci, cd: [
+            g._batch_prune = lambda ci, cd, pls=None: [
                 g.robust_prune(-1, ci[b], cd[b]) for b in range(len(ci))
             ]
         g.build_bulk()
