@@ -26,7 +26,12 @@ plans/       plan-inspection helpers (pushdown / codegen assertions)
 streaming/   structured-streaming ingest (micro-batch index maintenance)
 """
 
+from pgvectorscale_spark import _zipimport_cache
 from pgvectorscale_spark.types import DistanceType, IndexMeta
+
+# every Python worker that unpickles a package UDF imports this package, so
+# its later tasks skip PySpark's per-task zip directory re-reads
+_zipimport_cache.install()
 
 __version__ = "0.1.0"
 

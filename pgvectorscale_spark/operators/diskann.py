@@ -124,6 +124,8 @@ _NODE_SCHEMA = (
     "start_labels array<smallint>, deleted boolean"
 )
 
+_RESULT_SCHEMA = "query_id long, node_id long, distance double, rank integer"
+
 
 def _node_cols() -> list[str]:
     return [c.strip().split(" ")[0] for c in _NODE_SCHEMA.split(",")]
@@ -1368,20 +1370,11 @@ class DiskannIndex:
                 _kmeans_fit,
             )
 
-            # the driver holds the centroid matrix and one vector sum per
-            # centroid: refuse, before collecting either, a count whose
-            # sums pass the collect budget
-            need = num_shards * (dims + 1) * 8
-            if need > cls._COLLECT_BUDGET_BYTES:
-                raise ValueError(
-                    f"k-means centroid sums need {need} bytes on the driver "
-                    f"({num_shards} centroids x {dims} dims), over the "
-                    f"{cls._COLLECT_BUDGET_BYTES}-byte collect budget: use fewer shards"
-                )
             sc.setJobDescription("diskann build: training shard centroids")
+            # dims known: an over-budget shard count refuses before the seeds
             _, cmat = _kmeans_fit(
                 base.select("node_id", "vector"), num_shards, 2, "vector", "node_id",
-                budget=cls._COLLECT_BUDGET_BYTES,
+                budget=cls._COLLECT_BUDGET_BYTES, dims=dims,
             )
             sc.setJobDescription("diskann build: assigning shards")
             assigned = (
@@ -2248,6 +2241,44 @@ class DiskannIndex:
             .select("node_id", "distance")
         )
 
+    def _query_front(self, k, search_list_size, rescore, labels, probe_shards, recall_target):
+        """The knob handling ``search_batch`` and ``ann_join`` share:
+        (search_list_size, per-shard limit, probe_shards, label set), or
+        None for an explicit empty label filter — ``labels && '{}'`` is
+        always false (filtering_tests.rs:60-74), while None = unfiltered.
+
+        ``recall_target`` picks ``probe_shards`` from the routing curve;
+        without a curve (hash shards, untuned kmeans) the full fan-out's
+        routing recall 1.0 meets any target. Routing is only meaningful on
+        Voronoi (kmeans) shards: hash shards are geometric mirrors of each
+        other, so their centroids all sit at the global mean and routing
+        would pick shards near-arbitrarily — silently collapsing recall.
+        There ``probe_shards`` falls back to the exact full fan-out with a
+        warning that points at the caller of the public method."""
+        if search_list_size is None:
+            search_list_size = _conf_knob(
+                self.spark, "query_search_list_size", DEFAULT_QUERY_SEARCH_LIST_SIZE
+            )
+        if rescore is None:
+            rescore = _conf_knob(self.spark, "query_rescore", DEFAULT_QUERY_RESCORE)
+        if labels is not None and len(list(labels)) == 0:
+            return None
+        if recall_target is not None:
+            if probe_shards is not None:
+                raise ValueError("pass either probe_shards or recall_target, not both")
+            if self.meta.shard_assignment == "kmeans" and self.meta.routing_recall_curve:
+                probe_shards = self.auto_probe_shards(recall_target)
+        if probe_shards is not None and self.meta.shard_assignment != "kmeans":
+            warnings.warn(
+                f"probe_shards ignored: index at {self.path} is "
+                f"'{self.meta.shard_assignment}'-sharded (no geometric routing); "
+                "probing all shards. Build with shard_assignment='kmeans' to route.",
+                stacklevel=3,
+            )
+            probe_shards = None
+        qlabels = frozenset(int(l) for l in labels) if labels else None
+        return search_list_size, max(k, rescore), probe_shards, qlabels
+
     def search_batch(
         self,
         queries_df: DataFrame | None,
@@ -2289,12 +2320,6 @@ class DiskannIndex:
         shards × queries × max(k, rescore) tiny rows. No join, no vector
         scan, no shuffle proportional to the corpus — per-query cost is
         independent of corpus size once shard graphs are warm."""
-        if search_list_size is None:
-            search_list_size = _conf_knob(
-                self.spark, "query_search_list_size", DEFAULT_QUERY_SEARCH_LIST_SIZE
-            )
-        if rescore is None:
-            rescore = _conf_knob(self.spark, "query_rescore", DEFAULT_QUERY_RESCORE)
         meta_d = _meta_dict(self.meta)
         qrows = (
             _qrows
@@ -2305,40 +2330,12 @@ class DiskannIndex:
         qmat = np.array([r[1] for r in qrows], dtype=np.float64)
         if meta_d["distance_type"] == DistanceType.COSINE.value:
             qmat = np_normalize(qmat)  # query-time normalization (labels/mod.rs:209-238)
-        # `labels && '{}'` is always false (filtering_tests.rs:60-74):
-        # an explicit empty filter returns nothing, while None = unfiltered
-        if labels is not None and len(list(labels)) == 0:
-            return self.spark.createDataFrame(
-                [], "query_id long, node_id long, distance double, rank integer"
-            )
-        if recall_target is not None:
-            if probe_shards is not None:
-                raise ValueError(
-                    "pass either probe_shards or recall_target, not both"
-                )
-            if (
-                self.meta.shard_assignment == "kmeans"
-                and self.meta.routing_recall_curve
-            ):
-                probe_shards = self.auto_probe_shards(recall_target)
-            # else: full fan-out probes every shard — routing recall 1.0
-            # meets any target (hash shards and untuned kmeans indexes)
-        qlabels = frozenset(int(l) for l in labels) if labels else None
-        limit = max(k, rescore)
+        front = self._query_front(k, search_list_size, rescore, labels, probe_shards, recall_target)
+        if front is None:
+            return self.spark.createDataFrame([], _RESULT_SCHEMA)
+        search_list_size, limit, probe_shards, qlabels = front
         # shard routing: per-query top-p shards by centroid distance. The
         # routing table is tiny (num_shards rows) and computed driver-side.
-        # Routing is only meaningful on Voronoi (kmeans) shards: hash shards
-        # are geometric mirrors of each other, so their centroids all sit at
-        # the global mean and routing would pick shards near-arbitrarily —
-        # silently collapsing recall. Fall back to the exact full fan-out.
-        if probe_shards is not None and self.meta.shard_assignment != "kmeans":
-            warnings.warn(
-                f"probe_shards ignored: index at {self.path} is "
-                f"'{self.meta.shard_assignment}'-sharded (no geometric routing); "
-                "probing all shards. Build with shard_assignment='kmeans' to route.",
-                stacklevel=2,
-            )
-            probe_shards = None
         route: dict[int, np.ndarray] | None = None
         if probe_shards is not None and probe_shards < self.meta.num_shards:
             table = self._routing_table()
@@ -2487,35 +2484,11 @@ class DiskannIndex:
         Labels follow search_batch semantics: a global filter list, []
         matches nothing, and filtered queries also probe every shard
         holding their labels (rare-label widening)."""
-        if search_list_size is None:
-            search_list_size = _conf_knob(
-                self.spark, "query_search_list_size", DEFAULT_QUERY_SEARCH_LIST_SIZE
-            )
-        if rescore is None:
-            rescore = _conf_knob(self.spark, "query_rescore", DEFAULT_QUERY_RESCORE)
         meta_d = _meta_dict(self.meta)
-        if labels is not None and len(list(labels)) == 0:
-            return self.spark.createDataFrame(
-                [], "query_id long, node_id long, distance double, rank integer"
-            )
-        if recall_target is not None:
-            if probe_shards is not None:
-                raise ValueError("pass either probe_shards or recall_target, not both")
-            if (
-                self.meta.shard_assignment == "kmeans"
-                and self.meta.routing_recall_curve
-            ):
-                probe_shards = self.auto_probe_shards(recall_target)
-        if probe_shards is not None and self.meta.shard_assignment != "kmeans":
-            warnings.warn(
-                f"probe_shards ignored: index at {self.path} is "
-                f"'{self.meta.shard_assignment}'-sharded (no geometric routing); "
-                "probing all shards. Build with shard_assignment='kmeans' to route.",
-                stacklevel=2,
-            )
-            probe_shards = None
-        qlabels = frozenset(int(l) for l in labels) if labels else None
-        limit = max(k, rescore)
+        front = self._query_front(k, search_list_size, rescore, labels, probe_shards, recall_target)
+        if front is None:
+            return self.spark.createDataFrame([], _RESULT_SCHEMA)
+        search_list_size, limit, probe_shards, qlabels = front
         num_shards = self.meta.num_shards
         # the routed fan-out row is (shard, query_id, vec) x p copies —
         # the join's biggest shuffle. Keep the query column's element

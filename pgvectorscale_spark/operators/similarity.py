@@ -129,9 +129,9 @@ def _rows_to_centroids(rows) -> tuple[np.ndarray, np.ndarray]:
     centroid relation (and Spark caps any broadcast at 8 GB) — so the
     assignment kernel does not change which centroid counts are feasible,
     only the constant (no per-row struct overhead in the matrix form).
-    The DiskANN build enforces it: it refuses a centroid count whose
-    matrix (and per-centroid sums) would pass its collect budget before
-    anything is collected."""
+    ``_kmeans_fit`` (the DiskANN build and ``kmeans_centroids``) enforces
+    it: it refuses a centroid count whose matrix (and per-centroid sums)
+    would pass its collect budget before any Lloyd round."""
     rows = sorted(rows, key=lambda r: int(r[0]))
     cids = np.array([int(r[0]) for r in rows], dtype=np.int64)
     if not len(rows):
@@ -393,13 +393,24 @@ def _within_budget(df: DataFrame, task_bytes: int, budget: int) -> DataFrame:
     return df.coalesce(max(1, budget // max(1, task_bytes)))
 
 
+def _refuse_centroid_collect(k: int, dims: int, budget: int) -> None:
+    need = k * (dims + 1) * 8
+    if need > budget:
+        raise ValueError(
+            f"k-means centroid sums need {need} bytes on the driver "
+            f"({k} centroids x {dims} dims), over the "
+            f"{budget}-byte collect budget: use fewer centroids"
+        )
+
+
 def _kmeans_fit(
     src: DataFrame,
     num_centroids: int,
     iterations: int,
     vector_col: str,
     id_col: str,
-    budget: int = _COLLECT_BUDGET_BYTES,
+    budget: int,
+    dims: int | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Lloyd iterations over ``src`` (persisted by the caller), returning
     (centroid ids ascending, float64 centroid matrix) on the driver.
@@ -412,13 +423,20 @@ def _kmeans_fit(
     ``budget // (k x (dims + 1) x 8)`` tasks, so the partial sums the
     driver collects stay within ``budget`` bytes whatever the input's
     partitioning. A centroid that no row reaches drops out, as an empty
-    groupBy group did."""
+    groupBy group did.
+
+    One task's sums (k x (dims + 1) x 8 bytes) over ``budget`` refuse the
+    fit before any round: checked after the seed collect, or before it
+    when the caller passes ``dims``."""
+    if dims is not None:
+        _refuse_centroid_collect(num_centroids, dims, budget)
     cids, cmat = _rows_to_centroids(
         src.orderBy(F.col(id_col).asc())
         .limit(num_centroids)
         .select(F.col(id_col), F.col(vector_col).cast("array<double>"))
         .collect()
     )
+    _refuse_centroid_collect(*cmat.shape, budget)
     if len(cids):
         src = _within_budget(src, cmat.size * 8 + len(cids) * 8, budget)
     for _ in range(iterations):
@@ -477,7 +495,9 @@ def kmeans_centroids(
     """
     src = df.select(F.col(id_col), F.col(vector_col)).persist()
     try:
-        cids, cmat = _kmeans_fit(src, num_centroids, iterations, vector_col, id_col)
+        cids, cmat = _kmeans_fit(
+            src, num_centroids, iterations, vector_col, id_col, _COLLECT_BUDGET_BYTES
+        )
         return df.sparkSession.createDataFrame(
             [(int(c), [float(x) for x in v]) for c, v in zip(cids, cmat)],
             "centroid_id long, centroid array<double>",

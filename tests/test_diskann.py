@@ -651,7 +651,9 @@ def test_build_refuses_centroid_collect_over_budget(spark, tmpdir, monkeypatch):
 
 def test_lifecycle_writes_nothing_to_stdout(tmpdir):
     """Standard output belongs to the caller (a benchmark prints its result
-    there): a build → search → insert → delete cycle in a fresh process
+    there): a build → search → insert → delete cycle in a fresh process,
+    with a serving op's three calls (``search_batch`` with
+    ``recall_target``, label-filtered ``search_batch``, ``ann_join``),
     writes nothing to it."""
     import os
     import subprocess
@@ -679,6 +681,13 @@ def test_lifecycle_writes_nothing_to_stdout(tmpdir):
             num_shards=2, shard_assignment="kmeans", label_col="labels",
         )
         idx.search(mat[0].tolist(), k=3).collect()
+        qdf = spark.createDataFrame(
+            [(i, mat[i].tolist()) for i in range(0, 200, 25)],
+            "query_id long, query_vec array<float>",
+        )
+        assert idx.search_batch(qdf, k=3, recall_target=0.9).count() == 24
+        assert idx.search_batch(qdf, k=3, labels=[1]).count() == 24
+        assert idx.ann_join(qdf, k=3).count() == 24
         more = [(i, mat[i].tolist(), [i % 3]) for i in range(200, 240)]
         idx.insert(spark.createDataFrame(more, schema), label_col="labels")
         idx.delete(list(range(10)))

@@ -281,6 +281,36 @@ def test_kmeans_partial_sums_match_legacy_chain_on_odd_rows(spark):
         np.testing.assert_allclose(got[cid], want[cid], rtol=0, atol=1e-9)
 
 
+def test_kmeans_refuses_centroid_collect_over_budget(spark, monkeypatch):
+    """``kmeans_centroids`` (IVF, ``semantic_dedup``) shares the build's
+    guard: centroid sums that fit the budget train over any partitioning,
+    and one task's sums over it refuse after the seed collect, before any
+    Lloyd round."""
+    from pgvectorscale_spark.operators import similarity as sim
+
+    rng = np.random.default_rng(31)
+    mat = rng.random((60, 6)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, mat[i].tolist()) for i in range(60)], "vec_id long, embedding array<float>"
+    )
+    wide = df.repartition(16)
+    want = sorted(tuple(r) for r in sim.kmeans_centroids(wide, num_centroids=4).collect())
+    # 4 centroids x (6 dims + 1) x 8 bytes = 224
+    monkeypatch.setattr(sim, "_COLLECT_BUDGET_BYTES", 224)
+    got = sorted(tuple(r) for r in sim.kmeans_centroids(wide, num_centroids=4).collect())
+    assert got == want
+    monkeypatch.setattr(sim, "_COLLECT_BUDGET_BYTES", 223)
+    sc = spark.sparkContext
+    sc.setJobGroup("kmeans-budget", "kmeans-budget")
+    try:
+        with pytest.raises(ValueError, match="centroid sums"):
+            sim.kmeans_centroids(df, num_centroids=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("kmeans-budget")) == 1
+
+
 @pytest.fixture(scope="module")
 def dup_docs(spark):
     """Synthetic docs with planted near-duplicates so LSH buckets collide."""
