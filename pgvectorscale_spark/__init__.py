@@ -26,12 +26,14 @@ plans/       plan-inspection helpers (pushdown / codegen assertions)
 streaming/   structured-streaming ingest (micro-batch index maintenance)
 """
 
-from pgvectorscale_spark import _zipimport_cache
+from pgvectorscale_spark import _gc_freeze, _zipimport_cache
 from pgvectorscale_spark.types import DistanceType, IndexMeta
 
 # every Python worker that unpickles a package UDF imports this package, so
-# its later tasks skip PySpark's per-task zip directory re-reads
+# its later tasks skip PySpark's per-task zip directory re-reads and, in a
+# reused worker, the per-task full collection's scan of the import heap
 _zipimport_cache.install()
+_gc_freeze.install()
 
 __version__ = "0.1.0"
 

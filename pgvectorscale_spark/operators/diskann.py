@@ -469,6 +469,25 @@ def _to_frozenset(x) -> frozenset | None:
     return s or None
 
 
+def _local_adjacency(neighbors: pd.Series, gids: np.ndarray) -> list[list[int]]:
+    """Stored neighbor ids -> local slots in the ascending ``gids``, as
+    Python-int lists in stored order. Ids outside the shard are dropped; a
+    None row is empty. One searchsorted over every edge of the shard."""
+    rows = [() if r is None else r for r in neighbors]
+    lens = np.fromiter((len(r) for r in rows), dtype=np.int64, count=len(rows))
+    if not lens.sum():
+        return [[] for _ in rows]
+    flat = np.concatenate([np.asarray(r, dtype=np.int64) for r in rows if len(r)])
+    # side="right" - 1: the last slot of an id, as a {gid: slot} dict gives
+    slot = np.searchsorted(gids, flat, side="right") - 1
+    hit = slot >= 0
+    hit[hit] = gids[slot[hit]] == flat[hit]
+    kept = slot[hit].tolist()
+    row_of = np.repeat(np.arange(len(rows)), lens)
+    ends = np.cumsum(np.bincount(row_of[hit], minlength=len(rows))).tolist()
+    return [kept[a:b] for a, b in zip([0] + ends[:-1], ends)]
+
+
 def _graph_from_pdf(pdf: pd.DataFrame, meta: dict, quantizer_state) -> tuple[VamanaGraph, np.ndarray]:
     """Rehydrate a shard's VamanaGraph from node-table rows.
 
@@ -477,7 +496,6 @@ def _graph_from_pdf(pdf: pd.DataFrame, meta: dict, quantizer_state) -> tuple[Vam
     JVM-side after the walk). The graph then carries an (n, 0) matrix."""
     pdf = pdf.sort_values("node_id").reset_index(drop=True)
     gids = pdf["node_id"].to_numpy()
-    pos = {int(g): i for i, g in enumerate(gids)}
     if "vector" in pdf.columns:
         mat = np.stack(pdf["vector"].to_numpy()).astype(np.float32)
     else:
@@ -498,13 +516,6 @@ def _graph_from_pdf(pdf: pd.DataFrame, meta: dict, quantizer_state) -> tuple[Vam
     labels = None
     if meta["has_labels"]:
         labels = [_to_frozenset(x) for x in pdf["labels"]]
-    adjacency = [
-        np.array(
-            [pos[int(v)] for v in (row if row is not None else []) if int(v) in pos],
-            dtype=np.int64,
-        )
-        for row in pdf["neighbors"]
-    ]
     g = VamanaGraph(
         walk_mat,
         distance_type=meta["distance_type"],
@@ -513,7 +524,7 @@ def _graph_from_pdf(pdf: pd.DataFrame, meta: dict, quantizer_state) -> tuple[Vam
         max_alpha=meta["max_alpha"],
         labels=labels,
         codes=codes,
-        adjacency=adjacency,
+        adjacency=_local_adjacency(pdf["neighbors"], gids),
         quantize_fn=quantize_fn,
         ids=gids,  # G9 ties on global ids: grow() parity with rehydration
     )
@@ -573,6 +584,7 @@ def _entry_nbytes(g, gids: np.ndarray, dead: np.ndarray, fullmat) -> int:
             total += int(g.codes.nbytes)
         # adjacency lists hold boxed Python ints: ~32 bytes per edge
         total += 32 * sum(len(a) for a in g.adj)
+        total += g.walk_nbytes()
     return total
 
 
@@ -1139,22 +1151,26 @@ def _probe_shard_block(
         np.concatenate([p for p in pools if len(p)] or [np.array([], dtype=np.int64)])
     )
     if fullmat is not None:
-        vmat, vpos = fullmat, {}  # resident matrix: pools index it directly
+        vmat = fullmat  # resident matrix: pools index it directly
     elif len(union):
-        vmat, vpos = _fetch_vectors(store, shard, gids[union])
-        vpos = {int(gid): r for gid, r in vpos.items()}
-    else:
-        vmat, vpos = np.zeros((0, 0), dtype=np.float32), {}
+        want = gids[union]
+        vmat, vids = _fetch_vectors(store, shard, want)
+        # each pooled node's fetched row (the last row of its id)
+        by_id = np.argsort(vids, kind="stable")
+        at = np.searchsorted(vids[by_id], want, side="right") - 1
+        if at.min() < 0 or (vids[by_id[at]] != want).any():
+            missing = np.setdiff1d(want, vids)[:5]
+            raise KeyError(f"pooled nodes missing from the vector read: {missing}")
+        union_rows = by_id[at]
     out_q, out_n, out_d = [], [], []
     for qi, pool in enumerate(pools):
         if not len(pool):
             continue
+        pool_gids = gids[pool]
         if fullmat is not None:
             rows = pool
-            pool_gids = gids[pool]
         else:
-            pool_gids = gids[pool]
-            rows = np.array([vpos[int(gid)] for gid in pool_gids])
+            rows = union_rows[np.searchsorted(union, pool)]
         ed = np_distance(
             vmat[rows], qmat_l[qi], md["distance_type"], assume_normalized=True
         )
@@ -1167,16 +1183,15 @@ def _probe_shard_block(
     return out_q, out_n, out_d
 
 
-def _fetch_vectors(store, shard: int, node_ids: np.ndarray) -> tuple[np.ndarray, dict]:
+def _fetch_vectors(store, shard: int, node_ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Fetch full-precision vectors for just the given node ids from the
     shard's base+delta partitions — the analog of the reference reading
     only visited nodes' pages (sbq/storage.rs:125-230). pyarrow prunes row
     groups by node_id statistics, so per-batch vector I/O scales with the
-    visited set, not the shard."""
+    visited set, not the shard. Returns (vectors, their node ids)."""
     t = _read_shard_pdf(store, shard, ["node_id", "vector"], ids=node_ids)
-    ids = t["node_id"].to_numpy()
     mat = np.stack(t["vector"].to_numpy()).astype(np.float32)
-    return mat, {int(g): i for i, g in enumerate(ids)}
+    return mat, t["node_id"].to_numpy(dtype=np.int64)
 
 
 class DiskannIndex:
@@ -2321,6 +2336,10 @@ class DiskannIndex:
         scan, no shuffle proportional to the corpus — per-query cost is
         independent of corpus size once shard graphs are warm."""
         meta_d = _meta_dict(self.meta)
+        front = self._query_front(k, search_list_size, rescore, labels, probe_shards, recall_target)
+        if front is None:  # an empty label filter: no query is collected
+            return self.spark.createDataFrame([], _RESULT_SCHEMA)
+        search_list_size, limit, probe_shards, qlabels = front
         qrows = (
             _qrows
             if _qrows is not None
@@ -2330,10 +2349,6 @@ class DiskannIndex:
         qmat = np.array([r[1] for r in qrows], dtype=np.float64)
         if meta_d["distance_type"] == DistanceType.COSINE.value:
             qmat = np_normalize(qmat)  # query-time normalization (labels/mod.rs:209-238)
-        front = self._query_front(k, search_list_size, rescore, labels, probe_shards, recall_target)
-        if front is None:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        search_list_size, limit, probe_shards, qlabels = front
         # shard routing: per-query top-p shards by centroid distance. The
         # routing table is tiny (num_shards rows) and computed driver-side.
         route: dict[int, np.ndarray] | None = None

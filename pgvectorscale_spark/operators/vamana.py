@@ -33,7 +33,8 @@ float32 (plain layout) or SBQ-quantized Hamming (memory_optimized layout).
 from __future__ import annotations
 
 import math
-from bisect import insort
+import sys
+from bisect import bisect_left, insort
 from typing import Callable, Sequence
 
 import numpy as np
@@ -61,10 +62,13 @@ def _occlusion(D: np.ndarray, cand_dist: np.ndarray) -> np.ndarray:
     )
 
 
-def _labels_overlap(a: frozenset | None, b: frozenset | None) -> bool:
-    if not a or not b:
-        return False
-    return not a.isdisjoint(b)
+def _code_ints(codes: np.ndarray) -> list[int]:
+    """Each row of packed codes as one Python int (its bytes, little-endian),
+    so the Hamming distance of two rows is ``(a ^ b).bit_count()``."""
+    codes = np.ascontiguousarray(codes)
+    w = codes.shape[-1] * codes.itemsize
+    raw = codes.tobytes()
+    return [int.from_bytes(raw[i * w : (i + 1) * w], "little") for i in range(len(codes))]
 
 
 class VamanaGraph:
@@ -103,8 +107,11 @@ class VamanaGraph:
         # ceil matches the reference's (num_neighbors * GRAPH_SLACK_FACTOR)
         # .ceil() (meta_page.rs:252-255); int() would floor e.g. R=25 to 32
         self.max_build_neighbors = math.ceil(self.R * NEIGHBOR_SLACK)
+        # Python ints: the walk indexes marks and payload lists with them
         self.adj: list[list[int]] = (
-            [list(a) for a in adjacency] if adjacency is not None else [[] for _ in range(self.n)]
+            [a.tolist() if isinstance(a, np.ndarray) else list(a) for a in adjacency]
+            if adjacency is not None
+            else [[] for _ in range(self.n)]
         )
         self.start_default: int | None = None
         self.start_by_label: dict[int, int] = {}
@@ -124,12 +131,12 @@ class VamanaGraph:
         self.ids = (
             np.asarray(ids, dtype=np.int64) if ids is not None else np.arange(self.n, dtype=np.int64)
         )
-        # plain-int twin of ids for the walk's per-neighbor tie-break key:
-        # int(self.ids[v]) is a numpy scalar-index + box per neighbor (~30
-        # expansions x R neighbors per probed query) — list indexing is the
-        # same value at a fraction of the cost (round 15, guide §4.2).
-        # grow() keeps it in sync.
-        self._ids_list: list[int] = self.ids.tolist()
+        self._label_bit: dict[int, int] = {}
+        self._label_bits = (
+            [self._bits(x) for x in self.labels] if self.labels is not None else None
+        )
+        self._code_ints = _code_ints(self.codes) if self.codes is not None else None
+        self._rank_ids()
         # precomputed squared norms: in-graph L2 via |a|²+|b|²-2a·b keeps the
         # hot path a single float32 BLAS matvec (the walk makes ~100k tiny
         # distance calls per 1k inserts — per-call numpy overhead dominates
@@ -155,13 +162,6 @@ class VamanaGraph:
             return np_hamming(self.codes[idxs], self.codes[i]).astype(np.float64)
         sq = float(self._sqnorms[i]) if self._sqnorms is not None else 0.0
         return self._dists_fast(self.mat[i], sq, idxs)
-
-    def _dists_to_query(self, q: np.ndarray, idxs: np.ndarray, qcode: np.ndarray | None) -> np.ndarray:
-        if self.codes is not None and qcode is not None:
-            return np_hamming(self.codes[idxs], qcode).astype(np.float64)
-        q32 = q if q.dtype == np.float32 else q.astype(np.float32)
-        sq = float(q32 @ q32) if self.distance_type == "l2" else 0.0
-        return self._dists_fast(q32, sq, idxs)
 
     def exact_dists(self, q: np.ndarray, idxs: np.ndarray) -> np.ndarray:
         """Full-precision rescore distances (scan.rs:244-305)."""
@@ -225,6 +225,81 @@ class VamanaGraph:
         ).reshape(len(cand_idx), len(plist))
         return (1.0 - M) @ M.T == 0
 
+    # -- walk state ------------------------------------------------------------
+    #
+    # Python twins of what the beam walk reads per neighbor, kept beside the
+    # numpy payload: a numpy call costs about a microsecond and the walk makes
+    # ~30 expansions x R neighbors per probed query. ``_code_ints`` holds each
+    # SBQ code as one int (Hamming = popcount of an XOR), ``_label_bits`` each
+    # label set as a bitmask over ``_label_bit`` (label -> bit), and
+    # ``_rank`` / ``_by_rank`` each node's place in global-id order and its
+    # inverse (the G9 tie-break). grow() and replace() keep them in step.
+
+    def _rank_ids(self) -> None:
+        ids = self.ids
+        if bool((ids[1:] > ids[:-1]).all()):
+            # id-sorted (every rehydrated shard): the rank is the local index
+            self._rank = self._by_rank = list(range(self.n))
+            return
+        by_rank = np.argsort(ids, kind="stable")
+        rank = np.empty(self.n, dtype=np.int64)
+        rank[by_rank] = np.arange(self.n)
+        self._rank, self._by_rank = rank.tolist(), by_rank.tolist()
+
+    def _bits(self, labels: frozenset | None, add: bool = True) -> int:
+        """A label set's bitmask; ``add=False`` drops labels no node has
+        (they match nothing) instead of giving them a bit."""
+        bits = 0
+        for l in labels or ():
+            b = self._label_bit.get(l)
+            if b is None:
+                if not add:
+                    continue
+                b = self._label_bit[l] = len(self._label_bit)
+            bits |= 1 << b
+        return bits
+
+    def walk_nbytes(self) -> int:
+        """Bytes held by the walk state (boxed ints and their lists)."""
+        total = sys.getsizeof(self._label_bit)
+        lists = [self._code_ints, self._label_bits, self._rank]
+        if self._by_rank is not self._rank:
+            lists.append(self._by_rank)
+        for lst in lists:
+            if lst is not None:
+                total += sys.getsizeof(lst) + sum(map(sys.getsizeof, lst))
+        return total
+
+    def _walk_keys(self, q: np.ndarray, qcode: np.ndarray | None):
+        """``(score, decode, int_keys)`` for one walk. ``score(nodes)`` gives
+        each node a candidate key that orders as (distance, global id): with
+        SBQ codes the int Hamming distance x n + id rank (``int_keys``: the
+        rank is ``key % n``), else a (float32 BLAS distance, id rank) tuple.
+        ``decode(keys)`` gives their (nodes, float distances)."""
+        n, rank, by_rank = self.n, self._rank, self._by_rank
+        if self.codes is not None and qcode is not None:
+            codes = self._code_ints
+            qc = _code_ints(np.asarray(qcode).reshape(1, -1))[0]
+
+            def score(nodes):
+                return [(qc ^ codes[v]).bit_count() * n + rank[v] for v in nodes]
+
+            def decode(keys):
+                return [by_rank[k % n] for k in keys], [float(k // n) for k in keys]
+
+            return score, decode, True
+        q32 = np.asarray(q, dtype=np.float32)
+        sq = float(q32 @ q32) if self.distance_type == "l2" else 0.0
+
+        def score(nodes):
+            d = self._dists_fast(q32, sq, nodes).tolist()
+            return list(zip(d, [rank[v] for v in nodes]))
+
+        def decode(keys):
+            return [by_rank[r] for _, r in keys], [d for d, _ in keys]
+
+        return score, decode, False
+
     # -- greedy search (G1/G2/G3) -------------------------------------------
 
     def _start_nodes(self, query_labels: frozenset | None) -> list[int]:
@@ -256,58 +331,51 @@ class VamanaGraph:
         starts = self._start_nodes(None if no_filter else query_labels)
         if not starts:
             return [], []
-        q32 = np.asarray(q, dtype=np.float32)
-        sidx = np.array(starts)
-        sd = self._dists_to_query(q32, sidx, qcode)
-        ids_l = self._ids_list
-        # candidate list: sorted (dist, id, idx, expanded) capped at L. Python
-        # insort beats array re-sorts here: ~30 O(len) inserts per expansion
-        # are cheaper than a lexsort + 3 concatenates of the whole beam.
-        # Ties break on the global id (G9), not the local slot.
-        cand: list[list] = sorted(
-            [d, ids_l[i], i, False] for d, i in zip(sd.tolist(), starts)
-        )
-        seen = set(starts)
-        visited: list[int] = []
-        visited_d: list[float] = []
+        score, decode, ints = self._walk_keys(q, qcode)
+        n, adj, by_rank = self.n, self.adj, self._by_rank
+        # label filter during expansion (sbq/storage.rs:162-171)
+        filtered = not no_filter and bool(query_labels)
+        if filtered:
+            lbits, qbits = self._label_bits, self._bits(query_labels, add=False)
+        seen = bytearray(n)  # by local index
+        done = bytearray(n)  # expanded, by id rank
+        for s in starts:
+            seen[s] = 1
+        # the beam: candidate keys in (distance, id) order; ties break on
+        # the global id (G9), not the local slot
+        cand = sorted(score(starts))
+        visited: list = []
+        p = 0  # every key before cand[p] is expanded
         while True:
-            # first unexpanded among the best L — an index loop, not a
-            # cand[:L] slice: the slice allocated a fresh L-list per beam
-            # step (~2 scans per expansion measured), round 15 guide §4.2
-            nxt = None
-            for j in range(min(L, len(cand))):
-                c = cand[j]
-                if not c[3]:
-                    nxt = c
-                    break
-            if nxt is None:
+            # expand the first unexpanded key among the best L
+            lim = L if len(cand) > L else len(cand)
+            while p < lim and done[cand[p] % n if ints else cand[p][1]]:
+                p += 1
+            if p >= lim:
                 break
-            nxt[3] = True
-            d_u, u = nxt[0], nxt[2]
-            visited.append(u)
-            visited_d.append(d_u)
-            neigh = [v for v in self.adj[u] if v not in seen]
-            if not no_filter and query_labels:
-                # label filter during expansion (sbq/storage.rs:162-171)
-                neigh = [v for v in neigh if _labels_overlap(self.labels[v], query_labels)]
+            key = cand[p]
+            r = key % n if ints else key[1]
+            done[r] = 1
+            visited.append(key)
+            neigh = [v for v in adj[by_rank[r]] if not seen[v]]
+            for v in neigh:  # a node the filter drops is dropped every time
+                seen[v] = 1
+            if filtered:
+                neigh = [v for v in neigh if lbits[v] & qbits]
             if not neigh:
                 continue
-            seen.update(neigh)
-            nidx = np.array(neigh)
-            nd = self._dists_to_query(q32, nidx, qcode)
-            for d, v in zip(nd.tolist(), neigh):
-                insort(cand, [d, ids_l[v], v, False])
+            keys = score(neigh)
+            for k in keys:
+                insort(cand, k)
+            first = min(keys)
+            if first < key:  # an unexpanded key now precedes cand[p]
+                p = bisect_left(cand, first)
             if len(cand) > 4 * L:
-                # drop hopeless tail but never drop expanded entries' record
-                cand = cand[: 2 * L]
+                # drop the hopeless tail; expanded keys live on in visited
+                del cand[2 * L :]
         if include_frontier:
-            vset = set(visited)
-            for d, _, v, _ in cand:
-                if v not in vset:
-                    visited.append(v)
-                    visited_d.append(d)
-                    vset.add(v)
-        return visited, visited_d
+            visited += [k for k in cand if not done[k % n if ints else k[1]]]
+        return decode(visited)
 
     # -- robust alpha-prune (G4) --------------------------------------------
 
@@ -746,13 +814,15 @@ class VamanaGraph:
             )
         if self.codes is not None:
             self.codes = np.vstack([self.codes, np.asarray(codes)])
+            self._code_ints += _code_ints(np.asarray(codes).reshape(len(ids), -1))
         if self.labels is not None:
             new_labels = list(labels) if labels is not None else [None] * len(ids)
             self.labels.extend(new_labels)
+            self._label_bits += [self._bits(x) for x in new_labels]
         self.adj.extend([] for _ in range(len(ids)))
         self.ids = np.concatenate([self.ids, np.asarray(ids, dtype=np.int64)])
-        self._ids_list = self.ids.tolist()
         self.n += len(ids)
+        self._rank_ids()
         if self.dirty is not None:
             self.dirty.update(range(start, self.n))
         return list(range(start, self.n))
@@ -775,8 +845,10 @@ class VamanaGraph:
                 self._sqnorms[i] = float(self.mat[i] @ self.mat[i])
         if self.codes is not None and code is not None:
             self.codes[i] = code
+            self._code_ints[i] = _code_ints(self.codes[i : i + 1])[0]
         if self.labels is not None:
             self.labels[i] = labels_i
+            self._label_bits[i] = self._bits(labels_i)
 
     # -- serving --------------------------------------------------------------
 
@@ -826,7 +898,8 @@ class VamanaGraph:
         vd = np.array(vis_d)
         if query_labels:
             # recheck on results (xs_recheck, scan.rs:350-352)
-            mask = np.array([_labels_overlap(self.labels[int(i)], query_labels) for i in vidx])
+            lbits, qbits = self._label_bits, self._bits(query_labels, add=False)
+            mask = np.array([(lbits[i] & qbits) != 0 for i in vis], dtype=bool)
             vidx, vd = vidx[mask], vd[mask]
             if len(vidx) == 0:
                 return np.array([], dtype=np.int64), np.array([])

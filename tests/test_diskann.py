@@ -86,6 +86,97 @@ def test_search_batch_shapes(built, spark):
     assert top1 == {0: 0, 1: 1, 2: 2}  # self is nearest
 
 
+def test_empty_label_filter_runs_no_job(built, spark):
+    """``labels=[]`` matches nothing (``labels && '{}'``): search_batch
+    answers with the empty result before it collects the queries."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from pgvectorscale_spark.operators.diskann import _RESULT_SCHEMA
+
+    idx, mat = built
+    rows = spark.sparkContext.parallelize([(i, mat[i].tolist()) for i in range(3)], 2)
+    qdf = spark.createDataFrame(rows, "query_id long, query_vec array<float>")
+    out = []
+    assert _jobs(spark, lambda: out.append(idx.search_batch(qdf, k=5, labels=[]))) == 0
+    assert out[0].schema == _parse_datatype_string(_RESULT_SCHEMA)
+    assert out[0].count() == 0
+    assert _jobs(spark, lambda: idx.search_batch(qdf, k=5)) > 0  # the count shows jobs
+
+
+def test_probe_rescore_rows_do_not_depend_on_fetch_order(built, spark, monkeypatch):
+    """The probe finds each pooled node's fetched vector by its id: a
+    vector read that returns its rows in another order changes no output
+    row and no counter."""
+    from pgvectorscale_spark.operators import diskann
+    from pgvectorscale_spark.operators.diskann import QueryStats
+
+    idx, mat = built
+    md = diskann._meta_dict(idx.meta)
+    q = np_normalize(mat[:6].astype(np.float64))
+
+    def run(token):  # a cold load each time, so cache_hits match too
+        stats = QueryStats(spark)
+        out = diskann._probe_shard_block(
+            idx._store(), 1, ("rows", token), md, idx._quantizer_state(), np.arange(6), q,
+            None, 10, 40, stats,
+        )
+        return out, stats.as_dict()
+
+    want = run(0)
+    fetch = diskann._fetch_vectors
+
+    def shuffled(store, shard, node_ids):
+        vmat, vids = fetch(store, shard, node_ids)
+        order = np.random.default_rng(1).permutation(len(vids))
+        return vmat[order], vids[order]
+
+    monkeypatch.setattr(diskann, "_fetch_vectors", shuffled)
+    assert run(1) == want and len(want[0][0]) == 60
+
+
+def test_local_adjacency_matches_dict_lookup():
+    """Stored neighbor ids map to local slots as a {gid: slot} lookup did:
+    in stored order, ids outside the shard dropped, None and empty rows
+    empty, Python ints throughout."""
+    import pandas as pd
+
+    from pgvectorscale_spark.operators.diskann import _local_adjacency
+
+    rng = np.random.default_rng(4)
+    for trial in range(50):
+        n = int(rng.integers(1, 40))
+        gids = np.sort(rng.choice(5000, size=n, replace=False)).astype(np.int64)
+        rows = []
+        for _ in range(n):
+            r = rng.random()
+            if r < 0.1:
+                rows.append(None)
+            elif r < 0.2:
+                rows.append(np.array([], dtype=np.int64))
+            else:
+                inside = rng.choice(gids, size=int(rng.integers(1, 9)))
+                rows.append(np.concatenate([inside, rng.integers(-3, 5003, size=3)]))
+        pos = {int(g): i for i, g in enumerate(gids)}
+        want = [[pos[int(v)] for v in (r if r is not None else []) if int(v) in pos] for r in rows]
+        got = _local_adjacency(pd.Series(rows, dtype=object), gids)
+        assert got == want, trial
+        assert all(type(v) is int for a in got for v in a)
+    assert _local_adjacency(pd.Series([None, []], dtype=object), gids[:2]) == [[], []]
+
+
+def test_shard_cache_counts_the_walk_state(built):
+    from pgvectorscale_spark.operators.diskann import _entry_nbytes, _load_shard_graph, _meta_dict
+
+    idx, _ = built
+    g, gids, dead, fullmat, _ = _load_shard_graph(
+        idx._store(), 0, ("nbytes", 0), _meta_dict(idx.meta), idx._quantizer_state()
+    )
+    walk = g.walk_nbytes()
+    assert walk >= 28 * 2 * g.n  # a code int and a rank per node at least
+    edges = sum(len(a) for a in g.adj)
+    assert _entry_nbytes(g, gids, dead, fullmat) >= walk + 32 * edges + g.codes.nbytes
+
+
 def test_null_query_scans_all(built):
     idx, _ = built
     assert idx.search(None, k=10).count() == 300

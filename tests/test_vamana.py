@@ -274,3 +274,192 @@ def test_labelled_build_matches_serial_reference(mode):
     assert fast.adj == ref.adj
     assert fast.start_by_label == ref.start_by_label
     assert list(fast.start_by_label) == list(ref.start_by_label)
+
+
+# -- beam walk: int/tuple keys vs the list-based reference walk ---------------
+
+
+def _reference_walk(
+    g: VamanaGraph, q, search_list_size=None, query_labels=None, no_filter=True,
+    qcode=None, include_frontier=False,
+):
+    """The former greedy_search: a sorted list of [dist, id, idx, expanded]
+    entries, a scan of the best L for the first unexpanded one, a set of
+    seen nodes and a frozenset label test per neighbor."""
+    from bisect import insort
+
+    from pgvectorscale_spark.functions.distance import np_hamming
+
+    def dists(idxs):
+        idxs = np.array(idxs)
+        if g.codes is not None and qcode is not None:
+            return np_hamming(g.codes[idxs], qcode).astype(np.float64)
+        sq = float(q32 @ q32) if g.distance_type == "l2" else 0.0
+        return g._dists_fast(q32, sq, idxs)
+
+    def overlap(a, b):
+        return bool(a) and bool(b) and not a.isdisjoint(b)
+
+    L = search_list_size or g.L
+    starts = g._start_nodes(None if no_filter else query_labels)
+    if not starts:
+        return [], []
+    q32 = np.asarray(q, dtype=np.float32)
+    ids_l = g.ids.tolist()
+    cand = sorted([d, ids_l[i], i, False] for d, i in zip(dists(starts).tolist(), starts))
+    seen = set(starts)
+    visited, visited_d = [], []
+    while True:
+        nxt = None
+        for j in range(min(L, len(cand))):
+            if not cand[j][3]:
+                nxt = cand[j]
+                break
+        if nxt is None:
+            break
+        nxt[3] = True
+        visited.append(nxt[2])
+        visited_d.append(nxt[0])
+        neigh = [v for v in g.adj[nxt[2]] if v not in seen]
+        if not no_filter and query_labels:
+            neigh = [v for v in neigh if overlap(g.labels[v], query_labels)]
+        if not neigh:
+            continue
+        seen.update(neigh)
+        for d, v in zip(dists(neigh).tolist(), neigh):
+            insort(cand, [d, ids_l[v], v, False])
+        if len(cand) > 4 * L:
+            cand = cand[: 2 * L]
+    if include_frontier:
+        vset = set(visited)
+        for d, _, v, _ in cand:
+            if v not in vset:
+                visited.append(v)
+                visited_d.append(d)
+                vset.add(v)
+    return visited, visited_d
+
+
+_FILTERS = {"unfiltered": None, "one_label": frozenset({1}), "two_labels": frozenset({0, 3})}
+
+
+def _walk_queries(g: VamanaGraph, rng, count=24):
+    qs = rng.normal(size=(count, g.mat.shape[1]))
+    if g.distance_type == "cosine":
+        qs = np_normalize(qs)
+    qcodes = g._quantizer.quantize_matrix(qs) if g.codes is not None else [None] * count
+    return list(zip(qs, qcodes))
+
+
+def _assert_walks_match(g: VamanaGraph, queries, labels, L=24):
+    """greedy_search and search(k=0) equal the reference walk for every
+    query: visited order, distances and frontier, filtered or not."""
+    walked = 0
+    for q, qc in queries:
+        for frontier in (False, True):
+            want = _reference_walk(
+                g, q, L, query_labels=labels, no_filter=not labels, qcode=qc,
+                include_frontier=frontier,
+            )
+            got = g.greedy_search(
+                q, L, query_labels=labels, no_filter=not labels, qcode=qc,
+                include_frontier=frontier,
+            )
+            assert got == want
+            assert all(type(v) is int for v in got[0])
+            assert all(type(d) is float for d in got[1])
+            walked += len(got[0])
+        # search()'s pool and label recheck
+        vis, vd = want
+        keep = [
+            i for i, v in enumerate(vis)
+            if not labels or (g.labels[v] and not g.labels[v].isdisjoint(labels))
+        ]
+        vis, vd = np.array(vis)[keep], np.array(vd)[keep]
+        order = np.lexsort((g.ids[vis], vd)) if len(vis) else []
+        idx, d = g.search(q, k=0, search_list_size=L, query_labels=labels, qcode=qc)
+        assert idx.tolist() == vis[order].tolist() and d.tolist() == vd[order].tolist()
+    assert walked > 10 * len(queries)  # the walks went somewhere
+
+
+def _walk_graph(dist, sbq, seed=3, n=400, d=16):
+    g, rng = _labelled_graph(dist, sbq, seed=seed, n=n, d=d, num_neighbors=10, search_list_size=24)
+    if sbq:
+        g._quantizer = SbqQuantizer(g.mat.mean(axis=0), g.mat.var(axis=0), 2)
+    g.build_bulk(chunk=128)
+    g.finalize()
+    return g, rng
+
+
+@pytest.mark.parametrize("filt", list(_FILTERS))
+@pytest.mark.parametrize("sbq", [False, True], ids=["float", "sbq"])
+@pytest.mark.parametrize("dist", ["cosine", "l2", "inner_product"])
+def test_walk_matches_reference_walk(dist, sbq, filt):
+    g, rng = _walk_graph(dist, sbq)
+    _assert_walks_match(g, _walk_queries(g, rng), _FILTERS[filt])
+
+
+@pytest.mark.parametrize("sbq", [False, True], ids=["float", "sbq"])
+def test_walk_matches_reference_on_rehydrated_and_grown_graphs(sbq):
+    """A graph rehydrated from node rows and one grown with out-of-order
+    ids, both after replace(): the walk state follows every payload
+    change."""
+    import pandas as pd
+
+    from pgvectorscale_spark.operators.diskann import _emit_nodes, _graph_from_pdf
+
+    g, rng = _walk_graph("cosine", sbq, n=300)
+    quant = getattr(g, "_quantizer", None)
+    gids = np.arange(300, dtype=np.int64) * 3 + 10  # room for ids in between
+    pdf = pd.DataFrame({
+        "node_id": gids,
+        "vector": list(g.mat),
+        "bq_code": list(g.codes.view(np.int64)) if sbq else [None] * 300,
+        "labels": [sorted(x) if x is not None else None for x in g.labels],
+        "neighbors": [None] * 300,
+        "is_default_start": [False] * 300,
+        "start_labels": [None] * 300,
+    })
+    pdf = _emit_nodes(pdf, g, gids).iloc[::-1]  # rehydration sorts by id
+    meta = {
+        "num_dimensions_to_index": 16, "num_dimensions": 16, "distance_type": "cosine",
+        "storage_type": "memory_optimized" if sbq else "plain", "has_labels": True,
+        "num_neighbors": 10, "search_list_size": 24, "max_alpha": 1.2,
+    }
+    qstate = (quant.means, quant.variances, quant.bits) if sbq else None
+    r, _ = _graph_from_pdf(pdf, meta, qstate)
+    assert r.adj == g.adj and all(type(v) is int for a in r.adj for v in a)
+    r._quantizer = quant
+    # replace(): new payload and labels (one of them new to the graph)
+    for i in rng.choice(300, size=12, replace=False):
+        vec = np_normalize(rng.normal(size=(1, 16)))[0]
+        code = quant.quantize(vec) if sbq else None
+        r.replace(int(i), vec, code, frozenset({int(rng.integers(0, 5)), 9}))
+    _assert_walks_match(r, _walk_queries(r, rng), frozenset({1, 9}))
+    # grow(): ids that land between and before the stored ones, then insert
+    new_ids = np.array([4, 500, 11, 2, 901, 13], dtype=np.int64)
+    mat = np_normalize(rng.normal(size=(len(new_ids), 16))).astype(np.float32)
+    labels = [frozenset({1}), None, frozenset({3, 9}), frozenset(), frozenset({0}), frozenset({7})]
+    local = r.grow(mat, new_ids, codes=quant.quantize_matrix(mat) if sbq else None, labels=labels)
+    for i in local:
+        r.insert(i)
+    r.replace(local[0], mat[1], quant.quantize(mat[1]) if sbq else None, frozenset({3}))
+    for labels in _FILTERS.values():
+        _assert_walks_match(r, _walk_queries(r, rng, count=12), labels)
+
+
+@pytest.mark.parametrize("sbq", [False, True], ids=["float", "sbq"])
+def test_streaming_insert_adjacency_matches_reference_walk(sbq):
+    """Streaming inserts walk the graph (labelled points twice): the same
+    adjacency and start nodes as inserts through the reference walk."""
+
+    def build(reference: bool):
+        g, _ = _labelled_graph("cosine", sbq, seed=8, n=250, num_neighbors=8, search_list_size=16)
+        if reference:
+            g.greedy_search = lambda *a, **kw: _reference_walk(g, *a, **kw)
+        g.build()
+        return g
+
+    fast, ref = build(False), build(True)
+    assert fast.adj == ref.adj
+    assert fast.start_by_label == ref.start_by_label
