@@ -58,7 +58,6 @@ from pgvectorscale_spark.functions.distance import (
     distance_expr,
     l2_normalize,
     np_distance,
-    np_distance_pairwise,
     np_normalize,
 )
 from pgvectorscale_spark.operators.partitioning import (
@@ -82,9 +81,11 @@ from pgvectorscale_spark.types import (
     StorageType,
 )
 
+from pgvectorscale_spark.operators import routing
 from pgvectorscale_spark.operators.index_util import (
     ConcurrentWriterError,
-    dir_exists as _dir_exists,
+    window_topk,
+    write_sidecar_atomic,
     writer_lock,
 )
 
@@ -125,6 +126,16 @@ _NODE_SCHEMA = (
 )
 
 _RESULT_SCHEMA = "query_id long, node_id long, distance double, rank integer"
+# a probe's per-shard exact top candidates, before the window top-k
+_CAND_SCHEMA = "query_id long, node_id long, distance double"
+
+
+def _shard_token(meta: IndexMeta):
+    """shard -> its executor cache token (build_id, the shard's mutation
+    nonce, else the index's): a mutation rotates only its touched
+    shards' nonces, so the other shards' executor caches stay hot."""
+    build_id, base, muts = meta.build_id, meta.mutation_id, dict(meta.shard_mutations)
+    return lambda shard: (build_id, muts.get(str(shard)) or base)
 
 
 def _node_cols() -> list[str]:
@@ -769,24 +780,6 @@ def _load_shard_graph(
     return g, gids, dead, fullmat, False
 
 
-def _write_sidecar_atomic(final_path: str, table) -> None:
-    """Publish a tiny sidecar table as ONE parquet file, atomically for
-    readers. Local paths: temp file + os.replace (rename is atomic).
-    Remote URIs: a direct single-object write — os.replace cannot span a
-    remote filesystem, and object stores make the put itself atomic (the
-    object appears complete or not at all)."""
-    import pyarrow.parquet as papq
-
-    if "://" in final_path:
-        papq.write_table(table, final_path)
-        return
-    import uuid as _uuid
-
-    tmp = f"{final_path}.{_uuid.uuid4().hex[:8]}.tmp"
-    papq.write_table(table, tmp)
-    os.replace(tmp, final_path)
-
-
 def _swept_marker_present(shard_dir: str) -> bool:
     """True iff a fold sweep left its marker for this partition subdir
     (index_util.swept_marker_path) — the executor-side staleness probe."""
@@ -1201,6 +1194,9 @@ class DiskannIndex:
         self.spark = spark
         self.path = path
         self.meta = meta
+        self._label_coverage = routing.LabelCoverage(
+            path, self._LABEL_ROUTING_FILE, ("shard", "label")
+        )
 
     # -- build ---------------------------------------------------------------
 
@@ -1574,14 +1570,14 @@ class DiskannIndex:
             # float32(vsum / count), exactly the stored sufficient stats.
             idx._write_routing_rows(_routing_rows_of(stats))
             if meta.has_labels:
-                idx._write_label_pairs(_label_pairs_of(stats))
+                idx._label_coverage.write(_label_pairs_of(stats))
             if tune_routing:
                 # routing-recall curve for recall_target probe selection
                 # (one exact linear pass over the persisted corpus; see
                 # tune_routing's docstring for the staleness contract)
                 sc.setJobDescription("diskann build: tuning routing recall")
                 qids, qmat = facts["sample"]
-                idx._tune_routing(idx._routing_table(), base, n, qids, qmat, 10, True)
+                routing.tune_curve(idx, idx._routing_table(), base, n, qids, qmat, "shard", 10, True)
                 sc.setJobDescription(None)
         return idx
 
@@ -1680,55 +1676,38 @@ class DiskannIndex:
             .drop("_rn", "_seq")
         )
 
+    def _live(self, shards: "Sequence[int] | None" = None) -> DataFrame:
+        """``nodes(shards)`` without tombstoned rows."""
+        return self.nodes(shards).filter(~F.coalesce(F.col("deleted"), F.lit(False)))
+
     # -- shard routing -----------------------------------------------------------
 
-    _ROUTING_SCHEMA = "shard int, centroid array<float>, count long, vsum array<double>"
-    # atomic single-file sidecar layout (tiny tables: num_shards rows /
-    # labels x shards rows). Published with temp-file + os.replace, so a
-    # concurrent reader sees the complete old or complete new table, never
-    # the deleted-dir window a Spark overwrite opens. Routing is an
+    # atomic single-file sidecars (tiny tables: num_shards rows / labels x
+    # shards rows), published with temp-file + os.replace, so a concurrent
+    # reader sees the complete old or complete new table. Routing is an
     # ADVISORY probe hint — a reader pairing a slightly newer table with
     # its own (older) snapshot only shifts which shards it probes first,
     # never which rows are correct — so unlike IVF centroids it needs no
-    # meta-versioned generation. Legacy dir layouts remain readable;
-    # rebuilds queue them as trash.
+    # meta-versioned generation.
     _ROUTING_FILE = "routing.parquet"
     _LABEL_ROUTING_FILE = "label_routing.parquet"
 
-    def _sidecar_source(self, file_name: str, legacy_dir: str) -> str | None:
-        """Readable sidecar location: atomic file if present, else the
-        legacy directory, else None."""
-        from pgvectorscale_spark.operators.index_util import file_exists
-
-        f = os.path.join(self.path, file_name)
-        if os.path.isfile(f) or file_exists(f):
-            return f
-        d = os.path.join(self.path, legacy_dir)
-        return d if _dir_exists(d) else None
-
-    def _read_sidecar(self, file_name: str, legacy_dir: str):
-        """A small sidecar as a pyarrow Table read on the driver (no Spark
-        job), or None when it is absent. Reads the atomic file, else the
-        legacy directory. The single file goes through ParquetFile: the
-        dataset reader behind read_table costs the driver ~5 MB of RSS."""
-        import pyarrow.parquet as papq
-
-        src = self._sidecar_source(file_name, legacy_dir)
-        if src is None:
-            return None
-        if src.endswith(file_name):
-            return papq.ParquetFile(src).read(use_threads=False)
-        return papq.read_table(src, use_threads=False)
-
     def _routing_rows(self) -> list[tuple] | None:
         """Stored routing rows (shard, centroid, count, vsum) in file order,
-        with count and vsum None when the sidecar predates the sufficient
-        statistics. None for pre-routing indexes."""
-        try:
-            t = self._read_sidecar(self._ROUTING_FILE, "routing")
-        except Exception:  # e.g. schema-less dir from an empty-table build
+        read on the driver with pyarrow (no Spark job), with count and vsum
+        None when the sidecar predates the sufficient statistics. None for
+        pre-routing indexes."""
+        import pyarrow.parquet as papq
+
+        from pgvectorscale_spark.operators.index_util import file_exists
+
+        f = os.path.join(self.path, self._ROUTING_FILE)
+        if not (os.path.isfile(f) or file_exists(f)):
             return None
-        if t is None or not t.num_rows:
+        # ParquetFile, not read_table: the dataset reader behind
+        # read_table costs the driver ~5 MB of RSS
+        t = papq.ParquetFile(f).read(use_threads=False)
+        if not t.num_rows:
             return None
         d = t.to_pydict()
         stats = "count" in d and "vsum" in d
@@ -1738,14 +1717,6 @@ class DiskannIndex:
             (int(sh), list(c), None if n is None else int(n), v)
             for sh, c, n, v in zip(d["shard"], d["centroid"], counts, vsums)
         ]
-
-    def _stored_label_pairs(self) -> set[tuple[int, int]] | None:
-        """The (shard, label) coverage sidecar, or None when absent."""
-        t = self._read_sidecar(self._LABEL_ROUTING_FILE, "label_routing")
-        if t is None:
-            return None
-        d = t.to_pydict()
-        return {(int(sh), int(l)) for sh, l in zip(d["shard"], d["label"])}
 
     def _write_routing_rows(self, rows: list[tuple]) -> None:
         """Atomically publish the routing table rows (shard, centroid,
@@ -1769,22 +1740,7 @@ class DiskannIndex:
             },
             schema=schema,
         )
-        _write_sidecar_atomic(os.path.join(self.path, self._ROUTING_FILE), table)
-
-    def _write_label_pairs(self, pairs) -> None:
-        """Atomically publish the (shard, label) coverage sidecar."""
-        import pyarrow as pa
-
-        pairs = sorted({(int(s), int(l)) for s, l in pairs})
-        schema = pa.schema([("shard", pa.int32()), ("label", pa.int32())])
-        table = pa.Table.from_pydict(
-            {"shard": [p[0] for p in pairs], "label": [p[1] for p in pairs]},
-            schema=schema,
-        )
-        _write_sidecar_atomic(
-            os.path.join(self.path, self._LABEL_ROUTING_FILE), table
-        )
-        self._label_routing_memo = None  # invalidate the driver memo
+        write_sidecar_atomic(os.path.join(self.path, self._ROUTING_FILE), table)
 
     def _totals_bound(self) -> tuple[int, int, int]:
         """``_shard_totals``'s (num_shards, dims, budget) for this index."""
@@ -1815,7 +1771,7 @@ class DiskannIndex:
         if touched is not None:
             rows = self._routing_rows()
             stored = {r[0]: r for r in rows} if rows and rows[0][2] is not None else None
-            stored_pairs = self._stored_label_pairs() if labelled else set()
+            stored_pairs = self._label_coverage.pairs() if labelled else set()
             if stored is None or stored_pairs is None:
                 # no stored stats or label sidecar to merge with (e.g. an
                 # index migrated from a pre-sidecar format): an incremental
@@ -1833,7 +1789,7 @@ class DiskannIndex:
             pairs |= {p for p in stored_pairs if p[0] not in touched}
         self._write_routing_rows(fresh)
         if labelled:
-            self._write_label_pairs(pairs)
+            self._label_coverage.write(pairs)
 
     def _routing_table(self) -> tuple[np.ndarray, np.ndarray] | None:
         """(shard_ids, centroid_matrix) or None for pre-routing indexes."""
@@ -1849,9 +1805,10 @@ class DiskannIndex:
     ) -> dict[str, float]:
         """Measure the routing-recall curve and store it in the meta.
 
-        For a deterministic query sample (the ``sample_queries`` smallest
-        live node ids), compute the exact top-k (one distributed pass) and
-        each true neighbor's home shard; the curve maps probe count p to
+        For a deterministic query sample (``sample_queries`` live rows in
+        xxhash64(node_id) order, see ``routing.tune``), compute the
+        exact top-k (one distributed pass) and each true neighbor's home
+        shard; the curve maps probe count p to
         the fraction of true neighbors whose shard is among the query's p
         nearest centroids. This is the ROUTING term of routed recall —
         an upper bound the per-shard graph walk then approaches, and the
@@ -1880,145 +1837,25 @@ class DiskannIndex:
         rebuilds/compacts re-tune unconditionally. Cost: one exact linear
         pass over the corpus for ``sample_queries`` queries — opt out
         with ``build(..., tune_routing=False)``."""
-        table = self._routing_table()
-        if table is None:
-            raise ValueError(
-                f"index at {self.path} has no routing table: the recall "
-                "curve only exists for kmeans-sharded indexes"
-            )
-        live = self.nodes().filter(~F.coalesce(F.col("deleted"), F.lit(False)))
-        live_count = live.count()
-        # Deterministic sample in xxhash64(node_id) order, NOT smallest-id
-        # order: kmeans seeding is lowest-id (similarity.kmeans_centroids),
-        # so a lowest-id sample is exactly the set of vectors the Voronoi
-        # cells were grown around — each such query sits at its centroid's
-        # anchor and its whole neighborhood routes to that one cell, which
-        # saturates the curve at p=1 regardless of how real queries route
-        # (the round-10 64x degenerate curve). Hash order is uncorrelated
-        # with the seed rule and with any id-assignment pattern in the
-        # data, and stays reproducible (ties broken by id). The build takes
-        # the same sample from its corpus facts pass.
-        sample = (
-            live.select("node_id", "vector")
-            .orderBy(F.xxhash64("node_id").asc(), F.col("node_id").asc())
-            .limit(int(sample_queries))
-            .collect()
+        return routing.tune(
+            self, self._routing_table(), self._live(), "shard", sample_queries, k, held_out
         )
-        qids = np.array([int(r["node_id"]) for r in sample], dtype=np.int64)
-        qmat = np.array([r["vector"] for r in sample], dtype=np.float64)
-        return self._tune_routing(table, live, live_count, qids, qmat, k, held_out)
 
-    def _tune_routing(
-        self, table, live: DataFrame, live_count: int, qids: np.ndarray,
-        qmat: np.ndarray, k: int, held_out: bool,
-    ) -> dict[str, float]:
-        """``tune_routing`` for a given routing table, live (node_id, shard,
-        vector) frame, its row count and the sample queries: one exact pass
-        that carries each neighbor's shard."""
-        from pgvectorscale_spark.operators.knn import _exact_topk
-
-        if not len(qids):
-            raise ValueError("cannot tune routing on an empty index")
-        if held_out and live_count <= 1:
-            raise ValueError(
-                "cannot tune routing held-out on a 1-row index: a held-out "
-                "query has no neighbors left to route to"
-            )
-        sids, cents = table
-        # held-out: ask for k+1 and drop each query's own row (if present)
-        # so every query keeps its k nearest OTHER vectors — the exact pass
-        # still runs once over the full corpus (filtering the corpus per
-        # query would need sample_queries passes)
-        topk = _exact_topk(
-            live, qids, qmat, k + 1 if held_out else k, self.meta.distance_type,
-            "vector", "node_id", carry=("shard",),
-        ).collect()
-        by_q: dict[int, list[int]] = {}
-        shard_of: dict[int, int] = {}
-        for r in sorted(topk, key=lambda r: (int(r["query_id"]), int(r["rank"]))):
-            qid, nid = int(r["query_id"]), int(r["node_id"])
-            if held_out and nid == qid:
-                continue
-            if len(by_q.setdefault(qid, [])) < k:
-                by_q[qid].append(nid)
-                shard_of[nid] = int(r["shard"])
-        qids = [int(q) for q in qids]
-        if self.meta.distance_type == DistanceType.COSINE.value:
-            qmat = np_normalize(qmat)
-            cents = np_normalize(cents)
-        order = np.argsort(
-            np_distance_pairwise(
-                cents, qmat, self.meta.distance_type, assume_normalized=True
-            ),
-            axis=1,
-        )  # (queries, shards): shard-table row indices by proximity
-        n_shards = len(sids)
-        ladder: list[int] = []
-        p = 1
-        while p < n_shards:
-            ladder.append(p)
-            p *= 2
-        ladder.append(n_shards)
-        curve: dict[str, float] = {}
-        for p in ladder:
-            tot = hit = 0
-            for qi, qid in enumerate(qids):
-                probed = {int(sids[c]) for c in order[qi, :p]}
-                for nid in by_q.get(qid, []):
-                    tot += 1
-                    hit += int(shard_of[nid] in probed)
-            curve[str(p)] = round(hit / max(tot, 1), 4)
-        self.meta.routing_recall_curve = curve
-        self.meta.routing_recall_k = int(k)
-        self.meta.routing_recall_held_out = bool(held_out)
-        self.meta.routing_tuned_nodes = int(live_count)
-        self.meta.save(self.path)
-        return curve
-
-    # Live-count drift past this fraction of the tuned-at count marks the
-    # routing-recall curve stale (folds then re-tune). 0.25 keeps re-tunes
-    # rare (one exact pass per 25% corpus churn) while bounding how far the
-    # centroids/contents the curve was measured against can drift.
-    ROUTING_DRIFT_BOUND = 0.25
+    ROUTING_DRIFT_BOUND = routing.ROUTING_DRIFT_BOUND
 
     def routing_curve_stale(
         self, drift: float | None = None, live_count: int | None = None
     ) -> bool:
         """True when the stored routing-recall curve no longer describes
-        the current corpus: unstamped (pre-field or in-sample legacy
-        metas), measured in-sample, or live-count drift beyond ``drift``
-        (default ``ROUTING_DRIFT_BOUND``). Counts the corpus unless the
-        caller (a fold that already counted) passes ``live_count``."""
-        if not self.meta.routing_recall_curve:
-            return False  # nothing to be stale
-        if not self.meta.routing_tuned_nodes or not self.meta.routing_recall_held_out:
-            return True
-        bound = self.ROUTING_DRIFT_BOUND if drift is None else float(drift)
-        live = (
-            self.nodes()
-            .filter(~F.coalesce(F.col("deleted"), F.lit(False)))
-            .count()
-            if live_count is None
-            else int(live_count)
-        )
-        tuned = self.meta.routing_tuned_nodes
-        return abs(live - tuned) / max(tuned, 1) > bound
+        the current corpus (``routing.curve_stale``). Counts the corpus
+        unless the caller (a fold that already counted) passes
+        ``live_count``."""
+        return routing.curve_stale(self.meta, lambda: self._live().count(), drift, live_count)
 
     def auto_probe_shards(self, recall_target: float) -> int:
         """Smallest probe count whose measured routing recall reaches the
-        target (falls back to every shard when even the full curve point
-        sits below it — which cannot happen for the stored curve, whose
-        last point is 1.0 by construction)."""
-        curve = self.meta.routing_recall_curve
-        if not curve:
-            raise ValueError(
-                f"index at {self.path} has no routing-recall curve: build "
-                "with tune_routing=True (kmeans) or call tune_routing()"
-            )
-        for p in sorted(int(x) for x in curve):
-            if curve[str(p)] >= recall_target:
-                return p
-        return int(self.meta.num_shards)
+        target (``routing.auto_probe``)."""
+        return routing.auto_probe(self, recall_target, "tune_routing")
 
     def _ensure_id_routing(self) -> bool:
         """Backfill the id -> shard routing sidecar for a pre-sidecar
@@ -2091,49 +1928,12 @@ class DiskannIndex:
         if self.meta.has_labels:
             # labels sidecar: batch pairs only ever ADD coverage (tombstones
             # over-include, recall-safe — same semantics as the re-agg path)
-            pairs = self._stored_label_pairs()
-            self._write_label_pairs(
+            pairs = self._label_coverage.pairs()
+            self._label_coverage.write(
                 _label_pairs_of(_shard_totals(self.nodes(), *self._totals_bound()))
                 if pairs is None
                 else pairs | {(s, l) for s, a in add.items() for l in a[2]}
             )
-
-    def _label_shards(self, labels) -> set[int] | None:
-        """Shards that contain at least one row bearing any of `labels` —
-        keeps centroid routing from silently skipping the only shard(s)
-        holding a rare label.
-
-        Served from the tiny ``label_routing`` sidecar (labels x shards
-        rows, maintained by ``_write_routing`` per mutation) with a
-        per-epoch driver memo — NOT a per-query-batch distinct over the
-        corpus, which at 100 TB would put a full node-table scan in every
-        labeled routed query. Falls back to that scan only when the sidecar
-        is absent (e.g. an index built before it existed)."""
-        if not self.meta.has_labels:
-            return None
-        want = [int(x) for x in labels]
-        memo = getattr(self, "_label_routing_memo", None)
-        token = (self.meta.build_id, self.meta.epoch)
-        if memo is not None and memo[0] == token:
-            mapping = memo[1]
-        elif (pairs := self._stored_label_pairs()) is not None:
-            mapping: dict[int, set[int]] = {}
-            for sh, l in pairs:
-                mapping.setdefault(l, set()).add(sh)
-            self._label_routing_memo = (token, mapping)
-        else:
-            mapping = None
-        if mapping is not None:
-            return {s for l in want for s in mapping.get(l, ())}
-        rows = (
-            self.nodes()
-            .select("shard", F.explode("labels").alias("_l"))
-            .filter(F.col("_l").isin(want))
-            .select("shard")
-            .distinct()
-            .collect()
-        )
-        return {int(r["shard"]) for r in rows}
 
     # -- serving ---------------------------------------------------------------
 
@@ -2294,6 +2094,24 @@ class DiskannIndex:
         qlabels = frozenset(int(l) for l in labels) if labels else None
         return search_list_size, max(k, rescore), probe_shards, qlabels
 
+    def _route_plan(self, probe_shards, qlabels):
+        """(routing table, label-coverage shards) when queries route to
+        their ``probe_shards`` nearest shards, else None (every shard is
+        probed). A filtered query also probes every shard holding one of
+        its labels, or a rare label concentrated in an unprobed cell would
+        silently disappear."""
+        if probe_shards is None or probe_shards >= self.meta.num_shards:
+            return None
+        table = self._routing_table()
+        if table is None:
+            return None
+        extra = (
+            self._label_coverage.partitions(self.meta, qlabels)
+            if qlabels and self.meta.has_labels
+            else ()
+        )
+        return table, sorted(extra)
+
     def search_batch(
         self,
         queries_df: DataFrame | None,
@@ -2340,6 +2158,7 @@ class DiskannIndex:
         if front is None:  # an empty label filter: no query is collected
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
         search_list_size, limit, probe_shards, qlabels = front
+        plan = self._route_plan(probe_shards, qlabels)
         qrows = (
             _qrows
             if _qrows is not None
@@ -2347,46 +2166,24 @@ class DiskannIndex:
         )
         qids = np.array([r[0] for r in qrows], dtype=np.int64)
         qmat = np.array([r[1] for r in qrows], dtype=np.float64)
+        # shard routing: shard -> indices of the queries that probe it
+        route: dict[int, np.ndarray] | None = None
+        if plan is not None:
+            route = {}
+            lists = routing.probe_lists(plan[0], qmat, meta_d["distance_type"], probe_shards, plan[1])
+            for qi, shards in enumerate(lists):
+                for s in shards:
+                    route.setdefault(s, []).append(qi)
+            route = {s: np.array(v, dtype=np.int64) for s, v in route.items()}
         if meta_d["distance_type"] == DistanceType.COSINE.value:
             qmat = np_normalize(qmat)  # query-time normalization (labels/mod.rs:209-238)
-        # shard routing: per-query top-p shards by centroid distance. The
-        # routing table is tiny (num_shards rows) and computed driver-side.
-        route: dict[int, np.ndarray] | None = None
-        if probe_shards is not None and probe_shards < self.meta.num_shards:
-            table = self._routing_table()
-            if table is not None:
-                sids, cents = table
-                if meta_d["distance_type"] == DistanceType.COSINE.value:
-                    # centroids of unit vectors are not unit — normalize so
-                    # routing ranks by angle, not centroid magnitude
-                    cents = np_normalize(cents)
-                route = {}
-                cd = np_distance_pairwise(
-                    cents, qmat, meta_d["distance_type"], assume_normalized=True
-                )  # (queries, shards) — one GEMM, not batch-many GEMVs
-                nearest = np.argsort(cd, axis=1)[:, :probe_shards]
-                # label-aware widening: a filtered query must also probe
-                # every shard that holds its labels, or a rare label
-                # concentrated in an unprobed cell silently disappears
-                extra = self._label_shards(labels) if qlabels else None
-                for qi in range(len(qmat)):
-                    probed = {int(sids[col]) for col in nearest[qi]}
-                    if extra:
-                        probed |= extra
-                    for s in probed:
-                        route.setdefault(s, []).append(qi)
-                route = {s: np.array(v, dtype=np.int64) for s, v in route.items()}
         b = self.spark.sparkContext.broadcast(
             (qids, qmat, meta_d, self._quantizer_state(), qlabels, limit, search_list_size, route)
         )
         store = self._store()
-        # per-shard cache tokens: a mutation rotates only its touched
-        # shards' nonces, so the other shards' executor caches stay hot
-        base_token = (self.meta.build_id, self.meta.mutation_id)
-        shard_muts = dict(self.meta.shard_mutations)
+        token = _shard_token(self.meta)
 
         def shard_probe(shard: int) -> pd.DataFrame:
-            cache_token = (base_token[0], shard_muts.get(str(shard)) or base_token[1])
             qids_l, qmat_l, md, qstate, qlab, lim, sls, route_l = b.value
             my_queries = (
                 route_l.get(shard, np.array([], dtype=np.int64))
@@ -2394,13 +2191,13 @@ class DiskannIndex:
                 else np.arange(len(qids_l))
             )
             if route_l is not None and not len(my_queries):
-                return pd.DataFrame({"query_id": [], "node_id": [], "wdist": []}).astype(
-                    {"query_id": "int64", "node_id": "int64", "wdist": "float64"}
+                return pd.DataFrame({"query_id": [], "node_id": [], "distance": []}).astype(
+                    {"query_id": "int64", "node_id": "int64", "distance": "float64"}
                 )
             out_q, out_n, out_d = _probe_shard_block(
                 store,
                 shard,
-                cache_token,
+                token(shard),
                 md,
                 qstate,
                 qids_l[my_queries],
@@ -2411,8 +2208,8 @@ class DiskannIndex:
                 stats,
             )
             return pd.DataFrame(
-                {"query_id": out_q, "node_id": out_n, "wdist": out_d}
-            ).astype({"query_id": "int64", "node_id": "int64", "wdist": "float64"})
+                {"query_id": out_q, "node_id": out_n, "distance": out_d}
+            ).astype({"query_id": "int64", "node_id": "int64", "distance": "float64"})
 
         # Stage-1 fan-out (round 14): one range partition per PROBED shard,
         # mapInPandas — zero Exchange (the old repartition(n, "shard") +
@@ -2432,18 +2229,11 @@ class DiskannIndex:
 
         if shard_list:
             cand = self.spark.range(0, len(shard_list), 1, len(shard_list)).mapInPandas(
-                probe_partition, schema="query_id long, node_id long, wdist double"
+                probe_partition, schema=_CAND_SCHEMA
             )
         else:  # no queries routed anywhere (empty query batch)
-            cand = self.spark.createDataFrame(
-                [], "query_id long, node_id long, wdist double"
-            )
-        w = Window.partitionBy("query_id").orderBy(F.col("wdist").asc(), F.col("node_id").asc())
-        return (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "node_id", F.col("wdist").alias("distance"), "rank")
-        )
+            cand = self.spark.createDataFrame([], _CAND_SCHEMA)
+        return window_topk(cand, k)
 
     def ann_join(
         self,
@@ -2505,24 +2295,11 @@ class DiskannIndex:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
         search_list_size, limit, probe_shards, qlabels = front
         num_shards = self.meta.num_shards
+        plan = self._route_plan(probe_shards, qlabels)
         # the routed fan-out row is (shard, query_id, vec) x p copies —
-        # the join's biggest shuffle. Keep the query column's element
-        # type: float32-at-rest vectors ship as array<float> (half the
-        # bytes of an unconditional array<double>); the probe kernel
-        # re-ups to float64 numpy either way, so results are unchanged
-        # for values that are float32 at rest (round 14).
-        from pyspark.sql.types import ArrayType, FloatType
-
-        qf = queries_df.schema[query_vec_col].dataType
-        vec_t = (
-            "array<float>"
-            if isinstance(qf, ArrayType) and isinstance(qf.elementType, FloatType)
-            else "array<double>"
-        )
-        q = queries_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).cast(vec_t).alias("query_vec"),
-        )
+        # the join's biggest shuffle; the probe kernel re-ups to float64
+        # numpy either way
+        q, vec_t = routing.query_frame(queries_df, query_id_col, query_vec_col)
         sc = self.spark.sparkContext
         # route-stage parallelism (round 15, guide §2.5/§7.1): a query frame
         # that arrives in fewer partitions than the cluster serializes the
@@ -2538,53 +2315,10 @@ class DiskannIndex:
         from pgvectorscale_spark.operators.dedup import _widen
 
         q = _widen(q)
-        route_bc = None
-        if probe_shards is not None and probe_shards < num_shards:
-            table = self._routing_table()
-            if table is not None:
-                sids, cents = table
-                if meta_d["distance_type"] == DistanceType.COSINE.value:
-                    cents = np_normalize(cents)
-                extra = self._label_shards(labels) if qlabels else None
-                route_bc = sc.broadcast(
-                    (
-                        sids,
-                        cents,
-                        meta_d["distance_type"],
-                        int(probe_shards),
-                        sorted(int(s) for s in (extra or ())),
-                    )
-                )
-        if route_bc is not None:
-
-            def route_fn(batches):
-                sids_l, cents_l, dt, p, extra_l = route_bc.value
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    qm = np.stack(pdf["query_vec"].to_numpy()).astype(np.float64)
-                    if dt == DistanceType.COSINE.value:
-                        qm = np_normalize(qm)
-                    cd = np_distance_pairwise(
-                        cents_l, qm, dt, assume_normalized=True
-                    )  # (batch, shards) — one GEMM per Arrow batch
-                    nearest = np.argsort(cd, axis=1)[:, :p]
-                    vecs = pdf["query_vec"].tolist()
-                    qids = pdf["query_id"].tolist()
-                    o_s, o_q, o_v = [], [], []
-                    for i in range(len(qm)):
-                        probed = {int(sids_l[c]) for c in nearest[i]}
-                        probed.update(extra_l)
-                        for s in sorted(probed):
-                            o_s.append(s)
-                            o_q.append(int(qids[i]))
-                            o_v.append(vecs[i])
-                    yield pd.DataFrame(
-                        {"shard": o_s, "query_id": o_q, "query_vec": o_v}
-                    )
-
-            routed = q.mapInPandas(
-                route_fn, f"shard int, query_id long, query_vec {vec_t}"
+        if plan is not None:
+            routed = routing.route_frame(
+                q, plan[0], meta_d["distance_type"], probe_shards, plan[1],
+                "shard", "query_vec", vec_t,
             )
         else:
             routed = q.select(
@@ -2623,8 +2357,7 @@ class DiskannIndex:
             (meta_d, self._quantizer_state(), qlabels, limit, search_list_size)
         )
         store = self._store()
-        base_token = (self.meta.build_id, self.meta.mutation_id)
-        shard_muts = dict(self.meta.shard_mutations)
+        token = _shard_token(self.meta)
 
         def probe_fn(batches):
             md, qstate, qlab, lim, sls = b.value
@@ -2633,39 +2366,25 @@ class DiskannIndex:
                     continue
                 for shard_v, grp in pdf.groupby("shard", sort=True):
                     shard = int(shard_v)
-                    cache_token = (
-                        base_token[0],
-                        shard_muts.get(str(shard)) or base_token[1],
-                    )
                     qids_l = grp["query_id"].to_numpy(dtype=np.int64)
                     qmat_l = np.stack(grp["query_vec"].to_numpy()).astype(np.float64)
                     if md["distance_type"] == DistanceType.COSINE.value:
                         qmat_l = np_normalize(qmat_l)
                     out_q, out_n, out_d = _probe_shard_block(
-                        store, shard, cache_token, md, qstate,
+                        store, shard, token(shard), md, qstate,
                         qids_l, qmat_l, qlab, lim, sls, stats,
                     )
                     if not out_q:
                         continue
                     yield pd.DataFrame(
-                        {"query_id": out_q, "node_id": out_n, "wdist": out_d}
+                        {"query_id": out_q, "node_id": out_n, "distance": out_d}
                     )
 
-        cand = routed.mapInPandas(probe_fn, "query_id long, node_id long, wdist double")
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("wdist").asc(), F.col("node_id").asc()
-        )
-        return (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "node_id", F.col("wdist").alias("distance"), "rank")
-        )
+        return window_topk(routed.mapInPandas(probe_fn, _CAND_SCHEMA), k)
 
     def full_scan(self) -> DataFrame:
         """All live rows through the index (accuracy-scaffold completeness check)."""
-        return self.nodes().filter(~F.coalesce(F.col("deleted"), F.lit(False))).select(
-            "node_id", "vector", "labels"
-        )
+        return self._live().select("node_id", "vector", "labels")
 
     # -- mutations ---------------------------------------------------------------
 
@@ -2832,8 +2551,7 @@ class DiskannIndex:
         # commit the failed job's epoch+1 and serve its uncommitted graphs)
         mutation_nonce = uuid.uuid4().hex
         next_token = (self.meta.build_id, mutation_nonce)
-        base_token = (self.meta.build_id, self.meta.mutation_id)
-        shard_muts = dict(self.meta.shard_mutations)
+        token = _shard_token(self.meta)
 
         def insert_shard(pdf: pd.DataFrame) -> pd.DataFrame:
             # ``pdf`` carries ONLY the micro-batch's new rows: stored shard
@@ -2844,7 +2562,7 @@ class DiskannIndex:
             # touches, and a warm shard doesn't even reload.
             qstate = b_state.value
             shard = int(pdf["shard"].iloc[0])
-            cur_token = (base_token[0], shard_muts.get(str(shard)) or base_token[1])
+            cur_token = token(shard)
             # POP (not get): the grow path mutates the graph in place, and
             # the entry under the committed token must not be corrupted if
             # this task later fails — a popped entry just reloads from the
@@ -3155,20 +2873,8 @@ class DiskannIndex:
             # the fold's write counted the touched shards, so only the
             # untouched ones are scanned, and only if there are any
             rest = sorted(set(range(int(self.meta.num_shards))) - touched)
-            live = live_touched + (
-                self.nodes(shards=rest)
-                .filter(~F.coalesce(F.col("deleted"), F.lit(False)))
-                .count()
-                if rest
-                else 0
-            )
-            if self.routing_curve_stale(live_count=live):
-                if live > 1:
-                    self.tune_routing(k=self.meta.routing_recall_k or 10)
-                else:
-                    self.meta.routing_recall_curve = {}
-                    self.meta.routing_tuned_nodes = 0
-                    self.meta.save(self.path)
+            live = live_touched + (self._live(rest).count() if rest else 0)
+            routing.refresh_after_fold(self, live, self.tune_routing)
 
     def reader_lease(self, ttl_seconds: float | None = None):
         """Context manager pinning this handle's snapshot against trash

@@ -29,6 +29,8 @@ __all__ = [
     "sweep_trash",
     "swept_marker_path",
     "touch_file",
+    "window_topk",
+    "write_sidecar_atomic",
     "writer_lock",
 ]
 
@@ -64,6 +66,39 @@ def file_exists(path: str) -> bool:
         return fsys.get_file_info(p).type == pafs.FileType.File
     except Exception:
         return False
+
+
+def window_topk(cand, k: int):
+    """The gather both index families end a query with: per query_id, the
+    k candidates of least (distance, node_id), ranked from 1, as
+    (query_id, node_id, distance, rank)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("node_id").asc())
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "node_id", "distance", "rank")
+    )
+
+
+def write_sidecar_atomic(final_path: str, table) -> None:
+    """Publish a tiny sidecar table as ONE parquet file, atomically for
+    readers. Local paths: temp file + os.replace (rename is atomic).
+    Remote URIs: a direct single-object write — os.replace cannot span a
+    remote filesystem, and object stores make the put itself atomic (the
+    object appears complete or not at all)."""
+    import pyarrow.parquet as papq
+
+    if "://" in final_path:
+        papq.write_table(table, final_path)
+        return
+    import uuid
+
+    tmp = f"{final_path}.{uuid.uuid4().hex[:8]}.tmp"
+    papq.write_table(table, tmp)
+    os.replace(tmp, final_path)
 
 
 def dir_exists_strict(path: str) -> bool:

@@ -21,19 +21,22 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pgvectorscale_spark.functions.distance import distance_expr, np_distance
+from pgvectorscale_spark.functions.distance import distance_expr
+from pgvectorscale_spark.operators import routing
 from pgvectorscale_spark.operators.index_util import (
     delete_dir,
     dir_exists,
-    file_exists as _file_exists,
     list_subdirs,
     prepare_rebuild,
+    window_topk,
     writer_lock,
 )
 from pgvectorscale_spark.operators.similarity import kmeans_centroids
 from pgvectorscale_spark.types import DistanceType, IndexMeta
 
 __all__ = ["IvfIndex"]
+
+_RESULT_SCHEMA = "query_id long, node_id long, distance double, rank integer"
 
 
 class IvfIndex:
@@ -43,6 +46,11 @@ class IvfIndex:
         self.spark = spark
         self.path = path
         self.meta = meta
+        # (label, cell) coverage sidecar: widens labelled probes to every
+        # cell holding a requested label
+        self._label_coverage = routing.LabelCoverage(
+            path, "label_cells", ("label", "centroid_id")
+        )
 
     @classmethod
     def build(
@@ -193,7 +201,7 @@ class IvfIndex:
                 # (label, cell) coverage sidecar from the just-persisted
                 # cells — tiny (labels x cells rows), read per labeled
                 # query with a per-epoch driver memo
-                idx._write_label_cells(
+                idx._label_coverage.write(
                     spark.read.parquet(os.path.join(path, dest_rel))
                     .select(F.explode("labels").alias("label"), "centroid_id")
                     .distinct()
@@ -303,77 +311,36 @@ class IvfIndex:
             self._node_cols(with_deleted=False)
         )
 
-    def centroids(self) -> DataFrame:
-        """Centroid table of THIS meta snapshot: resolved through
+    def _centroids_dir(self) -> str:
+        """Centroid table dir of THIS meta snapshot: resolved through
         ``meta.centroids_rel`` (a rebuild writes a fresh generation and
         flips the pointer — centroid ids change meaning with the
         clustering, so reading a fixed path would let a concurrent rebuild
         swap the table under an in-flight reader). Pre-pointer metas
         default to the legacy fixed dir."""
-        rel = getattr(self.meta, "centroids_rel", None) or "centroids"
-        return self.spark.read.parquet(os.path.join(self.path, rel))
+        return os.path.join(self.path, getattr(self.meta, "centroids_rel", None) or "centroids")
+
+    def centroids(self) -> DataFrame:
+        """Centroid table of this meta snapshot (see ``_centroids_dir``)."""
+        return self.spark.read.parquet(self._centroids_dir())
+
+    def _centroid_table(self) -> tuple[np.ndarray, np.ndarray] | None:
+        """(centroid_ids, centroid_matrix), read on the driver with pyarrow
+        (no Spark job); None for an index built over an empty table."""
+        import pyarrow.parquet as papq
+
+        t = papq.read_table(self._centroids_dir(), use_threads=False)
+        if not t.num_rows:
+            return None
+        d = t.select(["centroid_id", "centroid"]).to_pydict()
+        return np.array(d["centroid_id"], dtype=np.int64), np.array(d["centroid"], dtype=np.float64)
 
     def probe_cells(self, query_vec: Sequence[float], nprobe: int) -> list[int]:
-        """Driver-side probe planning over the (tiny) centroid table."""
-        rows = self.centroids().collect()
-        if not rows:  # index built over an empty table: nothing to probe
+        """The ``nprobe`` cells nearest ``query_vec``, nearest first."""
+        table = self._centroid_table()
+        if table is None:  # index built over an empty table: nothing to probe
             return []
-        ids = np.array([r["centroid_id"] for r in rows])
-        mat = np.array([r["centroid"] for r in rows], dtype=np.float64)
-        d = np_distance(mat, np.asarray(query_vec, dtype=np.float64), self.meta.distance_type)
-        order = np.lexsort((ids, d))[:nprobe]
-        return [int(x) for x in ids[order]]
-
-    _LABEL_CELLS_FILE = "label_cells"
-
-    def _write_label_cells(self, rows) -> None:
-        """Atomically publish the (label, cell) coverage sidecar (rows
-        carry .label/.centroid_id). Tiny — labels x cells entries."""
-        import pyarrow as pa
-
-        from pgvectorscale_spark.operators.diskann import _write_sidecar_atomic
-
-        pairs = sorted({(int(r["label"]), int(r["centroid_id"])) for r in rows})
-        table = pa.Table.from_pydict(
-            {"label": [p[0] for p in pairs], "centroid_id": [p[1] for p in pairs]},
-            schema=pa.schema([("label", pa.int32()), ("centroid_id", pa.int32())]),
-        )
-        _write_sidecar_atomic(
-            os.path.join(self.path, self._LABEL_CELLS_FILE), table
-        )
-        self._label_cells_memo = None
-
-    def _label_cells(self, labels) -> set[int]:
-        """Cells containing at least one row bearing any of ``labels`` —
-        the probe-widening set for labeled queries (a rare label's only
-        cell must be probed even when the centroid ranking skips it).
-        Served from the sidecar with a per-(epoch, delta) driver memo;
-        falls back to one distinct scan for a pre-sidecar index. Deletes
-        may leave stale pairs: widening OVER-probes then (extra cells
-        read, correctness unaffected); rebuilds rewrite the sidecar."""
-        want = {int(x) for x in labels}
-        token = (self.meta.epoch, self.meta.delta_counter)
-        memo = getattr(self, "_label_cells_memo", None)
-        if memo is not None and memo[0] == token:
-            mapping = memo[1]
-        elif _file_exists(os.path.join(self.path, self._LABEL_CELLS_FILE)):
-            mapping: dict[int, set[int]] = {}
-            for r in self.spark.read.parquet(
-                os.path.join(self.path, self._LABEL_CELLS_FILE)
-            ).collect():
-                mapping.setdefault(int(r["label"]), set()).add(int(r["centroid_id"]))
-            self._label_cells_memo = (token, mapping)
-        else:
-            rows = (
-                self.live_nodes()
-                .select(F.explode("labels").alias("_l"), "centroid_id")
-                .filter(F.col("_l").isin(sorted(want)))
-                .select("centroid_id")
-                .distinct()
-                .collect()
-            )
-            return {int(r["centroid_id"]) for r in rows}
-        return {c for l in want for c in mapping.get(l, ())}
+        return routing.nearest_partitions(*table, query_vec, self.meta.distance_type, nprobe)[0].tolist()
 
     def _label_filter_expr(self, labels):
         """`row.labels && query_labels` (labels/mod.rs `&&` semantics):
@@ -382,12 +349,20 @@ class IvfIndex:
         arr = F.array([F.lit(int(l)).cast("smallint") for l in labels])
         return F.arrays_overlap(F.col("labels"), arr)
 
-    def _check_labels(self, labels):
+    def _query_front(self, labels) -> list[int] | None:
+        """The label handling ``search``, ``search_batch`` and ``ann_join``
+        share: the label-coverage cells every query also probes, or None
+        for an explicit empty filter (``labels && '{}'`` matches nothing)."""
         if labels is not None and not self.meta.has_labels:
             raise ValueError(
                 f"index at {self.path} was built without labels "
                 "(pass label_col= at build time to enable label filtering)"
             )
+        if labels is None:
+            return []
+        if len(list(labels)) == 0:
+            return None
+        return sorted(self._label_coverage.partitions(self.meta, labels))
 
     def tune_probing(
         self, sample_queries: int = 16, k: int = 10, held_out: bool = True
@@ -403,128 +378,27 @@ class IvfIndex:
         picks the smallest adequate nprobe. Stamped with the live count
         for fold-time staleness re-tuning; one exact corpus pass — opt
         out with ``build(..., tune_probing=False)``."""
-        from pgvectorscale_spark.functions.distance import np_normalize
-        from pgvectorscale_spark.operators.knn import search_exact_batch
+        return routing.tune(
+            self, self._centroid_table(), self.live_nodes(), "centroid_id",
+            sample_queries, k, held_out,
+        )
 
-        cent_rows = self.centroids().collect()
-        if not cent_rows:
-            raise ValueError("cannot tune probing on an empty index")
-        cids = np.array([int(r["centroid_id"]) for r in cent_rows], dtype=np.int64)
-        cmat = np.stack([np.array(r["centroid"], dtype=np.float64) for r in cent_rows])
-        live = self.live_nodes()
-        live_count = live.count()
-        sample = (
-            live.select("node_id", "vector")
-            .orderBy(F.xxhash64("node_id").asc(), F.col("node_id").asc())
-            .limit(int(sample_queries))
-            .collect()
-        )
-        if not sample:
-            raise ValueError("cannot tune probing on an empty index")
-        if held_out and live_count <= 1:
-            raise ValueError(
-                "cannot tune probing held-out on a 1-row index: a held-out "
-                "query has no neighbors left to route to"
-            )
-        qids = [int(r["node_id"]) for r in sample]
-        qmat = np.array([r["vector"] for r in sample], dtype=np.float64)
-        qdf = self.spark.createDataFrame(
-            [(qid, [float(x) for x in row]) for qid, row in zip(qids, qmat)],
-            "query_id long, query_vec array<float>",
-        )
-        topk = search_exact_batch(
-            live.select("node_id", "vector"),
-            qdf,
-            k=k + 1 if held_out else k,
-            distance_type=self.meta.distance_type,
-            vector_col="vector",
-            id_col="node_id",
-            impl="numpy",
-        ).collect()
-        by_q: dict[int, list[int]] = {}
-        for r in sorted(topk, key=lambda r: (int(r["query_id"]), int(r["rank"]))):
-            qid, nid = int(r["query_id"]), int(r["node_id"])
-            if held_out and nid == qid:
-                continue
-            if len(by_q.setdefault(qid, [])) < k:
-                by_q[qid].append(nid)
-        ids = sorted({nid for nids in by_q.values() for nid in nids})
-        cell_of = {
-            int(r["node_id"]): int(r["centroid_id"])
-            for r in live.select("node_id", "centroid_id")
-            .filter(F.col("node_id").isin(ids))
-            .collect()
-        }
-        if self.meta.distance_type == DistanceType.COSINE.value:
-            qmat = np_normalize(qmat)
-            cmat = np_normalize(cmat)
-        order = np.argsort(
-            np.stack(
-                [
-                    np_distance(
-                        cmat, qmat[qi], self.meta.distance_type,
-                        assume_normalized=True,
-                    )
-                    for qi in range(len(qmat))
-                ]
-            ),
-            axis=1,
-        )
-        n_cells = len(cids)
-        ladder: list[int] = []
-        p = 1
-        while p < n_cells:
-            ladder.append(p)
-            p *= 2
-        ladder.append(n_cells)
-        curve: dict[str, float] = {}
-        for p in ladder:
-            tot = hit = 0
-            for qi, qid in enumerate(qids):
-                probed = {int(cids[c]) for c in order[qi, :p]}
-                for nid in by_q.get(qid, []):
-                    tot += 1
-                    hit += int(cell_of[nid] in probed)
-            curve[str(p)] = round(hit / max(tot, 1), 4)
-        self.meta.routing_recall_curve = curve
-        self.meta.routing_recall_k = int(k)
-        self.meta.routing_recall_held_out = bool(held_out)
-        self.meta.routing_tuned_nodes = int(live_count)
-        self.meta.save(self.path)
-        return curve
-
-    # same drift contract as DiskannIndex.ROUTING_DRIFT_BOUND
-    ROUTING_DRIFT_BOUND = 0.25
+    ROUTING_DRIFT_BOUND = routing.ROUTING_DRIFT_BOUND
 
     def probing_curve_stale(
         self, drift: float | None = None, live_count: int | None = None
     ) -> bool:
         """True when the stored probing-recall curve no longer describes
-        the corpus (unstamped / in-sample / live-count drift beyond the
-        bound) — see DiskannIndex.routing_curve_stale. ``live_count``
-        skips the corpus count when the caller already has it."""
-        if not self.meta.routing_recall_curve:
-            return False
-        if not self.meta.routing_tuned_nodes or not self.meta.routing_recall_held_out:
-            return True
-        bound = self.ROUTING_DRIFT_BOUND if drift is None else float(drift)
-        live = self.live_nodes().count() if live_count is None else int(live_count)
-        tuned = self.meta.routing_tuned_nodes
-        return abs(live - tuned) / max(tuned, 1) > bound
+        the corpus (``routing.curve_stale``). ``live_count`` skips the
+        corpus count when the caller already has it."""
+        return routing.curve_stale(
+            self.meta, lambda: self.live_nodes().count(), drift, live_count
+        )
 
     def auto_nprobe(self, recall_target: float) -> int:
         """Smallest probe count whose measured probing recall reaches the
-        target (the curve's last point is 1.0 by construction)."""
-        curve = self.meta.routing_recall_curve
-        if not curve:
-            raise ValueError(
-                f"index at {self.path} has no probing-recall curve: build "
-                "with tune_probing=True or call tune_probing()"
-            )
-        for p in sorted(int(x) for x in curve):
-            if curve[str(p)] >= recall_target:
-                return p
-        return int(self.meta.num_shards)
+        target (``routing.auto_probe``)."""
+        return routing.auto_probe(self, recall_target, "tune_probing")
 
     def _resolve_nprobe(
         self, nprobe: int | None, recall_target: float | None
@@ -557,13 +431,11 @@ class IvfIndex:
         and widens the probe set to every cell holding any requested
         label via the coverage sidecar — DiskANN family semantics.
         """
-        self._check_labels(labels)
-        if labels is not None and len(list(labels)) == 0:
+        extra = self._query_front(labels)
+        if extra is None:
             return self.spark.createDataFrame([], "node_id long, distance double")
         nprobe = self._resolve_nprobe(nprobe, recall_target)
-        cells = self.probe_cells(query_vec, nprobe)
-        if labels is not None:
-            cells = sorted(set(cells) | self._label_cells(labels))
+        cells = sorted(set(self.probe_cells(query_vec, nprobe)).union(extra))
         if not cells:
             return self.spark.createDataFrame([], "node_id long, distance double")
         qlit = F.array([F.lit(float(x)) for x in query_vec])
@@ -688,12 +560,8 @@ class IvfIndex:
                     .collect()
                 )
                 if new_pairs:
-                    old_pairs = []
-                    if _file_exists(os.path.join(self.path, self._LABEL_CELLS_FILE)):
-                        old_pairs = self.spark.read.parquet(
-                            os.path.join(self.path, self._LABEL_CELLS_FILE)
-                        ).collect()
-                    self._write_label_cells(list(old_pairs) + list(new_pairs))
+                    old_pairs = self._label_coverage.pairs() or set()
+                    self._label_coverage.write(old_pairs.union(map(tuple, new_pairs)))
             # exact incremental live count: upserts of live ids +0, fresh or
             # resurrected ids +1 — no O(corpus) merge-view count per batch
             self.meta.num_rows = int(self.meta.num_rows) + n_batch - n_present_live
@@ -874,22 +742,15 @@ class IvfIndex:
             # content is identical pre/post fold (tombstones were already
             # invisible to live_nodes), so the atomic sidecar swap is
             # safe at any point relative to the meta flip.
-            if self.meta.has_labels and _file_exists(
-                os.path.join(self.path, self._LABEL_CELLS_FILE)
-            ):
+            stored_pairs = self._label_coverage.pairs() if self.meta.has_labels else None
+            if stored_pairs is not None:
                 live_pairs = (
                     merged.select(F.explode("labels").alias("label"), "centroid_id")
                     .distinct()
                     .collect()
                 )
-                kept_pairs = [
-                    r
-                    for r in self.spark.read.parquet(
-                        os.path.join(self.path, self._LABEL_CELLS_FILE)
-                    ).collect()
-                    if int(r["centroid_id"]) not in touched
-                ]
-                self._write_label_cells(kept_pairs + list(live_pairs))
+                kept_pairs = {p for p in stored_pairs if p[1] not in touched}
+                self._label_coverage.write(kept_pairs.union(map(tuple, live_pairs)))
         self.meta.delta_gens = []
         self.meta.trash_dirs = list(dict.fromkeys(new_trash))
         # id-routing sidecar chain compaction (no-op until the chain
@@ -916,14 +777,7 @@ class IvfIndex:
         if self.meta.routing_recall_curve:
             # one corpus count shared by the staleness check and the
             # drop-vs-retune decision (the tuner re-reads live rows anyway)
-            live = self.live_nodes().count()
-            if self.probing_curve_stale(live_count=live):
-                if live > 1:
-                    self.tune_probing(k=self.meta.routing_recall_k or 10)
-                else:
-                    self.meta.routing_recall_curve = {}
-                    self.meta.routing_tuned_nodes = 0
-                    self.meta.save(self.path)
+            routing.refresh_after_fold(self, self.live_nodes().count(), self.tune_probing)
 
     def reader_lease(self, ttl_seconds: float | None = None):
         """Context manager pinning this handle's snapshot against trash
@@ -947,22 +801,20 @@ class IvfIndex:
         applies the `&&` overlap filter inside the scan and widens every
         query's probe set with the label-coverage cells ([] matches
         nothing) — same semantics as ``search`` and as DiskANN."""
-        self._check_labels(labels)
-        if labels is not None and len(list(labels)) == 0:
-            return self.spark.createDataFrame(
-                [], "query_id long, node_id long, distance double, rank integer"
-            )
+        extra = self._query_front(labels)
+        if extra is None:
+            return self.spark.createDataFrame([], _RESULT_SCHEMA)
         nprobe = self._resolve_nprobe(nprobe, recall_target)
-        extra = sorted(self._label_cells(labels)) if labels is not None else []
+        table = self._centroid_table()
         qrows = queries_df.select(query_id_col, query_vec_col).collect()
         probe_pairs = []
-        for r in qrows:
-            for c in set(self.probe_cells(r[1], nprobe)) | set(extra):
-                probe_pairs.append((int(r[0]), c))
+        if table is not None:
+            qmat = np.array([r[1] for r in qrows], dtype=np.float64)
+            lists = routing.probe_lists(table, qmat, self.meta.distance_type, nprobe, extra)
+            for r, cells in zip(qrows, lists):
+                probe_pairs += [(int(r[0]), c) for c in cells]
         if not probe_pairs:
-            return self.spark.createDataFrame(
-                [], "query_id long, node_id long, distance double, rank integer"
-            )
+            return self.spark.createDataFrame([], _RESULT_SCHEMA)
         probes = self.spark.createDataFrame(probe_pairs, "query_id long, centroid_id int")
         qsel = queries_df.select(
             F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("_qv")
@@ -982,12 +834,7 @@ class IvfIndex:
                 F.round(distance_expr(F.col("vector"), F.col("_qv"), self.meta.distance_type), 6),
             )
         )
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("node_id").asc())
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "node_id", "distance", "rank")
-        )
+        return window_topk(scored, k)
 
     def ann_join(
         self,
@@ -1048,64 +895,16 @@ class IvfIndex:
         unconditional array<double> — and the distance math casts each
         element to double exactly as before (lossless for values that
         are float32 at rest), so distances are unchanged."""
-        self._check_labels(labels)
-        if labels is not None and len(list(labels)) == 0:
-            return self.spark.createDataFrame(
-                [], "query_id long, node_id long, distance double, rank integer"
-            )
+        extra = self._query_front(labels)
+        if extra is None:
+            return self.spark.createDataFrame([], _RESULT_SCHEMA)
         nprobe = self._resolve_nprobe(nprobe, recall_target)
-        extra = sorted(self._label_cells(labels)) if labels is not None else []
-        cent_rows = self.centroids().collect()  # num_centroids rows — tiny
-        if not cent_rows:
-            return self.spark.createDataFrame(
-                [], "query_id long, node_id long, distance double, rank integer"
-            )
-        cids = np.array([int(r["centroid_id"]) for r in cent_rows], dtype=np.int64)
-        cmat = np.stack([np.array(r["centroid"], dtype=np.float64) for r in cent_rows])
-        bc = self.spark.sparkContext.broadcast(
-            (cids, cmat, self.meta.distance_type, int(nprobe), extra)
-        )
-
-        def route_fn(batches):
-            import pandas as pd
-
-            cids_l, cmat_l, dt, p, extra_l = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                qm = np.stack(pdf["query_vec"].to_numpy()).astype(np.float64)
-                vecs = pdf["query_vec"].tolist()
-                qids = pdf["query_id"].tolist()
-                o_c, o_q, o_v = [], [], []
-                for i in range(len(qm)):
-                    d = np_distance(cmat_l, qm[i], dt)
-                    order = np.lexsort((cids_l, d))[:p]
-                    probed = {int(cids_l[j]) for j in order}
-                    probed.update(extra_l)
-                    for c in sorted(probed):
-                        o_c.append(c)
-                        o_q.append(int(qids[i]))
-                        o_v.append(vecs[i])
-                yield pd.DataFrame(
-                    {"centroid_id": o_c, "query_id": o_q, "_qv": o_v}
-                )
-
-        # routed vectors keep the query column's element type: float32 at
-        # rest ships half the fan-out bytes; the scoring expr casts each
-        # element to double either way, so distances are unchanged
-        from pyspark.sql.types import ArrayType, FloatType
-
-        qf = queries_df.schema[query_vec_col].dataType
-        vec_t = (
-            "array<float>"
-            if isinstance(qf, ArrayType) and isinstance(qf.elementType, FloatType)
-            else "array<double>"
-        )
-        routed = queries_df.select(
-            F.col(query_id_col).cast("long").alias("query_id"),
-            F.col(query_vec_col).cast(vec_t).alias("query_vec"),
-        ).mapInPandas(
-            route_fn, f"centroid_id int, query_id long, _qv {vec_t}"
+        table = self._centroid_table()
+        if table is None:
+            return self.spark.createDataFrame([], _RESULT_SCHEMA)
+        q, vec_t = routing.query_frame(queries_df, query_id_col, query_vec_col)
+        routed = routing.route_frame(
+            q, table, self.meta.distance_type, nprobe, extra, "centroid_id", "_qv", vec_t
         )
         scan = self.live_nodes()
         if prune_cells:
@@ -1115,9 +914,7 @@ class IvfIndex:
                 for r in routed.select("centroid_id").distinct().collect()
             )
             if not probed:
-                return self.spark.createDataFrame(
-                    [], "query_id long, node_id long, distance double, rank integer"
-                )
+                return self.spark.createDataFrame([], _RESULT_SCHEMA)
             scan = scan.filter(F.col("centroid_id").isin(probed))
         if labels is not None:
             scan = scan.filter(self._label_filter_expr(labels))
@@ -1140,11 +937,4 @@ class IvfIndex:
                 distance_expr(F.col("vector"), F.col("_qv"), self.meta.distance_type), 6
             ),
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("distance").asc(), F.col("node_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "node_id", "distance", "rank")
-        )
+        return window_topk(scored, k)

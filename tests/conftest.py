@@ -40,9 +40,9 @@ _HEAVY = {
     "test_round8_fixes.py::test_routing_sidecar_compaction_preserves_lookups",
     "test_round8_fixes.py::test_kmeans_insert_upsert_pinned_via_sidecar",
     "test_round8_fixes.py::test_ivf_mutation_probe_is_cell_pruned",
-    "test_round5_fixes.py::test_routing_delta_chains_across_batches",
-    "test_round5_fixes.py::test_routing_delta_matches_full_recompute",
-    "test_round5_fixes.py::test_routing_delta_updates_label_sidecar",
+    "test_routing_tune.py::test_routing_delta_chains_across_batches",
+    "test_routing_tune.py::test_routing_delta_matches_full_recompute",
+    "test_labels.py::test_routing_delta_updates_label_sidecar",
     "test_round5_fixes.py::test_simhash_multiprobe_equals_brute_force[2-1]",
     "test_round9_fixes.py::test_kmeans_reinsert_pin_lifecycle",
     "test_round9_fixes.py::test_long_reader_no_longer_blocks_newer_trash_cycles",
@@ -64,8 +64,8 @@ _HEAVY = {
     "test_hybrid.py::test_hybrid_distributed_queries_matches_serving_path",
     "test_as_of_join.py::test_salted_parity_on_hot_key_fixture",
     "test_ivf_index.py::test_insert_delete_lifecycle",
-    "test_round4_fixes.py::test_label_routing_sidecar_widens_probes_and_tracks_inserts",
-    "test_round4_fixes.py::test_migrated_index_first_insert_keeps_full_label_sidecar",
+    "test_labels.py::test_label_routing_sidecar_widens_probes_and_tracks_inserts",
+    "test_labels.py::test_migrated_index_first_insert_keeps_full_label_sidecar",
     "test_streaming.py::test_stream_insert_into_kmeans_index",
 }
 
@@ -139,6 +139,21 @@ def documents(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
 
 
+def count_jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def make_fixture_f1(spark, n=300, d=64, seed=42):
     """FIXTURES.md F1: uniform [0,1) float32 vectors, ids 0..n-1."""
     rng = np.random.default_rng(seed)
@@ -154,6 +169,28 @@ def make_vectors(spark, n=100, dim=16, seed=42):
     mat = rng.random((n, dim), dtype=np.float32)
     rows = [(i, mat[i].tolist()) for i in range(n)]
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def make_kmeans_index(spark, tmpdir, name, n=150, d=16, labeled=False, seed=37):
+    """A 3-shard kmeans l2 DiskANN index over a seeded uniform corpus
+    (labels i % 4 when ``labeled``); returns (index, vectors, rng)."""
+    from pgvectorscale_spark.operators.diskann import DiskannIndex
+
+    rng = np.random.default_rng(seed)
+    mat = rng.random((n, d), dtype=np.float32)
+    cols = "vec_id long, embedding array<float>"
+    rows = [(i, mat[i].tolist()) for i in range(n)]
+    kw = {}
+    if labeled:
+        cols += ", labels array<smallint>"
+        rows = [(i, v, [int(i % 4)]) for i, v in rows]
+        kw["label_col"] = "labels"
+    df = spark.createDataFrame(rows, cols)
+    idx = DiskannIndex.build(
+        df, f"{tmpdir}/{name}", distance_type="l2", num_shards=3, id_col="vec_id",
+        vector_col="embedding", shard_assignment="kmeans", **kw,
+    )
+    return idx, mat, rng
 
 
 def make_fixture_f4(spark, n=50, d=16, seed=42, num_labels=16):

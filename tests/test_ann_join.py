@@ -165,21 +165,26 @@ def test_ivf_ann_join_equals_search_batch(spark, tmpdir):
     rng = np.random.default_rng(23)
     mat = rng.random((200, 12), dtype=np.float32)
     df = spark.createDataFrame(
-        [(i, mat[i].tolist()) for i in range(200)],
-        "vec_id long, embedding array<float>",
+        [(i, mat[i].tolist(), [i % 4]) for i in range(200)],
+        "vec_id long, embedding array<float>, labels array<smallint>",
     )
     idx = IvfIndex.build(
-        df, f"{tmpdir}/ivf_aj", num_centroids=8, distance_type="l2",
-        tune_probing=False,
+        df, f"{tmpdir}/ivf_aj", num_centroids=8, distance_type="l2", label_col="labels",
     )
     qdf = spark.createDataFrame(
         [(i, mat[i].tolist()) for i in range(20)],
         "query_id long, query_vec array<float>",
     )
-    for p in (1, 3, 8):
-        got = _keyed(idx.ann_join(qdf, k=6, nprobe=p).collect())
-        want = _keyed(idx.search_batch(qdf, k=6, nprobe=p).collect())
-        assert got == want, f"nprobe={p}"
+    cases = [dict(nprobe=p) for p in (1, 3, 8)] + [
+        dict(nprobe=1, labels=[2]),
+        dict(nprobe=2, labels=[0, 3]),
+        dict(recall_target=0.9),
+        dict(recall_target=0.9, labels=[1]),
+    ]
+    for kw in cases:
+        got = _keyed(idx.ann_join(qdf, k=6, **kw).collect())
+        want = _keyed(idx.search_batch(qdf, k=6, **kw).collect())
+        assert got == want and len(got) == 20 * 6, kw
     # plan: no driver collect of queries — the probe map is a mapInPandas
     # over the query scan feeding the centroid_id join (Catalyst picks
     # broadcast at this tiny scale, hashpartitioning co-partitioning at

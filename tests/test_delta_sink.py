@@ -15,13 +15,13 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from pgvectorscale_spark.operators.diskann import DiskannIndex
+from tests.conftest import count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -493,19 +493,6 @@ def test_rebuild_at_mutated_path_clears_stale_deltas(spark, tmpdir):
 # small batch sizes, so they are pinned here.
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` runs, counted through a job group of its own."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 _LABELED = "vec_id long, embedding array<float>, labels array<smallint>"
 
 
@@ -550,10 +537,10 @@ def test_mutations_run_in_a_handful_of_jobs(spark, tmpdir, monkeypatch, labeled_
     idx, rng = _copy(spark, base, f"{tmpdir}/jobs"), np.random.default_rng(1)
     ids = list(range(1000, 1056)) + list(range(8))  # 56 fresh ids, 8 upserts
     batch = spark.createDataFrame(_batch_rows(cent, rng, ids), _LABELED)
-    assert _jobs(spark, lambda: idx.insert(batch, label_col="labels")) <= 20
-    assert _jobs(spark, lambda: idx.delete(list(range(100, 132)))) <= 8
+    assert count_jobs(spark, lambda: idx.insert(batch, label_col="labels")) <= 20
+    assert count_jobs(spark, lambda: idx.delete(list(range(100, 132)))) <= 8
     assert idx.meta.delta_seq == 2
-    assert _jobs(spark, lambda: idx.delete(list(range(1000, 1032)))) <= 12
+    assert count_jobs(spark, lambda: idx.delete(list(range(1000, 1032)))) <= 12
     assert idx.meta.delta_seq == 0  # folded
     assert idx.meta.num_rows == idx.nodes().count() == 296
     live = idx.nodes().filter("NOT deleted")
@@ -630,7 +617,7 @@ def test_insert_sidecars_match_sql_maintenance(spark, tmpdir, labeled_kmeans):
     base, cent = labeled_kmeans
     idx, rng = _copy(spark, base, f"{tmpdir}/sidecars"), np.random.default_rng(2)
     stored = {r[0]: r for r in idx._routing_rows()}
-    pairs = idx._stored_label_pairs()
+    pairs = idx._label_coverage.pairs()
     rows = _batch_rows(cent, rng, list(range(700, 760)) + list(range(10, 20)))
     batch = spark.createDataFrame(rows, _LABELED)
     batch_ids = batch.select(F.col("vec_id").alias("node_id"))
@@ -682,7 +669,7 @@ def test_insert_sidecars_match_sql_maintenance(spark, tmpdir, labeled_kmeans):
         (int(r["shard"]), int(r["label"]))
         for r in new.select("shard", F.explode("labels").alias("label")).distinct().collect()
     }
-    assert idx._stored_label_pairs() == pairs | batch_pairs
+    assert idx._label_coverage.pairs() == pairs | batch_pairs
     every = idx.nodes().select("node_id", "shard")
     want = {(int(r["node_id"]), int(r["shard"])) for r in every.collect()}
     probe = routing_store.lookup(spark, idx.path, idx.meta, every.select("node_id"))
@@ -709,7 +696,7 @@ def test_large_batch_checkpoint_path_matches_collect_path(
     big = DiskannIndex.load(spark, f"{tmpdir}/big_b")
     # the checkpoint path is a fixed number of jobs (here 7, plus 2 for the
     # NULL vector's delete), whatever the batch size
-    assert _jobs(spark, lambda: big.insert(batch, label_col="labels")) <= 9
+    assert count_jobs(spark, lambda: big.insert(batch, label_col="labels")) <= 9
 
     def content(i):
         cols = ["node_id", "shard", "vector", "labels", "neighbors", "deleted"]
@@ -722,7 +709,7 @@ def test_large_batch_checkpoint_path_matches_collect_path(
     assert content(big) == content(idx)
     assert big.meta.num_rows == idx.meta.num_rows == 270
     assert big._routing_rows() == idx._routing_rows()
-    assert big._stored_label_pairs() == idx._stored_label_pairs()
+    assert big._label_coverage.pairs() == idx._label_coverage.pairs()
     ids = spark.createDataFrame([(i,) for i in range(900, 930)], "node_id long")
     assert sorted(routing_store.lookup(spark, big.path, big.meta, ids).collect()) == sorted(
         routing_store.lookup(spark, idx.path, idx.meta, ids).collect()
@@ -764,10 +751,10 @@ def test_mutations_keep_vectors_off_the_driver(spark, tmpdir, monkeypatch, label
         _batch_rows(cent, rng, list(range(800, 860)) + list(range(20, 30))), _LABELED
     )
     seen = _collect_spy(spark, monkeypatch)
-    assert _jobs(spark, lambda: idx.insert(batch, label_col="labels")) <= 8
+    assert count_jobs(spark, lambda: idx.insert(batch, label_col="labels")) <= 8
     assert seen and all(n <= budget + 1 for cols, n in seen if "vector" in cols)
     seen.clear()
-    assert _jobs(spark, lambda: idx.delete(list(range(0, 400, 3)))) <= 2
+    assert count_jobs(spark, lambda: idx.delete(list(range(0, 400, 3)))) <= 2
     assert not [cols for cols, _ in seen if "vector" in cols]
     monkeypatch.undo()
     assert idx.meta.num_rows == idx.nodes().count() == 300

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from pgvectorscale_spark.functions.distance import np_cosine_distance, np_normalize
 from pgvectorscale_spark.operators.diskann import DiskannIndex
-from tests.conftest import make_fixture_f1, make_fixture_f4
+from tests.conftest import count_jobs, make_fixture_f1, make_fixture_f4
 
 
 @pytest.fixture(scope="module")
@@ -97,10 +97,10 @@ def test_empty_label_filter_runs_no_job(built, spark):
     rows = spark.sparkContext.parallelize([(i, mat[i].tolist()) for i in range(3)], 2)
     qdf = spark.createDataFrame(rows, "query_id long, query_vec array<float>")
     out = []
-    assert _jobs(spark, lambda: out.append(idx.search_batch(qdf, k=5, labels=[]))) == 0
+    assert count_jobs(spark, lambda: out.append(idx.search_batch(qdf, k=5, labels=[]))) == 0
     assert out[0].schema == _parse_datatype_string(_RESULT_SCHEMA)
     assert out[0].count() == 0
-    assert _jobs(spark, lambda: idx.search_batch(qdf, k=5)) > 0  # the count shows jobs
+    assert count_jobs(spark, lambda: idx.search_batch(qdf, k=5)) > 0  # the count shows jobs
 
 
 def test_probe_rescore_rows_do_not_depend_on_fetch_order(built, spark, monkeypatch):
@@ -632,21 +632,6 @@ def test_high_dimensions_and_caps(spark, tmpdir):
         )
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` runs, counted through a job group of its own."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _labelled_clusters(spark, n=600, d=8, seed=7):
     """Four clusters, five labels, in 4 partitions."""
     rng = np.random.default_rng(seed)
@@ -667,7 +652,7 @@ def test_build_runs_in_a_handful_of_jobs(spark, tmpdir):
     one-pass statistics)."""
     df = _labelled_clusters(spark)
     out = {}
-    jobs = _jobs(
+    jobs = count_jobs(
         spark,
         lambda: out.setdefault(
             "idx",
@@ -678,7 +663,7 @@ def test_build_runs_in_a_handful_of_jobs(spark, tmpdir):
         ),
     )
     idx = out["idx"]
-    assert idx.meta.routing_recall_curve and idx._stored_label_pairs()
+    assert idx.meta.routing_recall_curve and idx._label_coverage.pairs()
     assert idx.full_scan().count() == 600
     assert jobs <= 12, jobs
 
@@ -737,7 +722,7 @@ def test_build_refuses_centroid_collect_over_budget(spark, tmpdir, monkeypatch):
                 shard_assignment="kmeans",
             )
 
-    assert _jobs(spark, build) == 1
+    assert count_jobs(spark, build) == 1
 
 
 def test_lifecycle_writes_nothing_to_stdout(tmpdir):

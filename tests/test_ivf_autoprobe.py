@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pgvectorscale_spark.operators.ivf_index import IvfIndex
+from tests.conftest import count_jobs
 
 
 def _tune_sample_ids(idx, n=16):
@@ -77,6 +78,32 @@ def test_curve_shape_and_independent_recount(overlapped_ivf):
             tot += len(topk)
             hit += sum(nodes[n][1] in probed for n in topk)
         assert abs(hit / tot - want) <= 5e-5 + 1e-9, (p, hit / tot, want)
+
+
+# the curve IVF's own tuner (stacked GEMVs ranked by argsort) stored on
+# this fixture: the shared tuner and kernel must store it bit for bit
+_PINNED_CURVE = {"1": 0.7625, "2": 0.9062, "4": 0.9812, "8": 1.0}
+
+
+def test_tuner_stores_the_pinned_curve_in_few_jobs(spark, overlapped_ivf):
+    idx, _ = overlapped_ivf
+    assert idx.meta.routing_recall_curve == _PINNED_CURVE
+    assert count_jobs(spark, idx.tune_probing) <= 6
+    assert idx.meta.routing_recall_curve == _PINNED_CURVE
+
+
+def test_search_batch_jobs_do_not_grow_with_queries(spark, overlapped_ivf):
+    """The centroid table is read once per call on the driver and every
+    query routes through one kernel call: 64 queries run the jobs of one."""
+    idx, vecs = overlapped_ivf
+
+    def jobs(n):
+        qdf = spark.createDataFrame(
+            [(i, vecs[i]) for i in range(n)], "query_id long, query_vec array<float>"
+        )
+        return count_jobs(spark, lambda: idx.search_batch(qdf, k=5, nprobe=2).collect())
+
+    assert jobs(64) == jobs(1)
 
 
 def test_auto_nprobe_picks_smallest_adequate(overlapped_ivf):

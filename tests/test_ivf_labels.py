@@ -4,6 +4,7 @@ scan, probe widening through the (label, cell) coverage sidecar, labeled
 mutations, and the unlabeled-index error contract."""
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -12,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pgvectorscale_spark.operators.ivf_index import IvfIndex
+from tests.conftest import count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -194,7 +196,7 @@ def test_fold_compacts_label_sidecar(spark, tmpdir):
         label_col="labels", tune_probing=False,
     )
     idx.delete(list(range(5)))  # label 5 is now dead everywhere
-    assert idx._label_cells([5]), "pre-fold: stale pairs expected (over-probe)"
+    assert idx._label_coverage.partitions(idx.meta, [5]), "pre-fold: stale pairs expected (over-probe)"
     # force the fold
     for j in range(IvfIndex.DELTA_FOLD_SEQS + 1):
         idx.insert(
@@ -215,13 +217,51 @@ def test_fold_compacts_label_sidecar(spark, tmpdir):
         .distinct()
         .collect()
     }
-    import os as _os
-
     got = {
         (int(r["label"]), int(r["centroid_id"]))
-        for r in spark.read.parquet(
-            _os.path.join(idx.path, idx._LABEL_CELLS_FILE)
-        ).collect()
+        for r in spark.read.parquet(os.path.join(idx.path, "label_cells")).collect()
     }
     assert got == want
-    assert not idx._label_cells([5]), "post-fold: dead label still widens probes"
+    assert not idx._label_coverage.partitions(idx.meta, [5]), "post-fold: dead label still widens probes"
+
+
+def test_missing_label_coverage_raises_before_any_job(spark, tmpdir):
+    """A labelled index that holds rows but lost its coverage file (or
+    predates it) refuses labelled queries with a rebuild error, before
+    any Spark job — instead of scanning the corpus per query batch."""
+    rng = np.random.default_rng(3)
+    rows = [(i, rng.normal(size=8).tolist(), [i % 3]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, labels array<smallint>")
+    path = f"{tmpdir}/nocov"
+    IvfIndex.build(df, path, num_centroids=4, distance_type="l2", label_col="labels", tune_probing=False)
+    os.remove(os.path.join(path, "label_cells"))
+    idx = IvfIndex.load(spark, path)
+    qdf = spark.createDataFrame([(0, rows[0][1])], "query_id long, query_vec array<float>")
+
+    def labelled_queries():
+        with pytest.raises(ValueError, match="rebuild"):
+            idx.search(rows[0][1], k=3, nprobe=1, labels=[1])
+        with pytest.raises(ValueError, match="rebuild"):
+            idx.search_batch(qdf, k=3, nprobe=1, labels=[1])
+        with pytest.raises(ValueError, match="rebuild"):
+            idx.ann_join(qdf, k=3, nprobe=1, labels=[1])
+
+    assert count_jobs(spark, labelled_queries) == 0
+    assert idx.search(rows[0][1], k=3, nprobe=1).count() == 3  # unfiltered still serves
+
+
+def test_empty_labelled_index_answers_no_rows(spark, tmpdir):
+    """A labelled index with no live rows has nothing for a coverage file
+    to cover: without the file, labelled queries answer with no rows."""
+    rows = [(i, [float(i), 1.0, 0.0, 0.0], [1]) for i in range(8)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, labels array<smallint>")
+    path = f"{tmpdir}/emptied_lbl"
+    idx = IvfIndex.build(df, path, num_centroids=2, label_col="labels", tune_probing=False)
+    idx.delete(list(range(8)))
+    os.remove(os.path.join(path, "label_cells"))
+    idx = IvfIndex.load(spark, path)
+    assert idx.meta.num_rows == 0
+    qdf = spark.createDataFrame([(0, [0.0] * 4)], "query_id long, query_vec array<float>")
+    assert idx.search([0.0] * 4, k=3, labels=[1]).count() == 0
+    assert idx.search_batch(qdf, k=3, labels=[1]).count() == 0
+    assert idx.ann_join(qdf, k=3, labels=[1]).count() == 0

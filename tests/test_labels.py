@@ -5,6 +5,7 @@ column orders, bounds, tiny indexes, and filtered recall."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 from pgvectorscale_spark.functions.distance import np_cosine_distance, np_normalize
 from pgvectorscale_spark.operators.diskann import DiskannIndex
 from pgvectorscale_spark.operators.knn import search_exact
+from tests.conftest import count_jobs, make_kmeans_index
 
 
 @pytest.fixture(scope="module")
@@ -345,3 +347,114 @@ def test_labeled_recall(spark, tmpdir):
         }
         recall = len(got & set(truth(mask))) / 10
         assert recall >= 0.9, f"{name}: recall {recall}"
+
+
+# -- label-coverage sidecar (label_routing.parquet) ---------------------------
+
+
+def test_label_routing_sidecar_widens_probes_and_tracks_inserts(spark, tmpdir):
+    """Label-aware routing widening reads the labels x shards sidecar, not
+    a per-query corpus scan. A rare label concentrated in a geometrically
+    far cell is still found with probe_shards=1, and a micro-batch insert
+    introducing a brand-new label updates the sidecar so routed queries
+    see it immediately."""
+    rng = np.random.default_rng(53)
+    d = 8
+    # two well-separated blobs -> kmeans cells; the rare label 9 lives ONLY
+    # in the far blob
+    near = rng.normal(0.0, 0.05, size=(80, d)).astype(np.float32)
+    far = rng.normal(5.0, 0.05, size=(80, d)).astype(np.float32)
+    rows = [(i, near[i].tolist(), [1]) for i in range(80)]
+    rows += [(100 + i, far[i].tolist(), [9] if i < 3 else [2]) for i in range(80)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, labels array<smallint>")
+    path = f"{tmpdir}/label_routing"
+    idx = DiskannIndex.build(
+        df, path, distance_type="l2", num_shards=2, id_col="vec_id",
+        vector_col="embedding", label_col="labels", shard_assignment="kmeans",
+    )
+    assert idx._label_coverage.pairs() is not None
+    # query at the NEAR blob, filter by the far-only label: routing alone
+    # would probe the near cell; the sidecar widening must add the far cell
+    q = near[0].tolist()
+    got = idx.search(q, k=3, labels=[9], probe_shards=1, search_list_size=500).collect()
+    assert {r["node_id"] for r in got} == {100, 101, 102}
+    # the memo was used (populated for this epoch)
+    assert idx._label_coverage._memo is not None
+
+    # insert a brand-new label into the near cell; routed search for it
+    # from the FAR side must widen into the near cell via the updated sidecar
+    b = spark.createDataFrame(
+        [(500, near[1].tolist(), [7])], "vec_id long, embedding array<float>, labels array<smallint>"
+    )
+    idx.insert(b, label_col="labels")
+    got = idx.search(far[0].tolist(), k=1, labels=[7], probe_shards=1, search_list_size=500).collect()
+    assert [r["node_id"] for r in got] == [500]
+
+
+def test_migrated_index_first_insert_keeps_full_label_sidecar(spark, tmpdir):
+    """First incremental mutation on an index without a label_routing
+    sidecar (a pre-sidecar format) must write ALL shards' labels, not just
+    the touched shard's — otherwise routing unroutes every other label."""
+    rng = np.random.default_rng(61)
+    d = 8
+    near = rng.normal(0.0, 0.05, size=(60, d)).astype(np.float32)
+    far = rng.normal(5.0, 0.05, size=(60, d)).astype(np.float32)
+    rows = [(i, near[i].tolist(), [1]) for i in range(60)]
+    rows += [(100 + i, far[i].tolist(), [9]) for i in range(60)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, labels array<smallint>")
+    path = f"{tmpdir}/migrated_sidecar"
+    idx = DiskannIndex.build(
+        df, path, distance_type="l2", num_shards=2, id_col="vec_id",
+        vector_col="embedding", label_col="labels", shard_assignment="kmeans",
+    )
+    os.remove(os.path.join(path, idx._LABEL_ROUTING_FILE))  # pre-sidecar state
+    b = spark.createDataFrame(
+        [(500, near[0].tolist(), [1])], "vec_id long, embedding array<float>, labels array<smallint>"
+    )
+    idx.insert(b, label_col="labels")  # touches only the near cell
+    labels_in_sidecar = {l for _, l in idx._label_coverage.pairs()}
+    assert labels_in_sidecar == {1, 9}, labels_in_sidecar
+    # the far-only label still routes from a near-blob query
+    got = idx.search(near[0].tolist(), k=2, labels=[9], probe_shards=1,
+                     search_list_size=500).collect()
+    assert len(got) == 2 and all(r["node_id"] >= 100 for r in got)
+
+
+def test_routing_delta_updates_label_sidecar(spark, tmpdir):
+    """A label arriving only via insert() must become routable (the
+    label-aware probe widening reads the sidecar)."""
+    idx, mat, rng = make_kmeans_index(spark, tmpdir, "routing_labels", labeled=True)
+    v = rng.random(16).astype(np.float32)
+    idx.insert(
+        spark.createDataFrame(
+            [(950, v.tolist(), [9])], "vec_id long, embedding array<float>, labels array<smallint>"
+        ),
+        label_col="labels",
+    )
+    shards_with_9 = idx._label_coverage.partitions(idx.meta, [9])
+    assert shards_with_9, "label 9 unroutable after insert"
+    got = idx.search(v.tolist(), k=1, labels=[9], probe_shards=1, search_list_size=100)
+    assert got.first()["node_id"] == 950
+
+
+def test_missing_label_coverage_raises_before_any_job(spark, tmpdir):
+    """A labelled kmeans index that holds rows but has no coverage file
+    refuses a routed labelled query with a rebuild error before any Spark
+    job; unrouted and unfiltered queries still serve."""
+    idx, mat, _ = make_kmeans_index(spark, tmpdir, "nocov", labeled=True)
+    os.remove(os.path.join(idx.path, idx._LABEL_ROUTING_FILE))
+    idx = DiskannIndex.load(spark, idx.path)
+    qdf = spark.createDataFrame(
+        [(i, mat[i].tolist()) for i in range(3)], "query_id long, query_vec array<float>"
+    )
+
+    def routed_labelled():
+        with pytest.raises(ValueError, match="rebuild"):
+            idx.search_batch(qdf, k=3, labels=[1], probe_shards=1)
+        with pytest.raises(ValueError, match="rebuild"):
+            idx.ann_join(qdf, k=3, labels=[1], probe_shards=1)
+
+    assert count_jobs(spark, routed_labelled) == 0
+    assert idx.search_batch(qdf, k=3, labels=[1]).count() == 9
+    assert idx.search_batch(qdf, k=3, probe_shards=1).count() == 9
+

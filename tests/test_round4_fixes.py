@@ -260,7 +260,7 @@ def test_future_meta_version_fails_loudly(spark, tmpdir):
         IndexMeta.load(path)
 
 
-# -- 11. per-shard tokens keep untouched caches hot; routing is incremental ---
+# -- 11. per-shard tokens keep untouched caches hot ---------------------------
 
 
 def test_untouched_shard_cache_entry_stays_keyed_valid(spark, tmpdir):
@@ -294,37 +294,6 @@ def test_untouched_shard_cache_entry_stays_keyed_valid(spark, tmpdir):
     # and search still returns correct results under the mixed tokens
     got = idx.search(mat[1].tolist(), k=2, search_list_size=200).collect()
     assert got[0]["node_id"] in (1, 700)
-
-
-def test_incremental_routing_matches_full_recompute(spark, tmpdir):
-    """The touched-shards routing merge equals a full centroid recompute."""
-    import numpy as np
-    from pgvectorscale_spark.operators.diskann import DiskannIndex
-
-    df, mat = _corpus(spark, n=150, seed=37)
-    path = f"{tmpdir}/increm_routing"
-    idx = DiskannIndex.build(
-        df, path, distance_type="l2", num_shards=3, id_col="vec_id",
-        vector_col="embedding", shard_assignment="kmeans",
-    )
-    rng = np.random.default_rng(2)
-    batch = spark.createDataFrame(
-        [(800 + j, rng.random(16).astype(np.float32).tolist()) for j in range(5)],
-        "vec_id long, embedding array<float>",
-    )
-    idx.insert(batch)  # incremental: re-aggregates only touched cells
-    incr = {
-        int(r["shard"]): np.array(r["centroid"])
-        for r in spark.read.parquet(idx._sidecar_source(idx._ROUTING_FILE, "routing")).collect()
-    }
-    idx._write_routing()  # full recompute over every shard
-    full = {
-        int(r["shard"]): np.array(r["centroid"])
-        for r in spark.read.parquet(idx._sidecar_source(idx._ROUTING_FILE, "routing")).collect()
-    }
-    assert sorted(incr) == sorted(full)
-    for s in full:
-        np.testing.assert_allclose(incr[s], full[s], rtol=1e-5, atol=1e-6)
 
 
 # -- 13. review-pass regressions ----------------------------------------------
@@ -373,46 +342,6 @@ def test_transient_read_error_raises_not_empty(tmpdir, monkeypatch):
         _load_shard_graph(nodes_dir, 0, ("t", "t"), meta_d, None)
 
 
-def test_migrated_index_first_insert_keeps_full_label_sidecar(spark, tmpdir):
-    """First incremental mutation on an index without a label_routing
-    sidecar (a pre-sidecar format) must write ALL shards' labels, not just
-    the touched shard's — otherwise routing unroutes every other label."""
-    import shutil
-
-    import numpy as np
-    from pgvectorscale_spark.operators.diskann import DiskannIndex
-
-    rng = np.random.default_rng(61)
-    d = 8
-    near = rng.normal(0.0, 0.05, size=(60, d)).astype(np.float32)
-    far = rng.normal(5.0, 0.05, size=(60, d)).astype(np.float32)
-    rows = [(i, near[i].tolist(), [1]) for i in range(60)]
-    rows += [(100 + i, far[i].tolist(), [9]) for i in range(60)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, labels array<smallint>")
-    path = f"{tmpdir}/migrated_sidecar"
-    idx = DiskannIndex.build(
-        df, path, distance_type="l2", num_shards=2, id_col="vec_id",
-        vector_col="embedding", label_col="labels", shard_assignment="kmeans",
-    )
-    shutil.rmtree(os.path.join(path, "label_routing"), ignore_errors=True)  # pre-sidecar state
-    try:
-        os.remove(os.path.join(path, idx._LABEL_ROUTING_FILE))
-    except FileNotFoundError:
-        pass
-    b = spark.createDataFrame(
-        [(500, near[0].tolist(), [1])], "vec_id long, embedding array<float>, labels array<smallint>"
-    )
-    idx.insert(b, label_col="labels")  # touches only the near cell
-    labels_in_sidecar = {
-        int(r["label"]) for r in spark.read.parquet(idx._sidecar_source(idx._LABEL_ROUTING_FILE, "label_routing")).collect()
-    }
-    assert labels_in_sidecar == {1, 9}, labels_in_sidecar
-    # the far-only label still routes from a near-blob query
-    got = idx.search(near[0].tolist(), k=2, labels=[9], probe_shards=1,
-                     search_list_size=500).collect()
-    assert len(got) == 2 and all(r["node_id"] >= 100 for r in got)
-
-
 def test_cost_routing_never_bypasses_index_with_tombstones(spark, tmpdir):
     """A tiny corpus normally cost-routes to the exact table scan — but
     once the index holds tombstones the table would resurface deleted
@@ -459,51 +388,6 @@ def test_pack_sequences_exact_beyond_double_precision(spark):
     for i, c in enumerate(counts):
         assert got[i] == (cum // 1024, cum % 1024), i
         cum += c
-
-
-# -- 12. label routing sidecar -------------------------------------------------
-
-
-def test_label_routing_sidecar_widens_probes_and_tracks_inserts(spark, tmpdir):
-    """Label-aware routing widening reads the labels x shards sidecar, not
-    a per-query corpus scan. A rare label concentrated in a geometrically
-    far cell is still found with probe_shards=1, and a micro-batch insert
-    introducing a brand-new label updates the sidecar so routed queries
-    see it immediately."""
-    import numpy as np
-    from pgvectorscale_spark.operators.diskann import DiskannIndex
-
-    rng = np.random.default_rng(53)
-    d = 8
-    # two well-separated blobs -> kmeans cells; the rare label 9 lives ONLY
-    # in the far blob
-    near = rng.normal(0.0, 0.05, size=(80, d)).astype(np.float32)
-    far = rng.normal(5.0, 0.05, size=(80, d)).astype(np.float32)
-    rows = [(i, near[i].tolist(), [1]) for i in range(80)]
-    rows += [(100 + i, far[i].tolist(), [9] if i < 3 else [2]) for i in range(80)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, labels array<smallint>")
-    path = f"{tmpdir}/label_routing"
-    idx = DiskannIndex.build(
-        df, path, distance_type="l2", num_shards=2, id_col="vec_id",
-        vector_col="embedding", label_col="labels", shard_assignment="kmeans",
-    )
-    assert idx._sidecar_source(idx._LABEL_ROUTING_FILE, "label_routing") is not None
-    # query at the NEAR blob, filter by the far-only label: routing alone
-    # would probe the near cell; the sidecar widening must add the far cell
-    q = near[0].tolist()
-    got = idx.search(q, k=3, labels=[9], probe_shards=1, search_list_size=500).collect()
-    assert {r["node_id"] for r in got} == {100, 101, 102}
-    # the memo was used (populated for this epoch)
-    assert getattr(idx, "_label_routing_memo", None) is not None
-
-    # insert a brand-new label into the near cell; routed search for it
-    # from the FAR side must widen into the near cell via the updated sidecar
-    b = spark.createDataFrame(
-        [(500, near[1].tolist(), [7])], "vec_id long, embedding array<float>, labels array<smallint>"
-    )
-    idx.insert(b, label_col="labels")
-    got = idx.search(far[0].tolist(), k=1, labels=[7], probe_shards=1, search_list_size=500).collect()
-    assert [r["node_id"] for r in got] == [500]
 
 
 # -- 10. batched prune is bit-identical to the serial prune -------------------

@@ -149,98 +149,6 @@ def test_widen_handles_coalesced_many_file_frame(spark, tmpdir):
     assert out.rdd.getNumPartitions() == target
 
 
-# -- 5. delta-based Voronoi centroid updates (round-5 item #3) -----------------
-
-
-def _kmeans_idx(spark, tmpdir, name, n=150, d=16, labeled=False, seed=37):
-    rng = np.random.default_rng(seed)
-    mat = rng.random((n, d), dtype=np.float32)
-    cols = "vec_id long, embedding array<float>"
-    rows = [(i, mat[i].tolist()) for i in range(n)]
-    kw = {}
-    if labeled:
-        cols += ", labels array<smallint>"
-        rows = [(i, v, [int(i % 4)]) for i, v in rows]
-        kw["label_col"] = "labels"
-    from pgvectorscale_spark.operators.diskann import DiskannIndex
-
-    df = spark.createDataFrame(rows, cols)
-    idx = DiskannIndex.build(
-        df, f"{tmpdir}/{name}", distance_type="l2", num_shards=3, id_col="vec_id",
-        vector_col="embedding", shard_assignment="kmeans", **kw,
-    )
-    return idx, mat, rng
-
-
-def test_routing_delta_matches_full_recompute(spark, tmpdir):
-    """The O(batch) sufficient-statistics update (count, vsum) produces the
-    SAME float32 centroids as re-aggregating the shards — including through
-    an upsert, whose replaced vector must be subtracted."""
-    idx, mat, rng = _kmeans_idx(spark, tmpdir, "routing_delta")
-    batch = spark.createDataFrame(
-        [(800 + j, rng.random(16).astype(np.float32).tolist()) for j in range(5)]
-        + [(3, rng.random(16).astype(np.float32).tolist())],  # upsert
-        "vec_id long, embedding array<float>",
-    )
-    idx.insert(batch)  # O(batch) stats delta
-    incr = {
-        int(r["shard"]): (np.array(r["centroid"], dtype=np.float32), int(r["count"]))
-        for r in spark.read.parquet(idx._sidecar_source(idx._ROUTING_FILE, "routing")).collect()
-    }
-    idx._write_routing()  # full recompute over every shard
-    full = {
-        int(r["shard"]): (np.array(r["centroid"], dtype=np.float32), int(r["count"]))
-        for r in spark.read.parquet(idx._sidecar_source(idx._ROUTING_FILE, "routing")).collect()
-    }
-    assert sorted(incr) == sorted(full)
-    for s in full:
-        assert incr[s][1] == full[s][1], f"count mismatch in shard {s}"
-        # float32 absorbs last-ulp f64 summation-order differences: the
-        # stored centroids are bit-identical, not merely close
-        np.testing.assert_array_equal(incr[s][0], full[s][0])
-
-
-def test_routing_delta_chains_across_batches(spark, tmpdir):
-    """Stats stay exact across a CHAIN of incremental updates (the drift
-    failure mode of approximate centroid maintenance)."""
-    idx, mat, rng = _kmeans_idx(spark, tmpdir, "routing_chain")
-    for j in range(4):
-        idx.insert(
-            spark.createDataFrame(
-                [(900 + 10 * j + i, rng.random(16).astype(np.float32).tolist()) for i in range(3)],
-                "vec_id long, embedding array<float>",
-            )
-        )
-    incr = {
-        int(r["shard"]): np.array(r["centroid"], dtype=np.float32)
-        for r in spark.read.parquet(idx._sidecar_source(idx._ROUTING_FILE, "routing")).collect()
-    }
-    idx._write_routing()
-    full = {
-        int(r["shard"]): np.array(r["centroid"], dtype=np.float32)
-        for r in spark.read.parquet(idx._sidecar_source(idx._ROUTING_FILE, "routing")).collect()
-    }
-    for s in full:
-        np.testing.assert_array_equal(incr[s], full[s])
-
-
-def test_routing_delta_updates_label_sidecar(spark, tmpdir):
-    """A label arriving only via insert() must become routable (the
-    label-aware probe widening reads the sidecar)."""
-    idx, mat, rng = _kmeans_idx(spark, tmpdir, "routing_labels", labeled=True)
-    v = rng.random(16).astype(np.float32)
-    idx.insert(
-        spark.createDataFrame(
-            [(950, v.tolist(), [9])], "vec_id long, embedding array<float>, labels array<smallint>"
-        ),
-        label_col="labels",
-    )
-    shards_with_9 = idx._label_shards([9])
-    assert shards_with_9, "label 9 unroutable after insert"
-    got = idx.search(v.tolist(), k=1, labels=[9], probe_shards=1, search_list_size=100)
-    assert got.first()["node_id"] == 950
-
-
 # -- 6. 64-bit-class simhash with multi-probe banding (round-5 item #5) --------
 
 

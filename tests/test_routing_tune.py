@@ -12,7 +12,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from pgvectorscale_spark.functions.distance import (
+    np_distance,
+    np_distance_pairwise,
+    np_normalize,
+)
+from pgvectorscale_spark.operators import routing
 from pgvectorscale_spark.operators.diskann import DiskannIndex
+from tests.conftest import make_kmeans_index
 
 
 def _tune_sample_ids(idx, n=16):
@@ -210,3 +217,131 @@ def test_tune_routing_opt_out(spark, tmp_path):
     # and the saved meta carries it for fresh loads
     cold = DiskannIndex.load(spark, idx.path)
     assert cold.meta.routing_recall_curve == idx.meta.routing_recall_curve
+
+
+# -- routing-table upkeep: incremental updates equal a full recompute --------
+
+
+def test_incremental_routing_matches_full_recompute(spark, tmp_path):
+    """The touched-shards routing merge equals a full centroid recompute."""
+    idx, _, _ = make_kmeans_index(spark, tmp_path, "increm_routing")
+    rng = np.random.default_rng(2)
+    batch = spark.createDataFrame(
+        [(800 + j, rng.random(16).astype(np.float32).tolist()) for j in range(5)],
+        "vec_id long, embedding array<float>",
+    )
+    idx.insert(batch)  # incremental: re-aggregates only touched cells
+    incr = {r[0]: np.array(r[1]) for r in idx._routing_rows()}
+    idx._write_routing()  # full recompute over every shard
+    full = {r[0]: np.array(r[1]) for r in idx._routing_rows()}
+    assert sorted(incr) == sorted(full)
+    for s in full:
+        np.testing.assert_allclose(incr[s], full[s], rtol=1e-5, atol=1e-6)
+
+
+def test_routing_delta_matches_full_recompute(spark, tmp_path):
+    """The O(batch) sufficient-statistics update (count, vsum) produces the
+    SAME float32 centroids as re-aggregating the shards — including through
+    an upsert, whose replaced vector must be subtracted."""
+    idx, mat, rng = make_kmeans_index(spark, tmp_path, "routing_delta")
+    batch = spark.createDataFrame(
+        [(800 + j, rng.random(16).astype(np.float32).tolist()) for j in range(5)]
+        + [(3, rng.random(16).astype(np.float32).tolist())],  # upsert
+        "vec_id long, embedding array<float>",
+    )
+    idx.insert(batch)  # O(batch) stats delta
+    incr = {r[0]: (np.array(r[1], dtype=np.float32), r[2]) for r in idx._routing_rows()}
+    idx._write_routing()  # full recompute over every shard
+    full = {r[0]: (np.array(r[1], dtype=np.float32), r[2]) for r in idx._routing_rows()}
+    assert sorted(incr) == sorted(full)
+    for s in full:
+        assert incr[s][1] == full[s][1], f"count mismatch in shard {s}"
+        # float32 absorbs last-ulp f64 summation-order differences: the
+        # stored centroids are bit-identical, not merely close
+        np.testing.assert_array_equal(incr[s][0], full[s][0])
+
+
+def test_routing_delta_chains_across_batches(spark, tmp_path):
+    """Stats stay exact across a CHAIN of incremental updates (the drift
+    failure mode of approximate centroid maintenance)."""
+    idx, mat, rng = make_kmeans_index(spark, tmp_path, "routing_chain")
+    for j in range(4):
+        idx.insert(
+            spark.createDataFrame(
+                [(900 + 10 * j + i, rng.random(16).astype(np.float32).tolist()) for i in range(3)],
+                "vec_id long, embedding array<float>",
+            )
+        )
+    incr = {r[0]: np.array(r[1], dtype=np.float32) for r in idx._routing_rows()}
+    idx._write_routing()
+    full = {r[0]: np.array(r[1], dtype=np.float32) for r in idx._routing_rows()}
+    for s in full:
+        np.testing.assert_array_equal(incr[s], full[s])
+
+
+# -- the shared top-p kernel ----------------------------------------------------
+
+
+def _argsort_route(cents, qmat, distance_type, p):
+    """The route DiskANN served with before the shared kernel (the
+    oracle): normalize both sides for cosine, one GEMM, then argsort
+    over routing-table rows."""
+    if distance_type == "cosine":
+        qmat, cents = np_normalize(qmat), np_normalize(cents)
+    cd = np_distance_pairwise(cents, qmat, distance_type, assume_normalized=True)
+    return np.argsort(cd, axis=1)[:, :p]
+
+
+def test_empty_query_batch_routes_nowhere(spark, overlapped):
+    idx, _ = overlapped
+    qdf = spark.createDataFrame([], "query_id long, query_vec array<float>")
+    assert idx.search_batch(qdf, k=5, probe_shards=2).count() == 0
+    for dist in ("l2", "cosine", "inner_product"):
+        assert routing.nearest_partitions(*idx._routing_table(), [], dist, 2).shape == (0, 2)
+
+
+@pytest.mark.parametrize("shards", [4, 16])
+def test_kernel_matches_argsort_route_on_cosine_fixture(shards):
+    rng = np.random.default_rng(shards)
+    mat = rng.normal(size=(4096, 64)).astype(np.float32)
+    home = rng.integers(0, shards, len(mat))
+    cents = np.stack([mat[home == s].mean(axis=0) for s in range(shards)]).astype(np.float32)
+    cents = cents.astype(np.float64)
+    sids = (rng.permutation(shards) * 3 + 1).astype(np.int64)  # ids are not row positions
+    qmat = mat.astype(np.float64)
+    for p in range(1, shards + 1):
+        want = [set(sids[r].tolist()) for r in _argsort_route(cents, qmat, "cosine", p)]
+        got = routing.nearest_partitions(sids, cents, qmat, "cosine", p)
+        assert [set(r.tolist()) for r in got] == want, p
+
+
+def test_kernel_l2_distances_and_order_match_per_query_kernel():
+    """For l2 the batch GEMM keeps the elementwise formula: every distance
+    equals the per-query ``np_distance`` bit for bit, and the order is
+    ``lexsort((ids, d))`` — the ranking the DuckDB IVF oracle replays."""
+    rng = np.random.default_rng(7)
+    for _ in range(50):
+        n, d, q = (int(x) for x in rng.integers(1, [40, 80, 30]))
+        cents = rng.normal(size=(n, d)).astype(np.float32).astype(np.float64)
+        qs = rng.normal(size=(q, d)).astype(np.float32)
+        ids = rng.permutation(2 * n)[:n].astype(np.int64)
+        pair = np_distance_pairwise(cents, qs, "l2")
+        got = routing.nearest_partitions(ids, cents, qs, "l2", n)
+        for i in range(q):
+            one = np_distance(cents, qs[i], "l2")
+            assert np.array_equal(pair[i], one)
+            assert got[i].tolist() == ids[np.lexsort((ids, one))].tolist()
+
+
+@pytest.mark.parametrize("dist", ["l2", "cosine", "inner_product"])
+def test_kernel_breaks_exact_ties_by_partition_id(dist):
+    """Duplicated centroids tie exactly (one-hot rows keep every product
+    exact); the tie goes to the smaller partition id, whatever the
+    table's row order."""
+    e = np.eye(4)
+    cents = e[[0, 1, 0, 2, 0, 1]]
+    ids = np.array([40, 7, 12, 3, 25, 2], dtype=np.int64)
+    q = np.array([[3.0, 1.0, 0.0, 0.0]])
+    assert routing.nearest_partitions(ids, cents, q, dist, 6)[0].tolist() == [12, 25, 40, 2, 7, 3]
+    assert routing.probe_lists((ids, cents), q, dist, 2, extra=[3])[0] == [3, 12, 25]
+
